@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
 
+import graft.plumba.AccCodec
+
 /** Distributed LEFT AS-OF JOIN — for every left row, the payload of the
   * LATEST right row with the same keys and time <= left time (or
   * strictly <, with `strict = true`). The classic time-series join Spark
@@ -173,10 +175,6 @@ object AsofJoin {
     val p = prep(left, right, keyCols, timeCol, payloadCols, rightTieBreak, strict, outPrefix)
     val nKeys = keyCols.length
 
-    // round 21: kryo payload codec (see graft.plumba.AccCodec)
-    def ser(a: Array[Any]): Array[Byte] = graft.plumba.AccCodec.ser(a)
-    def deser(b: Array[Byte]): Array[Any] = graft.plumba.AccCodec.deser[Array[Any]](b)
-
     // consumed twice (stage-1 partials + stage-3 data rows): materialize
     // once; checkpoint blocks are reference-tracked and dropped by the
     // ContextCleaner (same contract as the salted group scan).
@@ -218,7 +216,7 @@ object AsofJoin {
                 last = pay
               }
             }
-            Row.fromSeq(gk :+ (if (last == null) null else ser(last)))
+            Row.fromSeq(gk :+ (if (last == null) null else AccCodec.ser(last)))
           }
         }
       }(Encoders.row(partialSchema))
@@ -271,7 +269,7 @@ object AsofJoin {
           if (r.getInt(sfIdx) == 0) { // seed sentinel opens its (key, bucket)
             curGroup = gk
             val b = r.getAs[Array[Byte]](sIdx)
-            last = if (b == null) null else deser(b)
+            last = if (b == null) null else AccCodec.deser[Array[Any]](b)
             Iterator.empty
           } else {
             if (curGroup == null || gk != curGroup) { curGroup = gk; last = null }

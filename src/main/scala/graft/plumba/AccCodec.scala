@@ -30,11 +30,16 @@ private[graft] object AccCodec {
       // ceiling is spark.kryoserializer.buffer.max = 64m — far above
       // any per-(group,bucket) accumulator, but a session that raises
       // it now gets the raise here as well.
-      val conf = Option(org.apache.spark.SparkEnv.get)
-        .map(_.conf).getOrElse(new SparkConf())
-      new KryoSerializer(conf).newInstance()
+      serializer(Option(org.apache.spark.SparkEnv.get).map(_.conf).getOrElse(new SparkConf()))
     }
   }
+
+  /** The codec's Kryo instance for `conf`, on a clone with
+    * `spark.kryo.registrationRequired=false`: accumulators are arbitrary
+    * user types that no registrator lists, so a session requiring
+    * registration must not break the salted partials. */
+  private[plumba] def serializer(conf: SparkConf): SerializerInstance =
+    new KryoSerializer(conf.clone().set("spark.kryo.registrationRequired", "false")).newInstance()
 
   def ser(a: Any): Array[Byte] = {
     val bb = local.get().serialize[Any](a)(scala.reflect.ClassTag.Any)

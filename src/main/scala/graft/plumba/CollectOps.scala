@@ -1,6 +1,6 @@
 package graft.plumba
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -37,20 +37,14 @@ object CollectOps {
       .select(valueCols.map(col): _*)
   }
 
-  private[plumba] def rowValues(r: Row): IndexedSeq[Any] = {
-    val n = r.length
-    val a = new Array[Any](n)
-    var i = 0
-    while (i < n) { a(i) = r.get(i); i += 1 }
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
-  }
-
   /** Ordered whole-frame fold → scalar. Kernels whose merge law is
     * declared COMMUTATIVE skip the global sort (and its range-exchange)
     * entirely — permutation invariance makes row and partition order
     * irrelevant, so the scan's natural partitioning feeds the partial
     * folds directly: one pass, zero shuffles. */
   def collectFold[A](df: DataFrame, valueCols: Seq[String], orderCols: Seq[String], k: Kernel.Fold[A]): A = {
+    // every fold input below is projected to exactly `valueCols`
+    val valIdx = valueCols.indices.toArray
     k.merge match {
       case Some(m) if m.commutative =>
         // Unsorted path: project + fold null policy only. Every partition
@@ -61,7 +55,7 @@ object CollectOps {
           .select(valueCols.map(col): _*)
         proj.rdd
           // tuple wrapper only for the ClassTag (A itself has none)
-          .mapPartitions(it => Iterator((0, Kernel.foldRowsFrom(k, m.neutral, it.map(rowValues)))))
+          .mapPartitions(it => Iterator((0, Runs.fold(k, m.neutral, it, valIdx))))
           .collect()
           .foldLeft(k.init)((acc, p) => m.combine(acc, p._2))
       case Some(m) =>
@@ -70,87 +64,17 @@ object CollectOps {
         // partition index order IS row order. Combine partials in that order.
         val partials = proj.rdd
           .mapPartitionsWithIndex { (idx, it) =>
-            val from = if (idx == 0) k.init else m.neutral
-            Iterator((idx, Kernel.foldRowsFrom(k, from, it.map(rowValues))))
+            Iterator((idx, Runs.fold(k, if (idx == 0) k.init else m.neutral, it, valIdx)))
           }
           .collect()
           .sortBy(_._1)
         if (partials.isEmpty) k.init
         else partials.iterator.map(_._2).reduceLeft(m.combine)
       case None =>
-        // Parity path: partitions stream to the driver in sorted order,
-        // folded sequentially like the reference, via the plain
-        // `toLocalIterator` walk (measured faster than the round-14
-        // read-ahead variant — see foldPrefetched, which keeps the
-        // overlap path behind a flag for fetch-bound deployments).
-        val proj = prepared(df, valueCols, orderCols)
-        foldPrefetched(proj, k)
-    }
-  }
-
-  /** Sequential parity fold with a ONE-PARTITION READ-AHEAD: while the
-    * driver folds partition i, partition i+1 is already being
-    * computed/fetched by a background job. Memory bound: ≤ 2 partitions
-    * resident.
-    *
-    * Lifecycle discipline (round-14 advice): the prefetch runs on a
-    * DEDICATED single thread whose creation happens on the CALLING
-    * thread at first submit — so it inherits the caller's SparkContext
-    * local properties (job group, scheduler pool) via their
-    * inheritable thread-local, and a user's `cancelJobGroup` reaches
-    * the in-flight prefetch job too (the shared `ExecutionContext
-    * .global` workers are pre-created elsewhere and inherit nothing).
-    * If the fold throws or stops early, the `finally` awaits the
-    * in-flight future (bounded by one partition fetch — or by the
-    * group cancellation it now responds to) and shuts the thread down,
-    * so no orphan job outlives the call. */
-  private def foldPrefetched[A](df: DataFrame, k: Kernel.Fold[A]): A = {
-    // MEASURED VERDICT (round 15, sf0.1, min-of-3 warm, near-clean
-    // window): the one-partition read-ahead below runs fold_multi_in_out
-    // in 2.83 s where the plain serialized `toLocalIterator` walk takes
-    // 1.44 s — the `df.rdd` conversion + per-partition `runJob` Array
-    // collection costs more than the fetch/fold overlap buys on this
-    // workload (toLocalIterator already pipelines partition fetch
-    // internally). The plain walk is therefore the DEFAULT; the
-    // read-ahead stays behind -Dgraft.fold.prefetch=on for I/O-bound
-    // deployments where a partition fetch genuinely dominates the fold
-    // (remote object storage), where the overlap argument applies.
-    if (!sys.props.get("graft.fold.prefetch").contains("on")) {
-      import scala.collection.JavaConverters._
-      return Kernel.foldRows(k, df.toLocalIterator().asScala.map(rowValues))
-    }
-    val rdd = df.rdd
-    val sc = rdd.sparkContext
-    val n = rdd.getNumPartitions
-    if (n == 0) return Kernel.foldRows(k, Iterator.empty)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val exec = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
-      val t = new Thread(r, "graft-fold-prefetch")
-      t.setDaemon(true)
-      t
-    }
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(exec)
-    @volatile var inflight: Future[Array[Row]] = null
-    try {
-      def fetch(i: Int): Future[Array[Row]] =
-        Future { sc.runJob(rdd, (it: Iterator[Row]) => it.toArray, Seq(i)).head }
-      inflight = fetch(0)
-      val parts = new Iterator[Array[Row]] {
-        private var i = 0
-        def hasNext: Boolean = i < n
-        def next(): Array[Row] = {
-          val cur = Await.result(inflight, Duration.Inf)
-          i += 1
-          inflight = if (i < n) fetch(i) else null
-          cur
-        }
-      }
-      Kernel.foldRows(k, parts.flatMap(a => a.iterator).map(rowValues))
-    } finally {
-      val last = inflight
-      if (last != null) scala.util.Try(Await.ready(last, Duration.Inf))
-      exec.shutdown()
+        // Parity path: partitions stream to the driver in sorted order
+        // through `toLocalIterator` and fold sequentially, like the reference.
+        import scala.jdk.CollectionConverters._
+        Runs.fold(k, k.init, prepared(df, valueCols, orderCols).toLocalIterator().asScala, valIdx)
     }
   }
 
@@ -171,40 +95,24 @@ object CollectOps {
       orderCols: Seq[String],
       k: Kernel.Scan[A],
       resultType: DataType,
-      resultName: String = "scan"): DataFrame = k.merge match {
-    case Some(m) => collectScanMergeable(df, valueCols, orderCols, k, m, resultType, resultName)
-    case None => collectScanSequential(df, valueCols, orderCols, k, resultType, resultName)
-  }
-
-  private def collectScanSequential[A](
-      df: DataFrame,
-      valueCols: Seq[String],
-      orderCols: Seq[String],
-      k: Kernel.Scan[A],
-      resultType: DataType,
-      resultName: String): DataFrame = {
+      resultName: String = "scan"): DataFrame = {
     require(valueCols.nonEmpty, "at least one scanned column is required")
     val selCols = (orderCols ++ valueCols).distinct
     val sel = df.select(selCols.map(col): _*)
-    val ordIdx = orderCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
+    val ordIdx = orderCols.map(selCols.indexOf).toArray
+    val valIdx = valueCols.map(selCols.indexOf).toArray
     val outSchema = StructType(
       orderCols.map(c => sel.schema(selCols.indexOf(c))) :+
         StructField(resultName, resultType, nullable = true))
-    val enc = Encoders.row(outSchema)
-    sel
-      .repartition(1)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .mapPartitions { it =>
-        var acc = k.init
-        it.map { r =>
-          val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-          val out =
-            if (Kernel.anyNull(vs)) null
-            else { acc = k.step(acc, k.withArgs(vs)); k.emit(acc) }
-          Row.fromSeq(ordIdx.map(r.get) :+ out)
-        }
-      }(enc)
+    val out = (r: Row, v: Any) => Row.fromSeq(Runs.values(r, ordIdx) :+ v)
+    k.merge match {
+      case Some(m) => collectScanMergeable(sel, orderCols, valIdx, k, m, outSchema, out)
+      case None =>
+        sel
+          .repartition(1)
+          .sortWithinPartitions(orderCols.map(col): _*)
+          .mapPartitions(it => Runs.scan(k, k.init, it, valIdx)(out))(Encoders.row(outSchema))
+    }
   }
 
   /** Parallel whole-frame scan for kernels whose step state obeys a
@@ -223,57 +131,35 @@ object CollectOps {
     * The sorted input is materialized ONCE via `localCheckpoint(eager)`
     * so both passes see the identical range partitioning (pass 2's
     * prefix seeds are only valid for pass 1's exact partition layout).
+    * Both passes key the seeds on the index `mapPartitionsWithIndex`
+    * hands them — the scanned partition's own index, not the id of
+    * whichever task consumes it (a downstream `coalesce` runs several
+    * scanned partitions in one task).
     * Unlike `persist()` — which pins a CacheManager entry until an
     * explicit unpersist and therefore leaked one cached plan per call
     * in long-lived sessions — checkpoint blocks are reference-tracked
     * and dropped by the ContextCleaner when the returned DataFrame is
     * garbage-collected. At cluster scale, reliable checkpointing has
     * the same contract. */
-  def collectScanMergeable[A](
-      df: DataFrame,
-      valueCols: Seq[String],
+  private def collectScanMergeable[A](
+      sel: DataFrame,
       orderCols: Seq[String],
+      valIdx: Array[Int],
       k: Kernel.Scan[A],
       m: Kernel.Merge[A],
-      resultType: DataType,
-      resultName: String = "scan"): DataFrame = {
-    require(valueCols.nonEmpty, "at least one scanned column is required")
-    val selCols = (orderCols ++ valueCols).distinct
-    val sel = df.select(selCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-      .localCheckpoint(true)
-    val ordIdx = orderCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
+      outSchema: StructType,
+      out: (Row, Any) => Row): DataFrame = {
+    val rows = sel.orderBy(orderCols.map(col): _*).localCheckpoint(true).rdd
     // pass 1: per-partition segment folds (null rows don't advance state)
-    val partials = sel.rdd
-      .mapPartitionsWithIndex { (idx, it) =>
-        var acc = m.neutral
-        it.foreach { r =>
-          val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-          if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
-        }
-        Iterator((idx, acc))
-      }
+    val partials = rows
+      .mapPartitionsWithIndex((idx, it) => Iterator((idx, Runs.fold(k, m.neutral, it, valIdx))))
       .collect().sortBy(_._1).iterator.map(_._2).toList
     // prefix for partition i = init merged with partials 0..i-1
     val prefixes = partials.scanLeft(k.init)((l, r) => m.combine(l, r)).toIndexedSeq
     val prefixesB = sel.sparkSession.sparkContext.broadcast(prefixes)
-    val outSchema = StructType(
-      orderCols.map(c => sel.schema(selCols.indexOf(c))) :+
-        StructField(resultName, resultType, nullable = true))
-    val enc = Encoders.row(outSchema)
-    // pass 2: seeded re-scan, same persisted partitioning
-    sel.mapPartitions { it =>
-      val idx = org.apache.spark.TaskContext.getPartitionId()
-      var acc = prefixesB.value(idx)
-      it.map { r =>
-        val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-        val out =
-          if (Kernel.anyNull(vs)) null
-          else { acc = k.step(acc, k.withArgs(vs)); k.emit(acc) }
-        Row.fromSeq(ordIdx.map(r.get) :+ out)
-      }
-    }(enc)
+    // pass 2: seeded re-scan, same checkpointed partitioning
+    sel.sparkSession.createDataFrame(
+      rows.mapPartitionsWithIndex((idx, it) => Runs.scan(k, prefixesB.value(idx), it, valIdx)(out)),
+      outSchema)
   }
-
 }

@@ -86,32 +86,47 @@ object GroupOps {
     require(valueCols.nonEmpty, "at least one folded column is required")
     val selCols = (keyCols ++ orderCols ++ valueCols).distinct
     val sel = df.select(selCols.map(col): _*)
-    val keyIdx = keyCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
+    val keyIdx = keyCols.map(selCols.indexOf).toArray
+    val valIdx = valueCols.map(selCols.indexOf).toArray
     val outSchema = StructType(
       keyCols.map(c => sel.schema(selCols.indexOf(c))) :+
         StructField(resultName, resultType, nullable = true))
-    val enc = Encoders.row(outSchema)
     val sortCols = if (k.merge.exists(_.commutative)) keyCols else keyCols ++ orderCols
     sel
       .repartition(keyCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
       .mapPartitions { it =>
-        new Iterator[Row] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Row = {
-            val key = keyIdx.map(buf.head.get)
-            var acc = k.init
-            while (buf.hasNext && keyIdx.map(buf.head.get) == key) {
-              val r = buf.next()
-              val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-              if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
-            }
-            Row.fromSeq(key :+ emit(acc))
-          }
+        Runs.runs(it, keyIdx).map { case (key, run) =>
+          Row.fromSeq(key :+ emit(Runs.fold(k, k.init, run, valIdx)))
         }
-      }(enc)
+      }(Encoders.row(outSchema))
+  }
+
+  /** Stage 1 of both range-salted paths: one partial per (group, range
+    * bucket), folded from `neutral` under the fold null policy, as
+    * (keyCols..., __bucket, __acc) with the accumulator in [[AccCodec]]
+    * bytes. `withB` is the `selCols` projection with `__bucket` appended. */
+  private def bucketPartials[A](
+      withB: DataFrame,
+      selCols: Seq[String],
+      keyCols: Seq[String],
+      valueCols: Seq[String],
+      orderCols: Seq[String],
+      k: Kernel.Stepper[A],
+      m: Kernel.Merge[A]): DataFrame = {
+    val runKey = (keyCols.map(selCols.indexOf) :+ selCols.length).toArray
+    val valIdx = valueCols.map(selCols.indexOf).toArray
+    val partialSchema = StructType(
+      keyCols.map(c => withB.schema(c)) ++
+        Seq(StructField("__bucket", IntegerType), StructField("__acc", BinaryType)))
+    withB
+      .repartition((keyCols :+ "__bucket").map(col): _*)
+      .sortWithinPartitions((keyCols ++ Seq("__bucket") ++ orderCols).map(col): _*)
+      .mapPartitions { it =>
+        Runs.runs(it, runKey).map { case (gk, run) =>
+          Row.fromSeq(gk :+ AccCodec.ser(Runs.fold(k, m.neutral, run, valIdx)))
+        }
+      }(Encoders.row(partialSchema))
   }
 
   /** Skew-resistant per-group fold for kernels with a lawful
@@ -129,7 +144,7 @@ object GroupOps {
     * values (tie classes) land in one bucket together. Boundary
     * *accuracy* only affects balance, never correctness. The leading
     * ordering column must be numeric (quantile-sampleable). Partial
-    * accumulators travel as java-serialized bytes (small: one per
+    * accumulators travel as [[AccCodec]] bytes (small: one per
     * (group, range)). */
   def groupFoldMergeable[A](
       df: DataFrame,
@@ -145,64 +160,25 @@ object GroupOps {
       "groupFoldMergeable requires a kernel with a declared Merge law; use groupFold for sequential kernels"))
     require(keyCols.nonEmpty && valueCols.nonEmpty && orderCols.nonEmpty)
     val selCols = (keyCols ++ orderCols ++ valueCols).distinct
-    val keyIdx = keyCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
-    val bIdx = selCols.length // __bucket is appended after selCols
-    val partialSchema = StructType(
-      keyCols.map(c => df.schema(c)) ++
-        Seq(StructField("__bucket", IntegerType), StructField("__acc", BinaryType)))
-
-    // round 21: kryo accumulator codec (see AccCodec — java
-    // ObjectOutputStream per partial dominated the salted stages)
-    def ser(a: A): Array[Byte] = AccCodec.ser(a)
-    def deser(b: Array[Byte]): A = AccCodec.deser[A](b)
+    val nKeys = keyCols.length
 
     // Round-21: checkpoint the narrow projection, then derive bucket
     // boundaries from the cached rows — rangeBucketCol's approxQuantile
     // sample pass otherwise scans the source once more than needed
     // (boundaries affect only balance, never results)
     val selDf = df.select(selCols.map(col): _*).localCheckpoint(true)
-    val bucketCol = rangeBucketCol(selDf, orderCols.head, buckets)
-    val partials = selDf
-      .withColumn("__bucket", bucketCol)
-      .repartition((keyCols :+ "__bucket").map(col): _*)
-      .sortWithinPartitions((keyCols ++ Seq("__bucket") ++ orderCols).map(col): _*)
-      .mapPartitions { it =>
-        new Iterator[Row] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Row = {
-            val groupKey = keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)
-            var acc = m.neutral
-            while (buf.hasNext && (keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)) == groupKey) {
-              val r = buf.next()
-              val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-              if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
-            }
-            Row.fromSeq(groupKey :+ ser(acc))
-          }
-        }
-      }(Encoders.row(partialSchema))
+    val withB = selDf.withColumn("__bucket", rangeBucketCol(selDf, orderCols.head, buckets))
 
     val outSchema = StructType(
       keyCols.map(c => df.schema(c)) :+ StructField(resultName, resultType, nullable = true))
-    partials
+    bucketPartials(withB, selCols, keyCols, valueCols, orderCols, k, m)
       .repartition(keyCols.map(col): _*)
       .sortWithinPartitions((keyCols :+ "__bucket").map(col): _*)
       .mapPartitions { it =>
-        new Iterator[Row] {
-          private val buf = it.buffered
-          private val nKeys = keyCols.length
-          def hasNext: Boolean = buf.hasNext
-          def next(): Row = {
-            val key = (0 until nKeys).map(buf.head.get)
-            var acc = m.neutral
-            while (buf.hasNext && (0 until nKeys).map(buf.head.get) == key) {
-              val r = buf.next()
-              acc = m.combine(acc, deser(r.getAs[Array[Byte]](nKeys + 1)))
-            }
-            Row.fromSeq(key :+ emit(m.combine(k.init, acc)))
-          }
+        Runs.runs(it, Array.range(0, nKeys)).map { case (key, run) =>
+          var acc = m.neutral
+          run.foreach(r => acc = m.combine(acc, AccCodec.deser[A](r.getAs[Array[Byte]](nKeys + 1))))
+          Row.fromSeq(key :+ emit(m.combine(k.init, acc)))
         }
       }(Encoders.row(outSchema))
   }
@@ -242,15 +218,7 @@ object GroupOps {
     require(keyCols.nonEmpty && valueCols.nonEmpty && orderCols.nonEmpty)
     import org.apache.spark.sql.functions.lit
     val selCols = (keyCols ++ orderCols ++ valueCols).distinct
-    val keyIdx = keyCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
-    val bIdx = selCols.length // __bucket appended after selCols
     val nKeys = keyCols.length
-
-    // round 21: kryo accumulator codec (see AccCodec — java
-    // ObjectOutputStream per partial dominated the salted stages)
-    def ser(a: A): Array[Byte] = AccCodec.ser(a)
-    def deser(b: Array[Byte]): A = AccCodec.deser[A](b)
 
     // consumed twice (stage-1 partials + stage-3 data rows): materialize
     // once via localCheckpoint — unlike persist(), whose CacheManager
@@ -264,51 +232,25 @@ object GroupOps {
     // when-chain re-evaluates per consumer (cheap) instead of being
     // stored; boundaries affect only balance, never results.
     val selDf = df.select(selCols.map(col): _*).localCheckpoint(true)
-    val bucketColC = rangeBucketCol(selDf, orderCols.head, buckets)
-    val withB = selDf.withColumn("__bucket", bucketColC)
+    val withB = selDf.withColumn("__bucket", rangeBucketCol(selDf, orderCols.head, buckets))
 
     // stage 1: segment partials per (group, bucket)
-    val partialSchema = StructType(
-      keyCols.map(c => df.schema(c)) ++
-        Seq(StructField("__bucket", IntegerType), StructField("__acc", BinaryType)))
-    val partials = withB
-      .repartition((keyCols :+ "__bucket").map(col): _*)
-      .sortWithinPartitions((keyCols ++ Seq("__bucket") ++ orderCols).map(col): _*)
-      .mapPartitions { it =>
-        new Iterator[Row] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Row = {
-            val gk = keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)
-            var acc = m.neutral
-            while (buf.hasNext && (keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)) == gk) {
-              val r = buf.next()
-              val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-              if (!Kernel.anyNull(vs)) acc = k.step(acc, k.withArgs(vs))
-            }
-            Row.fromSeq(gk :+ ser(acc))
-          }
-        }
-      }(Encoders.row(partialSchema))
+    val partials = bucketPartials(withB, selCols, keyCols, valueCols, orderCols, k, m)
 
     // stage 2: per group, prefix over bucket partials -> seed per bucket
     val seeds = partials
       .repartition(keyCols.map(col): _*)
       .sortWithinPartitions((keyCols :+ "__bucket").map(col): _*)
       .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-        val buf = it.buffered
-        while (buf.hasNext) {
-          val key = (0 until nKeys).map(buf.head.get)
+        Runs.runs(it, Array.range(0, nKeys)).flatMap { case (key, run) =>
           var acc = k.init
-          while (buf.hasNext && (0 until nKeys).map(buf.head.get) == key) {
-            val r = buf.next()
-            out += Row.fromSeq(key :+ r.get(nKeys) :+ ser(acc)) // seed BEFORE this bucket
-            acc = m.combine(acc, deser(r.getAs[Array[Byte]](nKeys + 1)))
+          run.map { r =>
+            val seed = Row.fromSeq(key :+ r.get(nKeys) :+ AccCodec.ser(acc)) // seed BEFORE this bucket
+            acc = m.combine(acc, AccCodec.deser[A](r.getAs[Array[Byte]](nKeys + 1)))
+            seed
           }
         }
-        out.iterator
-      }(Encoders.row(partialSchema))
+      }(Encoders.row(partials.schema))
 
     // stage 3: union sentinel seed rows ahead of data rows, one shuffle,
     // one streaming re-scan pass
@@ -321,7 +263,9 @@ object GroupOps {
           selCols.filterNot(keyCols.contains).map(c => lit(null).cast(df.schema(c).dataType).as(c)) :+
           col("__acc").as("__seed") :+ lit(0).as("__flag"): _*)
       .select((selCols.map(col) :+ col("__bucket") :+ col("__seed") :+ col("__flag")): _*)
-    val outOrdIdx = orderCols.filterNot(keyCols.contains).map(selCols.indexOf)
+    val runKey = (keyCols.map(selCols.indexOf) :+ selCols.length).toArray // keys, __bucket
+    val valIdx = valueCols.map(selCols.indexOf).toArray
+    val outOrdIdx = orderCols.filterNot(keyCols.contains).map(selCols.indexOf).toArray
     val outSchema = StructType(
       keyCols.map(c => df.schema(c)) ++
         orderCols.filterNot(keyCols.contains).map(c => df.schema(c)) :+
@@ -334,22 +278,14 @@ object GroupOps {
       .sortWithinPartitions(
         (keyCols.map(col) :+ col("__bucket") :+ col("__flag")) ++ orderCols.map(col): _*)
       .mapPartitions { it =>
-        var curGroup: Seq[Any] = null
-        var acc = k.init
-        it.flatMap { r =>
-          val gk = keyIdx.map(r.get) :+ r.get(bIdx)
-          if (r.getInt(fIdx) == 0) { // seed sentinel opens its (group, bucket)
-            curGroup = gk
-            acc = deser(r.getAs[Array[Byte]](sIdx))
-            Iterator.empty
-          } else {
-            if (curGroup == null || gk != curGroup) { curGroup = gk; acc = k.init }
-            val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-            val out =
-              if (Kernel.anyNull(vs)) null
-              else { acc = k.step(acc, k.withArgs(vs)); k.emit(acc) }
-            Iterator.single(Row.fromSeq(keyIdx.map(r.get) ++ outOrdIdx.map(r.get) :+ out))
-          }
+        Runs.runs(it, runKey).flatMap { case (gk, run) =>
+          // the seed sentinel sorts first and opens its (group, bucket)
+          val rows = run.buffered
+          val from =
+            if (rows.head.getInt(fIdx) == 0) AccCodec.deser[A](rows.next().getAs[Array[Byte]](sIdx))
+            else k.init
+          val key = gk.take(nKeys)
+          Runs.scan(k, from, rows, valIdx)((r, v) => Row.fromSeq(key ++ Runs.values(r, outOrdIdx) :+ v))
         }
       }(Encoders.row(outSchema))
   }
@@ -369,29 +305,20 @@ object GroupOps {
     require(valueCols.nonEmpty, "at least one scanned column is required")
     val selCols = (keyCols ++ orderCols ++ valueCols).distinct
     val sel = df.select(selCols.map(col): _*)
-    val keyIdx = keyCols.map(selCols.indexOf)
-    val valIdx = valueCols.map(selCols.indexOf)
-    val outOrdIdx = orderCols.filterNot(keyCols.contains).map(selCols.indexOf)
+    val keyIdx = keyCols.map(selCols.indexOf).toArray
+    val valIdx = valueCols.map(selCols.indexOf).toArray
+    val outOrdIdx = orderCols.filterNot(keyCols.contains).map(selCols.indexOf).toArray
     val outSchema = StructType(
       keyCols.map(c => sel.schema(selCols.indexOf(c))) ++
         orderCols.filterNot(keyCols.contains).map(c => sel.schema(selCols.indexOf(c))) :+
         StructField(resultName, resultType, nullable = true))
-    val enc = Encoders.row(outSchema)
     sel
       .repartition(keyCols.map(col): _*)
       .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
       .mapPartitions { it =>
-        var curKey: Seq[Any] = null
-        var acc = k.init
-        it.map { r =>
-          val key = keyIdx.map(r.get)
-          if (curKey == null || key != curKey) { curKey = key; acc = k.init }
-          val vs = IndexedSeq.tabulate(valIdx.length)(i => r.get(valIdx(i)))
-          val out =
-            if (Kernel.anyNull(vs)) null
-            else { acc = k.step(acc, k.withArgs(vs)); k.emit(acc) }
-          Row.fromSeq(key ++ outOrdIdx.map(r.get) :+ out)
+        Runs.runs(it, keyIdx).flatMap { case (key, run) =>
+          Runs.scan(k, k.init, run, valIdx)((r, v) => Row.fromSeq(key ++ Runs.values(r, outOrdIdx) :+ v))
         }
-      }(enc)
+      }(Encoders.row(outSchema))
   }
 }

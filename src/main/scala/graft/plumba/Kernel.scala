@@ -50,6 +50,19 @@ object Kernel {
   final case class Merge[A](neutral: A, combine: (A, A) => A, commutative: Boolean = false)
       extends Serializable
 
+  /** What every ordered kernel carries: the accumulator's start state,
+    * the per-row step, the extras spliced ahead of the row values and an
+    * optional merge law. [[Fold]] and [[Scan]] differ only in what they
+    * emit, so the operators run one row loop over both. */
+  sealed trait Stepper[A] extends Serializable {
+    def init: A
+    def step: (A, IndexedSeq[Any]) => A
+    def extras: IndexedSeq[Any]
+    def merge: Option[Merge[A]]
+    final def withArgs(values: IndexedSeq[Any]): IndexedSeq[Any] =
+      if (extras.isEmpty) values else extras ++ values
+  }
+
   /** Fold kernel: threads accumulator A over rows in order → scalar.
     * `step(acc, args)` receives `args = extras ++ rowValues`. */
   final case class Fold[A](
@@ -57,10 +70,7 @@ object Kernel {
       step: (A, IndexedSeq[Any]) => A,
       extras: IndexedSeq[Any] = Vector.empty,
       merge: Option[Merge[A]] = None)
-      extends Serializable {
-    def withArgs(values: IndexedSeq[Any]): IndexedSeq[Any] =
-      if (extras.isEmpty) values else extras ++ values
-  }
+      extends Stepper[A]
 
   /** Scan kernel: threads accumulator A over rows in order, emitting the
     * accumulator (via `emit`, e.g. tuple → array) for every row.
@@ -75,10 +85,7 @@ object Kernel {
       extras: IndexedSeq[Any] = Vector.empty,
       emit: A => Any = (a: A) => a: Any,
       merge: Option[Merge[A]] = None)
-      extends Serializable {
-    def withArgs(values: IndexedSeq[Any]): IndexedSeq[Any] =
-      if (extras.isEmpty) values else extras ++ values
-  }
+      extends Stepper[A]
 
   /** Typed-arity constructors (sugar over the generic untyped step; the
     * reference's nine arity-specialized kernels collapse to this —

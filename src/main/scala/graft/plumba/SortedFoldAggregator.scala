@@ -34,7 +34,7 @@ class SortedFoldAggregator[A](k: Kernel.Fold[A], emit: A => Any, resultType: Dat
   override def reduce(buf: List[(Seq[Long], Seq[Any])], in: Row): List[(Seq[Long], Seq[Any])] = {
     val values = in.getStruct(1)
     if (values == null) buf // fold null policy: drop the row
-    else (in.getSeq[Long](0), CollectOps.rowValues(values)) :: buf
+    else (in.getSeq[Long](0), Runs.rowValues(values)) :: buf
   }
 
   override def merge(

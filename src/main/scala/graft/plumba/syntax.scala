@@ -39,26 +39,6 @@ object syntax {
         resultType: DataType,
         resultName: String = "scan"): DataFrame =
       GroupOps.groupScan(df, keyCols, valueCols, orderCols, k, resultType, resultName)
-
-    def groupFoldMergeable[A](
-        keyCols: Seq[String],
-        valueCols: Seq[String],
-        orderCols: Seq[String],
-        k: Kernel.Fold[A],
-        resultType: DataType,
-        resultName: String = "fold",
-        buckets: Int = 16,
-        emit: A => Any = (a: A) => a: Any): DataFrame =
-      GroupOps.groupFoldMergeable(df, keyCols, valueCols, orderCols, k, resultType, resultName, buckets, emit)
-
-    def collectScanMergeable[A](
-        valueCols: Seq[String],
-        orderCols: Seq[String],
-        k: Kernel.Scan[A],
-        m: Kernel.Merge[A],
-        resultType: DataType,
-        resultName: String = "scan"): DataFrame =
-      CollectOps.collectScanMergeable(df, valueCols, orderCols, k, m, resultType, resultName)
   }
 
   implicit class PlumbaColumn(private val c: Column) extends AnyVal {

@@ -305,18 +305,18 @@ object ReferenceQueries {
     li.groupBy("l_orderkey").agg(fold.as("qty_product")).orderBy("l_orderkey")
   }
 
-  /** The running-max scan again, calling
-    * [[graft.plumba.CollectOps.collectScanMergeable]] EXPLICITLY —
-    * while [[scanRunningMax]] reaches the same two-pass parallel scan
-    * through collectScan's merge-law auto-dispatch. Sharing one oracle
-    * pins both API layers (explicit and dispatched) to identical
-    * results. */
+  /** The running-max scan again, through the `df.collectScan` syntax
+    * extension with the untyped [[Kernel.Scan]] constructor — while
+    * [[scanRunningMax]] calls [[graft.plumba.CollectOps.collectScan]]
+    * with the typed `of1` sugar. Both reach the two-pass parallel scan
+    * because the kernel declares its merge law; sharing one oracle pins
+    * both API layers to identical results. */
   val scanRunningMaxParallel: Q = (s, dir) => {
     val o = Tables(s, dir, "orders")
-    graft.plumba.CollectOps.collectScanMergeable(
-        o, Seq("o_totalprice"), Seq("o_orderdate", "o_orderkey"),
-        Kernel.Scan.of1[Double, Double](0.0)(math.max),
-        Kernel.Merge(0.0, (a: Double, b: Double) => math.max(a, b)),
+    o.collectScan(
+        Seq("o_totalprice"), Seq("o_orderdate", "o_orderkey"),
+        Kernel.Scan[Double](0.0, (acc, xs) => math.max(acc, xs(0).asInstanceOf[Double]),
+          merge = Some(Kernel.Merge(0.0, (a: Double, b: Double) => math.max(a, b)))),
         DoubleType, "hi")
       .orderBy("o_orderdate", "o_orderkey")
       .select("o_orderkey", "hi")

@@ -143,8 +143,10 @@ class LlmSpec extends AnyFunSuite {
     import graft.plumba.{CollectOps, Kernel}
     val scanK = Kernel.Scan.of1[Double, Double](0.0)(math.max)
     val mergeLaw = Kernel.Merge(0.0, (a: Double, b: Double) => math.max(a, b))
-    val par = CollectOps.collectScanMergeable(
-        o, Seq("o_totalprice"), Seq("o_orderdate", "o_orderkey"), scanK, mergeLaw, DoubleType, "hi")
+    // collectScan runs the two-pass parallel scan for a kernel declaring its merge law
+    val par = CollectOps.collectScan(
+        o, Seq("o_totalprice"), Seq("o_orderdate", "o_orderkey"),
+        scanK.copy(merge = Some(mergeLaw)), DoubleType, "hi")
       .orderBy("o_orderdate", "o_orderkey").select("hi").collect().map(_.getDouble(0))
     val seqv = CollectOps.collectScan(
         o, Seq("o_totalprice"), Seq("o_orderdate", "o_orderkey"), scanK, DoubleType, "hi")

@@ -1,5 +1,8 @@
 package graft.plumba
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.SparkConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-21 focused spec for the kryo accumulator codec that replaced
@@ -41,5 +44,18 @@ class AccCodecSpec extends AnyFunSuite {
 
   test("null accumulator round-trips (empty-bucket sentinel)") {
     assert(rt(null: Any) == null)
+  }
+
+  test("a session requiring kryo registration still round-trips internal accumulators") {
+    val conf = new SparkConf().set("spark.kryo.registrationRequired", "true")
+    val codec = AccCodec.serializer(conf)
+    def rtc[A](a: A): A =
+      codec.deserialize[Any](codec.serialize[Any](a)(ClassTag.Any))(ClassTag.Any).asInstanceOf[A]
+    val s: Streak.S = (3L, 9L, 2L, 17L)
+    assert(rtc(s) == s)
+    val pay: Array[Any] = Array(1234L, "o_clerk#42", new java.math.BigDecimal("12345.67"),
+      java.sql.Date.valueOf("2026-08-18"), null, 3.25)
+    assert(rtc(pay).toSeq == pay.toSeq)
+    assert(conf.get("spark.kryo.registrationRequired") == "true", "the caller's conf is left as it was")
   }
 }

@@ -43,10 +43,31 @@ class EdgeCaseSpec extends AnyFunSuite {
 
   test("collectScanMergeable over an empty frame returns an empty result") {
     val empty = frame(Seq.empty)
-    val scanned = CollectOps.collectScanMergeable(empty, Seq("a"), Seq("idx"),
-      Scan.of1[Double, Long](0.0)((acc, x) => acc + x),
-      Merge(0.0, (a: Double, b: Double) => a + b), DoubleType)
+    val scanned = CollectOps.collectScan(empty, Seq("a"), Seq("idx"),
+      Scan.of1[Double, Long](0.0, merge = Some(Merge(0.0, (a: Double, b: Double) => a + b)))((acc, x) => acc + x),
+      DoubleType)
     assert(scanned.count() == 0)
+  }
+
+  test("mergeable collectScan stays exact under a narrow coalesce consumer") {
+    // pass 2 seeds each scanned partition from its own index; a coalesce
+    // runs several scanned partitions inside one consuming task. AQE must
+    // not merge the 4 sorted partitions into one, which would hide it.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val rows = (1 to 1000).map(i => Row(i, i.toLong))
+    val df = s.createDataFrame(s.sparkContext.parallelize(rows, 4), schema)
+    val k = Scan.of1[Double, Long](0.0,
+      merge = Some(Merge(0.0, (a: Double, b: Double) => a + b)))((acc, x) => acc + x)
+    val expected = Kernel.scanRows(k, rows.iterator.map(r => IndexedSeq(r.get(1)))).toSeq
+    for (n <- Seq(1, 2)) {
+      val got = CollectOps.collectScan(df, Seq("a"), Seq("idx"), k, DoubleType)
+        .coalesce(n)
+        .collect().sortBy(_.getInt(0)).map(r => Option(r.get(1))).toSeq
+      assert(got.length == expected.length)
+      val wrong = got.zip(expected).count { case (g, e) => g != e }
+      assert(wrong == 0, s"coalesce($n): $wrong wrong prefix values")
+    }
   }
 
   test("groupFold: group whose rows are all null-dropped still emits init-folded state") {

@@ -122,9 +122,7 @@ class GroupFoldVariantsSpec extends AnyFunSuite {
     GroupOps.groupScanMergeable(
         events, Seq("user_id"), Seq("value"), Seq("ts", "event_id"), k, DoubleType, buckets = 4)
       .write.format("noop").mode("overwrite").save()
-    CollectOps.collectScanMergeable(
-        events, Seq("value"), Seq("ts", "event_id"), k,
-        Merge(0.0, (a: Double, b: Double) => math.max(a, b)), DoubleType)
+    CollectOps.collectScan(events, Seq("value"), Seq("ts", "event_id"), k, DoubleType)
       .write.format("noop").mode("overwrite").save()
     assert(cm.isEmpty, "a mergeable path registered a DataFrame cache it never released")
   }

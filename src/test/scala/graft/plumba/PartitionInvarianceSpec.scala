@@ -1,0 +1,104 @@
+package graft.plumba
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+import graft.plumba.Kernel._
+
+/** Every plumba fold/scan shape returns the same answer whatever the
+  * shuffle-partition count and the input partitioning, on a frame with
+  * null value rows and null ordering values. The plain-Scala
+  * [[Kernel.foldRows]] / [[Kernel.scanRows]] over the rows in
+  * (ord nulls first, id) order are the reference. */
+class PartitionInvarianceSpec extends AnyFunSuite {
+  import PartitionInvarianceSpec._
+
+  /** (g, ord, id, v): group 0 is hot, `ord` has ties and nulls, `v` has nulls. */
+  private val data: Seq[(Long, Option[Long], Long, Option[Long])] = (0 until 240).map { i =>
+    val g = if (i % 3 == 0) 0L else (i % 5).toLong
+    val ord = if (i % 17 == 0) None else Some(((i * 37) % 60).toLong)
+    val v = if (i % 11 == 0) None else Some(((i * 13) % 97).toLong)
+    (g, ord, i.toLong, v)
+  }
+  private val inOrder = data.sortBy { case (_, ord, id, _) => (ord.isDefined, ord.getOrElse(0L), id) }
+  private def vals(r: (Long, Option[Long], Long, Option[Long])): IndexedSeq[Any] =
+    IndexedSeq(r._4.fold(null: Any)(x => x))
+  private val byGroup = inOrder.groupBy(_._1)
+
+  private def foldRef[A](k: Fold[A]): Any = Kernel.foldRows(k, inOrder.iterator.map(vals))
+  private def scanRef[A](k: Scan[A]): Map[Long, Option[Any]] =
+    inOrder.map(_._3).zip(Kernel.scanRows(k, inOrder.iterator.map(vals))).toMap
+  private def groupFoldRef[A](k: Fold[A], emit: A => Any): Map[Long, Any] =
+    byGroup.map { case (g, rs) => g -> emit(Kernel.foldRows(k, rs.iterator.map(vals))) }
+  private def groupScanRef[A](k: Scan[A]): Map[Long, Option[Any]] =
+    byGroup.values.flatMap(rs => rs.map(_._3).zip(Kernel.scanRows(k, rs.iterator.map(vals)))).toMap
+
+  private val schema = StructType(Seq(
+    StructField("g", LongType, nullable = false), StructField("ord", LongType),
+    StructField("id", LongType, nullable = false), StructField("v", LongType)))
+
+  /** (shuffle partitions, input partitions): AQE may not merge the shuffles back. */
+  private lazy val frames: Seq[((Int, Int), DataFrame)] =
+    for (shuffle <- Seq(1, 7); input <- Seq(1, 5)) yield {
+      val s: SparkSession = TestSpark.spark.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", shuffle.toString)
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val rows = data.map { case (g, ord, id, v) => Row(g, ord.map(Long.box).orNull, id, v.map(Long.box).orNull) }
+      val df = s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
+      (shuffle, input) -> (if (input == 1) df else df.repartition(input))
+    }
+
+  private def scanById(df: DataFrame, idCol: Int): Map[Long, Option[Any]] =
+    df.collect().map(r => r.getLong(idCol) -> Option(r.get(r.length - 1))).toMap
+  private def foldByGroup(df: DataFrame): Map[Long, Any] =
+    df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+
+  private val V = Seq("v")
+  private val O = Seq("ord", "id")
+  private val G = Seq("g")
+
+  private val shapes: Seq[(String, DataFrame => Any, Any)] = Seq(
+    ("collectFold sequential", df => CollectOps.collectFold(df, V, O, polySeq), foldRef(polySeq)),
+    ("collectFold mergeable", df => CollectOps.collectFold(df, V, O, polyMerge), foldRef(polyMerge)),
+    ("collectFold commutative", df => CollectOps.collectFold(df, V, O, sumComm), foldRef(sumComm)),
+    ("collectScan sequential",
+      df => scanById(CollectOps.collectScan(df, V, O, polyScan, LongType), 1), scanRef(polyScan)),
+    ("collectScan mergeable",
+      df => scanById(CollectOps.collectScan(df, V, O, polyScanMerge, LongType), 1), scanRef(polyScanMerge)),
+    ("groupFold",
+      df => foldByGroup(GroupOps.groupFold(df, G, V, O, polySeq, LongType, emit = hash)),
+      groupFoldRef(polySeq, hash)),
+    ("groupScan",
+      df => scanById(GroupOps.groupScan(df, G, V, O, polyScan, LongType), 2), groupScanRef(polyScan)),
+    ("groupFoldMergeable",
+      df => foldByGroup(GroupOps.groupFoldMergeable(df, G, V, O, polyMerge, LongType, emit = hash)),
+      groupFoldRef(polyMerge, hash)),
+    ("groupScanMergeable",
+      df => scanById(GroupOps.groupScanMergeable(df, G, V, O, polyScanMerge, LongType), 2),
+      groupScanRef(polyScanMerge)))
+
+  for ((name, run, expected) <- shapes)
+    test(s"$name matches the reference under every shuffle and input partitioning") {
+      for (((shuffle, input), df) <- frames)
+        assert(run(df) == expected, s"shuffle partitions $shuffle, input partitions $input")
+    }
+}
+
+/** Kernels live here so their closures capture no suite instance. */
+object PartitionInvarianceSpec {
+  val M = 1000000007L
+  // order-sensitive polynomial hash; state (hash, 31^rows) makes it mergeable
+  val polyStep: ((Long, Long), IndexedSeq[Any]) => (Long, Long) =
+    (a, xs) => ((a._1 * 31 + xs(0).asInstanceOf[Long]) % M, a._2 * 31 % M)
+  val polyLaw = Merge[(Long, Long)]((0L, 1L), (l, r) => ((l._1 * r._2 + r._1) % M, l._2 * r._2 % M))
+  val hash = (a: (Long, Long)) => a._1: Any
+
+  val polySeq = Fold[(Long, Long)]((7L, 1L), polyStep)
+  val polyMerge = polySeq.copy(merge = Some(polyLaw))
+  val sumComm = Fold[Long](0L, (a, xs) => a + xs(0).asInstanceOf[Long],
+    merge = Some(Merge[Long](0L, _ + _, commutative = true)))
+  val polyScan = Scan[(Long, Long)]((7L, 1L), polyStep, emit = hash)
+  val polyScanMerge = polyScan.copy(merge = Some(polyLaw))
+}
