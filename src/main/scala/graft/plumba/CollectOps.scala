@@ -1,6 +1,12 @@
 package graft.plumba
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -13,6 +19,17 @@ import org.apache.spark.sql.types._
   * deliberate, documented API deviation).
   *
   * Scale design (SURVEY §3.1–3.2):
+  *  - One partition is already totally ordered once it is sorted in
+  *    place: a single partition satisfies every ordered distribution, so
+  *    an ordered fold over at most one partition sorts it with
+  *    `sortWithinPartitions` — no range exchange, no sampling job, one
+  *    Spark job of one stage — and otherwise runs the path its kernel
+  *    runs over many partitions. The partition count is read from the
+  *    projected input's physical plan, and only when that plan holds no
+  *    exchange, no subquery and no adaptive wrapper (nor does any cached
+  *    plan it scans), so building its RDD runs no Spark job; anything
+  *    else, and every streaming frame, counts as many partitions
+  *    ([[onePartition]]). `collectScan` does not apply this rule.
   *  - Kernels declaring a [[Kernel.Merge]] run as *partial folds per
   *    partition* on executors, combined in partition order on the driver —
   *    O(#partitions) driver work, fully parallel, no row ever crosses to
@@ -26,30 +43,45 @@ import org.apache.spark.sql.types._
   */
 object CollectOps {
 
-  /** Project, apply fold null policy (drop rows with nulls in the selected
-    * value columns ONLY — nulls in other columns never drop a row,
-    * reference tests/test_collect_fold.py:41–56), and globally sort. */
-  private def prepared(df: DataFrame, valueCols: Seq[String], orderCols: Seq[String]): DataFrame = {
-    require(valueCols.nonEmpty, "at least one folded column is required") // reference :272–273
-    df.select((orderCols ++ valueCols).distinct.map(col): _*)
-      .na.drop(valueCols)
-      .orderBy(orderCols.map(col): _*)
-      .select(valueCols.map(col): _*)
+  /** True when `df` has at most one partition and its physical plan says
+    * so without running a Spark job: the plan (and every cached plan it
+    * scans) holds no exchange, no subquery and no adaptive wrapper, so
+    * building its RDD only reads partition metadata. A streaming frame,
+    * or any plan that would have to run jobs to know, counts as many
+    * partitions. */
+  private[plumba] def onePartition(df: DataFrame): Boolean = {
+    def runsNoJob(p: SparkPlan): Boolean = p match {
+      case _: Exchange | _: AdaptiveSparkPlanExec => false
+      case s: InMemoryTableScanExec => runsNoJob(s.relation.cachedPlan)
+      case _ => p.subqueries.isEmpty && p.children.forall(runsNoJob)
+    }
+    !df.isStreaming && {
+      val plan = df.queryExecution.executedPlan
+      runsNoJob(plan) && plan.execute().getNumPartitions <= 1
+    }
   }
 
   /** Ordered whole-frame fold → scalar. Kernels whose merge law is
     * declared COMMUTATIVE skip the global sort (and its range-exchange)
     * entirely — permutation invariance makes row and partition order
     * irrelevant, so the scan's natural partitioning feeds the partial
-    * folds directly: one pass, zero shuffles. */
+    * folds directly: one pass, zero shuffles. Every other kernel folds
+    * the rows in order under the fold null policy (drop rows with nulls
+    * in the selected value columns ONLY — nulls in other columns never
+    * drop a row, reference tests/test_collect_fold.py:41–56). */
   def collectFold[A](df: DataFrame, valueCols: Seq[String], orderCols: Seq[String], k: Kernel.Fold[A]): A = {
+    require(valueCols.nonEmpty, "at least one folded column is required") // reference :272–273
     // every fold input below is projected to exactly `valueCols`
     val valIdx = valueCols.indices.toArray
+    lazy val kept = df.select((orderCols ++ valueCols).distinct.map(col): _*).na.drop(valueCols)
+    lazy val local = kept.sortWithinPartitions(orderCols.map(col): _*).select(valueCols.map(col): _*)
+    lazy val sorted = kept.orderBy(orderCols.map(col): _*).select(valueCols.map(col): _*)
+    // one partition needs no range sort: partition 0 holds every row in order
+    lazy val input = if (onePartition(local)) local else sorted
     k.merge match {
       case Some(m) if m.commutative =>
         // Unsorted path: project + fold null policy only. Every partition
         // folds from `neutral`; partials combine in any order onto `init`.
-        require(valueCols.nonEmpty, "at least one folded column is required")
         val proj = df.select(valueCols.distinct.map(col): _*)
           .na.drop(valueCols.distinct)
           .select(valueCols.map(col): _*)
@@ -59,10 +91,9 @@ object CollectOps {
           .collect()
           .foldLeft(k.init)((acc, p) => m.combine(acc, p._2))
       case Some(m) =>
-        val proj = prepared(df, valueCols, orderCols)
         // Executor-side partial folds; global sort range-partitions rows so
         // partition index order IS row order. Combine partials in that order.
-        val partials = proj.rdd
+        val partials = input.rdd
           .mapPartitionsWithIndex { (idx, it) =>
             Iterator((idx, Runs.fold(k, if (idx == 0) k.init else m.neutral, it, valIdx)))
           }
@@ -73,8 +104,7 @@ object CollectOps {
       case None =>
         // Parity path: partitions stream to the driver in sorted order
         // through `toLocalIterator` and fold sequentially, like the reference.
-        import scala.jdk.CollectionConverters._
-        Runs.fold(k, k.init, prepared(df, valueCols, orderCols).toLocalIterator().asScala, valIdx)
+        Runs.fold(k, k.init, input.toLocalIterator().asScala, valIdx)
     }
   }
 

@@ -54,6 +54,29 @@ private[plumba] object Runs {
     }
   }
 
+  /** Spark's grouping equality on key vectors: binary values equal by
+    * content and NaN equal to NaN, also inside array and struct keys, as
+    * `groupBy` and the sort that made the run contiguous see them (Scala
+    * `==` compares byte arrays by reference and keeps NaN unequal to
+    * itself; `Row.equals` compares nested arrays with `==`). */
+  private def sameKey(a: IndexedSeq[Any], b: IndexedSeq[Any]): Boolean = {
+    var i = 0
+    while (i < a.length && sameValue(a(i), b(i))) i += 1
+    i == a.length
+  }
+
+  private def sameValue(a: Any, b: Any): Boolean = a match {
+    case x: Array[Byte] => b.isInstanceOf[Array[Byte]] && java.util.Arrays.equals(x, b.asInstanceOf[Array[Byte]])
+    case x: Double if x.isNaN => b.isInstanceOf[Double] && b.asInstanceOf[Double].isNaN
+    case x: Float if x.isNaN => b.isInstanceOf[Float] && b.asInstanceOf[Float].isNaN
+    case x: collection.Seq[_] =>
+      b.isInstanceOf[collection.Seq[_]] && x.corresponds(b.asInstanceOf[collection.Seq[Any]])(sameValue)
+    case x: Row =>
+      b.isInstanceOf[Row] && x.length == b.asInstanceOf[Row].length &&
+        (0 until x.length).forall(i => sameValue(x.get(i), b.asInstanceOf[Row].get(i)))
+    case _ => a == b
+  }
+
   /** Split a partition sorted on `keyIdx` into its contiguous runs of equal
     * key: `(key values, rows of the run)`. A run must be consumed before
     * the next one is requested; whatever is left of it is skipped. */
@@ -73,7 +96,7 @@ private[plumba] object Runs {
           private var known = false
           private var more = false
           def hasNext: Boolean = {
-            if (!known) { more = buf.hasNext && values(buf.head, keyIdx) == key; known = true }
+            if (!known) { more = buf.hasNext && sameKey(values(buf.head, keyIdx), key); known = true }
             more
           }
           def next(): Row = {

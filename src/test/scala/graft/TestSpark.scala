@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.grafttest.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
@@ -16,4 +22,23 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `body` and returns its result with the start events of the
+    * Spark jobs it ran, in start order. The listener bus is drained
+    * before the listener is added and again before it is read, so
+    * earlier work is not counted and no job of `body` is missed. */
+  def jobsDuring[A](body: => A): (A, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    Bus.drain(sc)
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      Bus.drain(sc)
+      (a, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
