@@ -111,8 +111,9 @@ object SkewProbe {
   * owning a constant fraction of the whole orders corpus. In the plain
   * [[graft.operators.AsofJoin.asofLast]] the key-partitioned shuffle
   * lands that customer's ENTIRE timeline (sort + carry) on one task;
-  * the salted variant spreads it over `buckets` tasks at the cost of a
-  * partial/seed/carry three-stage plan.
+  * the salted variant spreads it over `buckets` range partitions at the
+  * cost of a range sort and an edge pass (measured rounds ago on the
+  * retired partial/seed/carry three-stage plan; SCALE.md).
   *
   * Skew synthesis (deterministic): `copies`× decorrelated orders
   * (key-offset per copy, the ScaleProbe convention); the HOT corpus

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
+import scala.collection.immutable.ArraySeq
 
-import graft.plumba.AccCodec
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{StructField, StructType}
+
+import graft.plumba.{Ranged, Runs}
 
 /** Distributed LEFT AS-OF JOIN — for every left row, the payload of the
   * LATEST right row with the same keys and time <= left time (or
@@ -21,8 +23,10 @@ import graft.plumba.AccCodec
   * per-key windowing over a joined product, and a group never has to fit
   * in memory. At 100 TB both sides co-partition on the keys; for a HOT
   * key (one instrument carrying a large fraction of all rows) use
-  * [[asofLastSalted]], which range-salts the time domain so that key's
-  * timeline spreads over many tasks.
+  * [[asofLastSalted]], which range-partitions on (keys, time) so that
+  * key's timeline spreads over many tasks. Keys compare with Spark's
+  * grouping equality (binary by content, NaN equal to NaN) through
+  * [[graft.plumba.Runs]].
   *
   * Determinism contract: when several right rows share (keys, time), the
   * carried payload is the LAST in `rightTieBreak` order (supply
@@ -36,20 +40,44 @@ import graft.plumba.AccCodec
   */
 object AsofJoin {
 
+  /** Where the carry reads a row of the tagged union: the side flag, the
+    * right payload columns and the left output columns. */
+  private final case class Layout(flagIdx: Int, payloadIdx: Array[Int], leftOutIdx: Array[Int]) {
+    private def isRight(r: Row): Boolean = r.getInt(flagIdx) != 1
+    private def payload(r: Row): Array[Any] = payloadIdx.map(r.get)
+
+    /** The last right payload of `run` (last-in-order wins), or null when
+      * it holds no right row. */
+    def lastRight(run: Iterator[Row]): Array[Any] = {
+      var last: Row = null
+      run.foreach(r => if (isRight(r)) last = r)
+      if (last == null) null else payload(last)
+    }
+
+    /** Walk one key's run carrying `from`: a right row replaces the
+      * carried payload, a left row emits with it (nulls when none). */
+    def carry(from: Array[Any], run: Iterator[Row]): Iterator[Row] = {
+      var last = from
+      run.flatMap { r =>
+        if (isRight(r)) { last = payload(r); Iterator.empty }
+        else {
+          val pay = if (last == null) new Array[Any](payloadIdx.length) else last
+          Iterator.single(Row.fromSeq(ArraySeq.unsafeWrapArray(leftOutIdx.map(r.get) ++ pay)))
+        }
+      }
+    }
+  }
+
   /** Shared prep: tagged union with identical layout from both sides —
     * keys, time, leftRest (null on right rows), payloads (null on left
     * rows), flag. Right rows flag 0 sort BEFORE left rows (flag 1) at
     * equal time -> inclusive (<=); strict mode flags right 2 -> after. */
   private case class Prep(
       unioned: DataFrame,
-      unionCols: Seq[String],
-      keyIdx: Seq[Int],
-      flagIdx: Int,
-      payloadIdx: Seq[Int],
-      leftOutIdx: Seq[Int],
-      outSchema: StructType,
+      keyIdx: Array[Int],
       sortCols: Seq[String],
-      nPayload: Int)
+      outSchema: StructType,
+      layout: Layout)
 
   private def prep(
       left: DataFrame,
@@ -88,14 +116,13 @@ object AsofJoin {
         payloadCols.map(c => StructField(s"$outPrefix$c", rSchema(c).dataType, nullable = true)))
     Prep(
       unioned,
-      unionCols,
-      keyIdx = keyCols.map(unionCols.indexOf),
-      flagIdx = unionCols.indexOf("__flag"),
-      payloadIdx = pName.map(unionCols.indexOf),
-      leftOutIdx = (keyCols ++ Seq(timeCol) ++ leftRest).map(unionCols.indexOf),
-      outSchema = outSchema,
+      keyIdx = keyCols.map(unionCols.indexOf).toArray,
       sortCols = (keyCols :+ timeCol :+ "__flag") ++ rightTieBreak.map(c => s"__p_$c"),
-      nPayload = payloadCols.length)
+      outSchema = outSchema,
+      layout = Layout(
+        flagIdx = unionCols.indexOf("__flag"),
+        payloadIdx = pName.map(unionCols.indexOf).toArray,
+        leftOutIdx = (keyCols ++ Seq(timeCol) ++ leftRest).map(unionCols.indexOf).toArray))
   }
 
   def asofLast(
@@ -108,60 +135,32 @@ object AsofJoin {
       strict: Boolean = false,
       outPrefix: String = "asof_"): DataFrame = {
     val p = prep(left, right, keyCols, timeCol, payloadCols, rightTieBreak, strict, outPrefix)
+    val (keyIdx, layout) = (p.keyIdx, p.layout)
     p.unioned
       .repartition(keyCols.map(col): _*)
       .sortWithinPartitions(p.sortCols.map(col): _*)
-      .mapPartitions { it =>
-        var curKey: Seq[Any] = null
-        var last: Array[Any] = null
-        it.flatMap { r =>
-          val key = p.keyIdx.map(r.get)
-          if (curKey == null || key != curKey) { curKey = key; last = null }
-          if (r.getInt(p.flagIdx) != 1) {
-            // right row: remember its payload (last-in-order wins)
-            val pay = new Array[Any](p.nPayload)
-            var i = 0
-            while (i < p.nPayload) { pay(i) = r.get(p.payloadIdx(i)); i += 1 }
-            last = pay
-            Iterator.empty
-          } else {
-            val payload: Seq[Any] =
-              if (last == null) Seq.fill[Any](p.nPayload)(null)
-              else scala.collection.immutable.ArraySeq.unsafeWrapArray(last)
-            Iterator.single(Row.fromSeq(p.leftOutIdx.map(r.get) ++ payload))
-          }
-        }
-      }(Encoders.row(p.outSchema))
+      .mapPartitions(it => Runs.runs(it, keyIdx).flatMap { case (_, run) => layout.carry(null, run) })(
+        Encoders.row(p.outSchema))
   }
 
-  /** SKEW-RESISTANT as-of join — same semantics as [[asofLast]], with
-    * the time domain range-salted so a hot key's timeline spreads over
-    * up to `buckets` tasks instead of one (the
-    * [[graft.plumba.GroupOps.groupScanMergeable]] pattern applied to
-    * the carried-payload state).
+  /** SKEW-RESISTANT as-of join — same semantics as [[asofLast]], on the
+    * range-partitioned two-pass engine ([[graft.plumba.Ranged]]): the
+    * tagged union is range-partitioned on (keys, time, side flag,
+    * tie-breaks), so a hot key's timeline spreads over several tasks
+    * instead of one. The carried state is the last right payload, and
+    * its merge is "the later stretch's payload wins if it has one": pass
+    * 1 reports each partition's first and last key run's last right
+    * payload, the driver chains them into the payload each partition's
+    * first run inherits, and pass 2 runs [[asofLast]]'s carry from that
+    * seed. The seed is exactly the carry state [[asofLast]] reaches at
+    * the partition edge, wherever the range boundaries fall, so equal
+    * times on both sides of an edge need no special routing. Null times
+    * sort first, as in the unsalted sort; the time column may be any
+    * orderable type.
     *
-    * Three stages, the same shape as the salted group scan:
-    *  1. per (keys, time-range bucket): fold the bucket's LAST right
-    *    payload (in (time, flag, tie-break) order) — parallel over
-    *    (key, bucket) pairs, so the hot key's buckets run concurrently;
-    *  2. per key, prefix-carry the bucket partials in bucket order →
-    *    one SEED payload per (key, bucket) = the last right payload
-    *    strictly before that bucket's time range (O(keys × buckets)
-    *    sentinel rows total);
-    *  3. union seeds ahead of the data rows, shuffle once on
-    *    (keys, bucket), secondary-sort with the seed flag first, and
-    *    run [[asofLast]]'s streaming carry within each (key, bucket).
-    *
-    * Correctness of the salt: buckets are contiguous intervals of the
-    * time column, so equal times (where the inclusive/strict flag
-    * ordering matters) always land in ONE bucket together, and a right
-    * row in an earlier bucket strictly precedes every left row in a
-    * later one — the seed is exactly the carry state [[asofLast]]
-    * would have reached. Boundary accuracy affects only load balance
-    * (from one bounded `approxQuantile` sample pass, seed 42). Null
-    * times route to bucket 0, matching the unsalted nulls-first sort.
-    *
-    * `buckets <= 0` derives the count from `defaultParallelism`. */
+    * `buckets > 0` is the number of range partitions; `buckets <= 0`
+    * (the default) takes the session's shuffle partitions, which
+    * adaptive execution may coalesce. */
   def asofLastSalted(
       left: DataFrame,
       right: DataFrame,
@@ -173,120 +172,8 @@ object AsofJoin {
       outPrefix: String = "asof_",
       buckets: Int = 0): DataFrame = {
     val p = prep(left, right, keyCols, timeCol, payloadCols, rightTieBreak, strict, outPrefix)
-    val nKeys = keyCols.length
-
-    // consumed twice (stage-1 partials + stage-3 data rows): materialize
-    // once; checkpoint blocks are reference-tracked and dropped by the
-    // ContextCleaner (same contract as the salted group scan).
-    // Round-21 order: checkpoint FIRST, then derive the range-bucket
-    // boundaries from the cached rows — the approxQuantile sample pass
-    // previously re-scanned both parquet inputs before the checkpoint
-    // scanned them again (guide §1.2: remove passes). The bucket
-    // when-chain is evaluated per consumer instead of stored — a few
-    // comparisons per row vs materializing a second copy. Boundaries
-    // affect only load balance, never results (see rangeBucketCol).
-    val base = p.unioned.localCheckpoint(true)
-    val bucketCol = graft.plumba.GroupOps.rangeBucketCol(base, timeCol, buckets)
-    val withB = base.withColumn("__bucket", bucketCol)
-    val bIdx = p.unionCols.length // __bucket appended after the union layout
-
-    // stage 1: last right payload per (keys, bucket); buckets with no
-    // right row emit the "nothing seen" sentinel (null __acc) so the
-    // prefix carry skips them
-    val partialSchema = StructType(
-      keyCols.map(c => withB.schema(c)) ++
-        Seq(StructField("__bucket", IntegerType), StructField("__acc", BinaryType, nullable = true)))
-    val sortB = (keyCols :+ "__bucket") ++ p.sortCols.drop(nKeys) // keys, bucket, time, flag, ties
-    val partials = withB
-      .repartition((keyCols :+ "__bucket").map(col): _*)
-      .sortWithinPartitions(sortB.map(col): _*)
-      .mapPartitions { it =>
-        new Iterator[Row] {
-          private val buf = it.buffered
-          def hasNext: Boolean = buf.hasNext
-          def next(): Row = {
-            val gk = p.keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)
-            var last: Array[Any] = null
-            while (buf.hasNext && (p.keyIdx.map(buf.head.get) :+ buf.head.get(bIdx)) == gk) {
-              val r = buf.next()
-              if (r.getInt(p.flagIdx) != 1) {
-                val pay = new Array[Any](p.nPayload)
-                var i = 0
-                while (i < p.nPayload) { pay(i) = r.get(p.payloadIdx(i)); i += 1 }
-                last = pay
-              }
-            }
-            Row.fromSeq(gk :+ (if (last == null) null else AccCodec.ser(last)))
-          }
-        }
-      }(Encoders.row(partialSchema))
-
-    // stage 2: per key, prefix-carry over buckets -> seed BEFORE each bucket
-    val seeds = partials
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols :+ "__bucket").map(col): _*)
-      .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-        val buf = it.buffered
-        while (buf.hasNext) {
-          val key = (0 until nKeys).map(buf.head.get)
-          var carry: Array[Byte] = null
-          while (buf.hasNext && (0 until nKeys).map(buf.head.get) == key) {
-            val r = buf.next()
-            out += Row.fromSeq(key :+ r.get(nKeys) :+ carry) // seed = state BEFORE this bucket
-            val acc = r.getAs[Array[Byte]](nKeys + 1)
-            if (acc != null) carry = acc
-          }
-        }
-        out.iterator
-      }(Encoders.row(partialSchema))
-
-    // stage 3: seed sentinels sort ahead of data rows within each
-    // (keys, bucket) run; one shuffle, one streaming carry pass
-    val dataRows = withB
-      .withColumn("__seed", lit(null).cast(BinaryType))
-      .withColumn("__sflag", lit(1))
-    val seedRows = seeds
-      .select(
-        keyCols.map(col) ++
-          p.unionCols.filterNot(keyCols.contains).map(c =>
-            lit(null).cast(withB.schema(c).dataType).as(c)) :+
-          col("__bucket") :+ col("__acc").as("__seed") :+ lit(0).as("__sflag"): _*)
-      .select(p.unionCols.map(col) :+ col("__bucket") :+ col("__seed") :+ col("__sflag"): _*)
-    val sIdx = p.unionCols.length + 1 // __seed position
-    val sfIdx = p.unionCols.length + 2 // __sflag position
-    val sortFinal =
-      (keyCols.map(col) :+ col("__bucket") :+ col("__sflag")) ++ p.sortCols.drop(nKeys).map(col)
-    dataRows.select(p.unionCols.map(col) :+ col("__bucket") :+ col("__seed") :+ col("__sflag"): _*)
-      .union(seedRows)
-      .repartition((keyCols :+ "__bucket").map(col): _*)
-      .sortWithinPartitions(sortFinal: _*)
-      .mapPartitions { it =>
-        var curGroup: Seq[Any] = null
-        var last: Array[Any] = null
-        it.flatMap { r =>
-          val gk = p.keyIdx.map(r.get) :+ r.get(bIdx)
-          if (r.getInt(sfIdx) == 0) { // seed sentinel opens its (key, bucket)
-            curGroup = gk
-            val b = r.getAs[Array[Byte]](sIdx)
-            last = if (b == null) null else AccCodec.deser[Array[Any]](b)
-            Iterator.empty
-          } else {
-            if (curGroup == null || gk != curGroup) { curGroup = gk; last = null }
-            if (r.getInt(p.flagIdx) != 1) {
-              val pay = new Array[Any](p.nPayload)
-              var i = 0
-              while (i < p.nPayload) { pay(i) = r.get(p.payloadIdx(i)); i += 1 }
-              last = pay
-              Iterator.empty
-            } else {
-              val payload: Seq[Any] =
-                if (last == null) Seq.fill[Any](p.nPayload)(null)
-                else scala.collection.immutable.ArraySeq.unsafeWrapArray(last)
-              Iterator.single(Row.fromSeq(p.leftOutIdx.map(r.get) ++ payload))
-            }
-          }
-        }
-      }(Encoders.row(p.outSchema))
+    val layout = p.layout
+    val law = Ranged.Law[Array[Any]](null, layout.lastRight, (l, r) => if (r != null) r else l)
+    Ranged(p.unioned, p.sortCols, p.keyIdx, buckets, law, p.outSchema)((_, from, run, _) => layout.carry(from, run))
   }
 }

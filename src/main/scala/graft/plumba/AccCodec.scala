@@ -3,7 +3,8 @@ package graft.plumba
 import org.apache.spark.SparkConf
 import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
 
-/** Accumulator byte codec for the salted fold/scan/asof partials —
+/** Accumulator byte codec for the partition-edge partials and seeds of
+  * the range-partitioned fold/scan/asof engine ([[Ranged]]) —
   * round-21 per-task-work fix (opt guide §1.2 step 2): the original
   * per-value `new ObjectOutputStream(new ByteArrayOutputStream)` costs
   * a stream header + reflection walk PER (group, bucket) partial, and
@@ -14,8 +15,8 @@ import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
   * instantiator — tuples, case classes, Array[Any] payloads all
   * registered) serializes the same values in ~1/20 the time.
   *
-  * The bytes are INTERNAL to one query (partial rows between two
-  * stages of the same job) — never persisted, never compared across
+  * The bytes are INTERNAL to one query (edge partials collected by
+  * pass 1, seeds shipped to pass 2) — never persisted, never compared across
   * engines — so the wire format is free to change; only round-trip
   * fidelity matters, which KryoRoundTripSpec pins for every
   * accumulator shape the salted operators ship. */

@@ -110,15 +110,21 @@ object CollectOps {
 
   /** Ordered whole-frame scan → DataFrame of (orderCols..., resultName).
     *
-    * Kernels declaring a [[Kernel.Merge]] law are routed to the two-pass
-    * distributed prefix scan ([[collectScanMergeable]]) — the parallel
-    * default for lawful kernels. A generic (possibly non-associative)
-    * prefix scan is inherently sequential, so it runs as a single sorted
-    * partition — reference parity (the reference is single-threaded too,
-    * README.md:57–62). For per-group scans use [[GroupOps.groupScan]]
-    * (parallel across groups); for partitioned associative scans
-    * [[WindowOps]]. Null rows emit null and do not advance the
-    * accumulator. */
+    * Kernels declaring a [[Kernel.Merge]] law run the classic two-pass
+    * distributed prefix scan on [[Ranged]] with an empty key: range-sort
+    * once; pass 1 folds each partition's segment from `neutral` (skipped
+    * when the sort yields one partition); the driver prefix-combines the
+    * O(#partitions) partials in partition order; pass 2 re-scans every
+    * partition from its prefix over the same sorted RDD, with no
+    * checkpoint. Both passes key the seeds on the scanned partition's
+    * own index, so a downstream `coalesce` cannot misplace them. This
+    * is the parallel default for lawful kernels. A generic (possibly
+    * non-associative) prefix scan is inherently sequential, so it runs
+    * as a single sorted partition — reference parity (the reference is
+    * single-threaded too, README.md:57–62). For per-group scans use
+    * [[GroupOps.groupScan]] (parallel across groups); for partitioned
+    * associative scans [[WindowOps]]. Null rows emit null and do not
+    * advance the accumulator. */
   def collectScan[A](
       df: DataFrame,
       valueCols: Seq[String],
@@ -136,60 +142,16 @@ object CollectOps {
         StructField(resultName, resultType, nullable = true))
     val out = (r: Row, v: Any) => Row.fromSeq(Runs.values(r, ordIdx) :+ v)
     k.merge match {
-      case Some(m) => collectScanMergeable(sel, orderCols, valIdx, k, m, outSchema, out)
+      case Some(m) =>
+        // the key is empty: each partition is one run, seeded with the prefix before it
+        Ranged(sel, orderCols, Array.empty, 0, Ranged.kernelLaw(k, m, valIdx), outSchema) { (_, from, run, _) =>
+          Runs.scan(k, from, run, valIdx)(out)
+        }
       case None =>
         sel
           .repartition(1)
           .sortWithinPartitions(orderCols.map(col): _*)
           .mapPartitions(it => Runs.scan(k, k.init, it, valIdx)(out))(Encoders.row(outSchema))
     }
-  }
-
-  /** Parallel whole-frame scan for kernels whose step state obeys a
-    * [[Kernel.Merge]] law — the classic two-pass distributed prefix scan:
-    *
-    *  1. globally range-sort, then fold each partition's segment state in
-    *     parallel (one pass);
-    *  2. prefix-combine the per-partition partials in partition order
-    *     (driver-side, O(#partitions));
-    *  3. re-scan each partition seeded with its prefix (second pass).
-    *
-    * Unlike the sequential [[collectScan]] (reference parity) this keeps
-    * every executor busy — the 100 TB path for associative global scans
-    * that aren't plain window aggregates.
-    *
-    * The sorted input is materialized ONCE via `localCheckpoint(eager)`
-    * so both passes see the identical range partitioning (pass 2's
-    * prefix seeds are only valid for pass 1's exact partition layout).
-    * Both passes key the seeds on the index `mapPartitionsWithIndex`
-    * hands them — the scanned partition's own index, not the id of
-    * whichever task consumes it (a downstream `coalesce` runs several
-    * scanned partitions in one task).
-    * Unlike `persist()` — which pins a CacheManager entry until an
-    * explicit unpersist and therefore leaked one cached plan per call
-    * in long-lived sessions — checkpoint blocks are reference-tracked
-    * and dropped by the ContextCleaner when the returned DataFrame is
-    * garbage-collected. At cluster scale, reliable checkpointing has
-    * the same contract. */
-  private def collectScanMergeable[A](
-      sel: DataFrame,
-      orderCols: Seq[String],
-      valIdx: Array[Int],
-      k: Kernel.Scan[A],
-      m: Kernel.Merge[A],
-      outSchema: StructType,
-      out: (Row, Any) => Row): DataFrame = {
-    val rows = sel.orderBy(orderCols.map(col): _*).localCheckpoint(true).rdd
-    // pass 1: per-partition segment folds (null rows don't advance state)
-    val partials = rows
-      .mapPartitionsWithIndex((idx, it) => Iterator((idx, Runs.fold(k, m.neutral, it, valIdx))))
-      .collect().sortBy(_._1).iterator.map(_._2).toList
-    // prefix for partition i = init merged with partials 0..i-1
-    val prefixes = partials.scanLeft(k.init)((l, r) => m.combine(l, r)).toIndexedSeq
-    val prefixesB = sel.sparkSession.sparkContext.broadcast(prefixes)
-    // pass 2: seeded re-scan, same checkpointed partitioning
-    sel.sparkSession.createDataFrame(
-      rows.mapPartitionsWithIndex((idx, it) => Runs.scan(k, prefixesB.value(idx), it, valIdx)(out)),
-      outSchema)
   }
 }

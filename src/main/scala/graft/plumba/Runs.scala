@@ -5,12 +5,12 @@ import scala.collection.immutable.ArraySeq
 import org.apache.spark.sql.Row
 
 /** The per-row and per-run mechanics every [[CollectOps]]/[[GroupOps]]
-  * partition body shares: reading a row's value vector, the fold and scan
-  * null policies around `step`, and splitting a sorted partition into
-  * contiguous key runs. The plain-Scala [[Kernel.foldRows]] /
-  * [[Kernel.scanRows]] stay the independent reference these loops are
-  * tested against. */
-private[plumba] object Runs {
+  * partition body shares (and [[graft.operators.AsofJoin]]'s carry):
+  * reading a row's value vector, the fold and scan null policies around
+  * `step`, and splitting a sorted partition into contiguous key runs.
+  * The plain-Scala [[Kernel.foldRows]] / [[Kernel.scanRows]] stay the
+  * independent reference these loops are tested against. */
+private[graft] object Runs {
 
   /** The values of `r` at `idx`, in a fresh vector per row: kernels and
     * [[SortedFoldAggregator]] may keep the sequence they are handed, so it
@@ -59,7 +59,7 @@ private[plumba] object Runs {
     * `groupBy` and the sort that made the run contiguous see them (Scala
     * `==` compares byte arrays by reference and keeps NaN unequal to
     * itself; `Row.equals` compares nested arrays with `==`). */
-  private def sameKey(a: IndexedSeq[Any], b: IndexedSeq[Any]): Boolean = {
+  def sameKey(a: IndexedSeq[Any], b: IndexedSeq[Any]): Boolean = {
     var i = 0
     while (i < a.length && sameValue(a(i), b(i))) i += 1
     i == a.length

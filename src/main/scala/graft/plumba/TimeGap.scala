@@ -16,8 +16,8 @@ import java.time.Duration
   * — `combine(fold(xs), fold(ys))` for an ordered split equals
   * `fold(xs ++ ys)` because the only cross-segment gap is
   * `ys.first − xs.last` — so the kernel is lawful on every mergeable
-  * path including the range-salted group fold. Not commutative:
-  * partials must combine in order (GroupOps does). */
+  * path including the range-partitioned group fold. Not commutative:
+  * partials must combine in order ([[Ranged]] does). */
 object TimeGap {
 
   /** Segment state: rows seen, first/last timestamps (epoch µs), max

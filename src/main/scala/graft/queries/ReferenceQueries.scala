@@ -71,11 +71,12 @@ object ReferenceQueries {
       .select("o_custkey", "o_orderkey", "hi")
   }
 
-  /** Per-customer running max through the RANGE-SALTED mergeable group
-    * scan ([[graft.plumba.GroupOps.groupScanMergeable]]): a hot
-    * customer's ordered scan spreads over order-date range buckets
-    * (segment folds → per-bucket seeds → parallel re-scan) instead of
-    * one task — the skew path for per-group scans at scale. Same
+  /** Per-customer running max through the RANGE-PARTITIONED mergeable
+    * group scan ([[graft.plumba.GroupOps.groupScanMergeable]]): a hot
+    * customer's ordered scan spreads over (customer, order-date) range
+    * partitions (edge partials → per-partition seeds → parallel
+    * re-scan) instead of one task — the skew path for per-group scans
+    * at scale. Same
     * oracle as the window form [[groupScanCummaxPerCust]]. */
   val groupScanCummaxSalted: Q = (s, dir) => {
     val o = Tables(s, dir, "orders")
@@ -343,10 +344,10 @@ object ReferenceQueries {
       .orderBy("user_id")
   }
 
-  /** Longest big-order streak per customer through the RANGE-SALTED
+  /** Longest big-order streak per customer through the RANGE-PARTITIONED
     * mergeable group fold ([[graft.plumba.GroupOps.groupFoldMergeable]]):
-    * a skewed customer's ordered fold spreads over order-date range
-    * buckets. Oracle: per-customer islands SQL. */
+    * a skewed customer's ordered fold spreads over (customer,
+    * order-date) range partitions. Oracle: per-customer islands SQL. */
   val groupFoldStreakPerCust: Q = (s, dir) => {
     val o = Tables(s, dir, "orders")
     graft.plumba.GroupOps.groupFoldMergeable(
@@ -357,7 +358,7 @@ object ReferenceQueries {
   }
 
   /** Per-customer MAX GAP between consecutive orders through the
-    * RANGE-SALTED mergeable group fold — the Datetime/Duration kernel
+    * RANGE-PARTITIONED mergeable group fold — the Datetime/Duration kernel
     * type surface (reference src/polars_numba/__init__.py:408–424;
     * date data in examples_fold.py:17) exercised END-TO-END, not just
     * unit-tested: the fold's value column is TimestampType (the kernel

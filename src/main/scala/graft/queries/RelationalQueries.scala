@@ -235,26 +235,28 @@ object RelationalQueries {
       .orderBy("o_orderkey")
   }
 
-  /** TWIN of [[asofLargeOrder]] through the RANGE-SALTED as-of join
-    * ([[graft.operators.AsofJoin.asofLastSalted]]): the time domain is
-    * cut into order-date buckets, per-(customer, bucket) payload
-    * partials carry seeds forward, and a hot customer's timeline runs
-    * as up to `buckets` parallel tasks instead of one — the skew path
-    * for as-of joins at scale. Shares the unsalted query's DuckDB
-    * `ASOF JOIN` oracle verbatim, pinning both paths to identical
-    * results.
+  /** TWIN of [[asofLargeOrder]] through the RANGE-PARTITIONED as-of join
+    * ([[graft.operators.AsofJoin.asofLastSalted]]): the tagged union is
+    * range-partitioned on (customer, order date), each partition's
+    * first run inherits the payload carried across its edge, and a hot
+    * customer's timeline runs as several parallel tasks instead of one
+    * — the skew path for as-of joins at scale. Shares the unsalted
+    * query's DuckDB `ASOF JOIN` oracle verbatim, pinning both paths to
+    * identical results.
     *
-    * WIN CASE MEASURED (round 12, `graft.AsofSkewProbe` —
-    * SCALE.md §asof-crossover): with one customer owning 90% of a
-    * 15M-row corpus the salted plan is 2.2× faster (11.1 s vs 24.4 s,
-    * buckets = cores); at 50% skew the two break even; on uniform keys
-    * the salt's three-stage plan is ~2.4× overhead. Verdict: prefer
+    * WIN CASE MEASURED on the retired three-stage bucket plan (round
+    * 12, `graft.AsofSkewProbe` — SCALE.md §asof-crossover): with one
+    * customer owning 90% of a 15M-row corpus the salted plan was 2.2×
+    * faster (11.1 s vs 24.4 s, buckets = cores); at 50% skew the two
+    * broke even; on uniform keys the three-stage plan was ~2.4×
+    * overhead. The crossover of the range-partitioned engine is not
+    * re-measured at that scale. Verdict: prefer
     * [[asofLargeOrder]]'s plain carry until a single key's timeline
     * approaches one task's capacity — past that the salted shape is
     * not just faster but the only one that FITS (the unsalted
     * straggler sorts the whole hot timeline in one task), which is the
-    * 100 TB case it exists for. Buckets derive from parallelism
-    * (`buckets = 0`): salted32 beat salted8 at every measured point. */
+    * 100 TB case it exists for. `buckets = 0` takes the session's
+    * shuffle partitions (adaptive execution may coalesce them). */
   val asofLargeOrderSalted: Q = (s, dir) => {
     val o = Tables(s, dir, "orders")
     val large = o.filter(col("o_totalprice") > 200000)

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -76,4 +78,31 @@ class AsofJoinSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(2) -> Option(r.get(3))).toMap
     assert(asof8 == asof)
   }
+
+  /** Keys that Scala `==` on a key vector gets wrong: byte arrays compare
+    * by reference, NaN is unequal to itself, and `Row.equals` compares a
+    * struct's nested arrays by reference. Each maps a key id to its value. */
+  private val oddKeys: Seq[(String, DataType, Int => Any)] = Seq(
+    ("binary", BinaryType, i => Array[Byte](i.toByte)),
+    ("double NaN", DoubleType, i => if (i == 1) Double.NaN else i.toDouble),
+    ("float NaN", FloatType, i => if (i == 1) Float.NaN else i.toFloat),
+    ("struct of binary", StructType(Seq(StructField("b", BinaryType), StructField("bs", ArrayType(BinaryType)))),
+      i => Row(Array[Byte](i.toByte), Seq(Array[Byte](i.toByte)))))
+
+  private def keyed(t: DataType, key: Int => Any, rows: Seq[(Int, Long, Long)], payload: String): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (k, ts, x) => Row(key(k), ts, x) }, 1),
+      StructType(Seq(StructField("k", t), StructField("t", LongType), StructField(payload, LongType))))
+
+  for ((name, t, key) <- oddKeys; (join, run) <- Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+      "asofLast" -> ((l, r) => AsofJoin.asofLast(l, r, Seq("k"), "t", Seq("price"))),
+      "asofLastSalted, one partition" -> ((l, r) => AsofJoin.asofLastSalted(l, r, Seq("k"), "t", Seq("price"))),
+      "asofLastSalted, three partitions" ->
+        ((l, r) => AsofJoin.asofLastSalted(l, r, Seq("k"), "t", Seq("price"), buckets = 3))))
+    test(s"$join carries the payload across equal $name keys") {
+      val right = keyed(t, key, Seq((1, 5L, 100L), (2, 25L, 200L)), "price")
+      val left = keyed(t, key, Seq((1, 10L, 1L), (1, 20L, 2L), (2, 30L, 3L)), "id")
+      val got = run(left, right).collect().map(r => r.getLong(2) -> Option(r.get(3))).toMap
+      assert(got == Map(1L -> Some(100L), 2L -> Some(100L), 3L -> Some(200L)))
+    }
 }

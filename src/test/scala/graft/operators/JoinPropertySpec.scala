@@ -41,8 +41,8 @@ class JoinPropertySpec extends AnyFunSuite {
 
   test("salted AsofJoin == unsalted on skewed data (one hot key, forced multi-bucket)") {
     // 90% of rows on one hot key — the exact shape the salt exists for;
-    // buckets forced > 1 so the per-bucket partial + seed-carry path
-    // genuinely runs (defaultParallelism could be 1 in CI)
+    // buckets forced > 1 so the edge pass and seed carry across range
+    // partitions genuinely run (adaptive coalescing could merge them)
     val genHot = Gen.listOf(Gen.zip(
       Gen.frequency(9 -> Gen.const(7), 1 -> Gen.choose(1, 4)), Gen.choose(0L, 30L)))
     check(Prop.forAll(genHot, genHot, Gen.oneOf(true, false), Gen.choose(2, 6)) {

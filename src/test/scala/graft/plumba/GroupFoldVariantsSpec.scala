@@ -31,8 +31,8 @@ class GroupFoldVariantsSpec extends AnyFunSuite {
   }
 
   test("groupFoldMergeable == groupFold for the ORDER-SENSITIVE streak kernel") {
-    // streak of value > 50 per user: order across range buckets matters —
-    // this is the test that would catch an unordered/hash salt.
+    // streak of value > 50 per user: order across range partitions
+    // matters — this is the test that would catch an unordered/hash salt.
     val k = Streak.kernel[Double](_ > 50.0)
     val salted = GroupOps.groupFoldMergeable(
         events, Seq("user_id"), Seq("value"), Seq("ts", "event_id"), k, DoubleType,
@@ -47,9 +47,9 @@ class GroupFoldVariantsSpec extends AnyFunSuite {
 
   test("groupFoldMergeable == groupFold when the ordering column contains NULLs") {
     // Spark's ascending sortWithinPartitions puts NULL ordering values
-    // FIRST; the range salt must route them to bucket 0 (a null `ordD < b`
-    // predicate would otherwise fall through to the LAST bucket and
-    // reorder an order-sensitive fold).
+    // FIRST; the range partitioning must keep them ahead of every
+    // non-null order value of their group, or an order-sensitive fold
+    // is reordered.
     import spark.implicits._
     val df = Seq(
       (1L, Option(3.0), 10.0), (1L, Option.empty[Double], 100.0),
@@ -99,9 +99,9 @@ class GroupFoldVariantsSpec extends AnyFunSuite {
   }
 
   test("mergeable paths with AUTO buckets (defaultParallelism-derived) == sequential") {
-    // buckets = 0 (the default) derives the count from the cluster and
-    // samples boundaries — results must be identical to sequential
-    // regardless of where the sampled boundaries land
+    // buckets = 0 (the default) range-sorts into the session's shuffle
+    // partitions with sampled boundaries — results must be identical to
+    // sequential regardless of where the sampled boundaries land
     val k = Streak.kernel[Double](_ > 50.0)
     val salted = GroupOps.groupFoldMergeable(
         events, Seq("user_id"), Seq("value"), Seq("ts", "event_id"), k, DoubleType,

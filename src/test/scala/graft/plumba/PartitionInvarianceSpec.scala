@@ -5,13 +5,16 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.operators.AsofJoin
 import graft.plumba.Kernel._
 
 /** Every plumba fold/scan shape returns the same answer whatever the
   * shuffle-partition count and the input partitioning, on a frame with
   * null value rows and null ordering values. The plain-Scala
   * [[Kernel.foldRows]] / [[Kernel.scanRows]] over the rows in
-  * (ord nulls first, id) order are the reference. */
+  * (ord nulls first, id) order are the reference. The range-partitioned
+  * shapes ([[Ranged]]) also match their sequential twins whatever the
+  * range-partition count and adaptive coalescing. */
 class PartitionInvarianceSpec extends AnyFunSuite {
   import PartitionInvarianceSpec._
 
@@ -83,6 +86,73 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     test(s"$name matches the reference under every shuffle and input partitioning") {
       for (((shuffle, input), df) <- frames)
         assert(run(df) == expected, s"shuffle partitions $shuffle, input partitions $input")
+    }
+  /** (g, ord, id, v) for the range-partitioned shapes: key 2 is hot (over
+    * 60% of the rows, sorted between smaller keys), key 9's values are
+    * all null, `ord` has ties and nulls, `v` has nulls. */
+  private def rangedRows(n: Int): Seq[Row] = (0 until n).map { i =>
+    val g = if (i % 5 < 3) 2L else if (i % 10 == 3) 9L else (i % 4).toLong
+    val ord = if (i % 17 == 0) null else Long.box((i * 37) % 60)
+    val v = if (g == 9 || i % 11 == 0) null else Long.box((i * 13) % 97)
+    Row(g, ord, i.toLong, v)
+  }
+  /** As-of right side over the same keys and times: unique (g, ord), one null time. */
+  private val quoteRows: Seq[Row] = (0 until 80)
+    .map(j => (Seq(2L, 2L, 2L, 0L, 1L, 3L, 9L)(j % 7), if (j == 5) None else Some(((j * 23) % 60).toLong), j.toLong))
+    .distinctBy(q => (q._1, q._2))
+    .map { case (g, t, q) => Row(g, t.map(Long.box).orNull, q) }
+  private val quoteSchema = StructType(Seq(
+    StructField("g", LongType, nullable = false), StructField("ord", LongType), StructField("q", LongType)))
+
+  /** (buckets, adaptive coalescing) → session; its shuffle partitions equal
+    * `buckets`, or 5 for `buckets = 0`, so the mergeable `collectScan`
+    * (which has no bucket count) is range-sorted into as many partitions. */
+  private def rangedSession(buckets: Int, coalesce: Boolean): SparkSession = {
+    val s = TestSpark.spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", (if (buckets > 0) buckets else 5).toString)
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce.toString)
+    s
+  }
+
+  /** Each range-partitioned shape with its sequential twin, over (events, quotes, buckets). */
+  private val rangedShapes: Seq[(String, (DataFrame, DataFrame, Int) => DataFrame, (DataFrame, DataFrame) => DataFrame)] =
+    Seq(
+      ("groupFoldMergeable",
+        (df, _, b) => GroupOps.groupFoldMergeable(df, G, V, O, polyMerge, LongType, buckets = b, emit = hash),
+        (df, _) => GroupOps.groupFold(df, G, V, O, polyMerge, LongType, emit = hash)),
+      ("groupScanMergeable",
+        (df, _, b) => GroupOps.groupScanMergeable(df, G, V, O, polyScanMerge, LongType, buckets = b),
+        (df, _) => GroupOps.groupScan(df, G, V, O, polyScan, LongType)),
+      ("asofLastSalted",
+        (df, q, b) => AsofJoin.asofLastSalted(df.select("g", "ord", "id"), q, G, "ord", Seq("q"), buckets = b),
+        (df, q) => AsofJoin.asofLast(df.select("g", "ord", "id"), q, G, "ord", Seq("q"))),
+      ("collectScan mergeable",
+        (df, _, _) => CollectOps.collectScan(df, V, O, polyScanMerge, LongType),
+        (df, _) => CollectOps.collectScan(df, V, O, polyScan, LongType)))
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("range partitions: the hot key straddles at least 3; more buckets than rows yield fewer partitions") {
+    val s = rangedSession(8, coalesce = false)
+    def parts(df: DataFrame, b: Int): Array[Seq[Long]] =
+      df.repartitionByRange(b, (G ++ O).map(df.col): _*).rdd.glom().map(_.map(_.getLong(0)).toSeq).collect()
+    val big = s.createDataFrame(s.sparkContext.parallelize(rangedRows(300), 3), schema)
+    for (b <- Seq(3, 8)) assert(parts(big, b).count(_.contains(2L)) >= 3, s"buckets $b")
+    // Spark's range partitioner caps the partition count at the distinct
+    // sort keys it sampled: 5 rows never make 8 partitions
+    val tiny = s.createDataFrame(s.sparkContext.parallelize(rangedRows(5), 1), schema)
+    assert(parts(tiny, 8).length < 8)
+  }
+
+  for ((name, ranged, twin) <- rangedShapes)
+    test(s"$name matches its sequential twin for every range-partition count and coalescing") {
+      for (buckets <- Seq(0, 1, 3, 8); coalesce <- Seq(true, false); n <- Seq(300, 5)) {
+        val s = rangedSession(buckets, coalesce)
+        val df = s.createDataFrame(s.sparkContext.parallelize(rangedRows(n), 3), schema)
+        val q = s.createDataFrame(s.sparkContext.parallelize(quoteRows, 2), quoteSchema)
+        val want = rows(twin(df, q))
+        assert(rows(ranged(df, q, buckets)) == want, s"buckets $buckets, coalescing $coalesce, $n rows")
+      }
     }
 }
 
