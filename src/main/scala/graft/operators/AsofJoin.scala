@@ -2,11 +2,11 @@ package graft.operators
 
 import scala.collection.immutable.ArraySeq
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.plumba.{Ranged, Runs}
+import graft.plumba.Ranged
 
 /** Distributed LEFT AS-OF JOIN — for every left row, the payload of the
   * LATEST right row with the same keys and time <= left time (or
@@ -14,19 +14,20 @@ import graft.plumba.{Ranged, Runs}
   * has no native operator for (point-in-time feature lookup, "state as
   * of event time").
   *
-  * Built on this library's own ordered-scan machinery instead of a join:
-  * tag both inputs, UNION them, shuffle ONCE on the keys, secondary-sort
-  * by (keys, time, side-flag, tie-breaks) and run one streaming pass
-  * that carries the last-seen right payload per key — exactly the
+  * Built on this library's own ordered walk ([[graft.plumba.Ranged]])
+  * instead of a join: tag both inputs, UNION them, lay the union out on
+  * the keys, sort each partition by (keys, time, side-flag, tie-breaks)
+  * and run one streaming pass that carries the last-seen right payload
+  * per key. [[asofLast]] uses the hash layout — exactly the
   * [[graft.plumba.GroupOps]] secondary-sort pattern. Cost is one shuffle
   * of |left| + |right| rows and a pipelined sort: no row explosion, no
   * per-key windowing over a joined product, and a group never has to fit
   * in memory. At 100 TB both sides co-partition on the keys; for a HOT
   * key (one instrument carrying a large fraction of all rows) use
-  * [[asofLastSalted]], which range-partitions on (keys, time) so that
-  * key's timeline spreads over many tasks. Keys compare with Spark's
-  * grouping equality (binary by content, NaN equal to NaN) through
-  * [[graft.plumba.Runs]].
+  * [[asofLastSalted]], the same walk on the range layout over (keys,
+  * time), so that key's timeline spreads over many tasks. Keys compare
+  * with Spark's grouping equality (binary by content, NaN equal to NaN)
+  * through [[graft.plumba.Runs]].
   *
   * Determinism contract: when several right rows share (keys, time), the
   * carried payload is the LAST in `rightTieBreak` order (supply
@@ -42,7 +43,7 @@ object AsofJoin {
 
   /** Where the carry reads a row of the tagged union: the side flag, the
     * right payload columns and the left output columns. */
-  private final case class Layout(flagIdx: Int, payloadIdx: Array[Int], leftOutIdx: Array[Int]) {
+  private final case class Tagged(flagIdx: Int, payloadIdx: Array[Int], leftOutIdx: Array[Int]) {
     private def isRight(r: Row): Boolean = r.getInt(flagIdx) != 1
     private def payload(r: Row): Array[Any] = payloadIdx.map(r.get)
 
@@ -68,63 +69,6 @@ object AsofJoin {
     }
   }
 
-  /** Shared prep: tagged union with identical layout from both sides —
-    * keys, time, leftRest (null on right rows), payloads (null on left
-    * rows), flag. Right rows flag 0 sort BEFORE left rows (flag 1) at
-    * equal time -> inclusive (<=); strict mode flags right 2 -> after. */
-  private case class Prep(
-      unioned: DataFrame,
-      keyIdx: Array[Int],
-      sortCols: Seq[String],
-      outSchema: StructType,
-      layout: Layout)
-
-  private def prep(
-      left: DataFrame,
-      right: DataFrame,
-      keyCols: Seq[String],
-      timeCol: String,
-      payloadCols: Seq[String],
-      rightTieBreak: Seq[String],
-      strict: Boolean,
-      outPrefix: String): Prep = {
-    require(keyCols.nonEmpty, "at least one join key is required")
-    require(payloadCols.nonEmpty, "at least one right payload column is required")
-    require(rightTieBreak.forall(payloadCols.contains),
-      "tie-break columns must be included in payloadCols (they ride the union as payload)")
-    val leftRest = left.columns.toSeq.filterNot(c => keyCols.contains(c) || c == timeCol)
-    val pName = payloadCols.map(c => s"__p_$c")
-    val rSchema = right.schema
-    val lSchema = left.schema
-
-    val rightFlag = if (strict) 2 else 0
-    val lp = left.select(
-      keyCols.map(col) ++ Seq(col(timeCol)) ++ leftRest.map(col) ++
-        payloadCols.zip(pName).map { case (c, n) =>
-          lit(null).cast(rSchema(c).dataType).as(n)
-        } :+ lit(1).as("__flag"): _*)
-    val rp = right.select(
-      keyCols.map(col) ++ Seq(col(timeCol)) ++ leftRest.map(c =>
-        lit(null).cast(lSchema(c).dataType).as(c)) ++
-        payloadCols.zip(pName).map { case (c, n) => col(c).as(n) } :+
-        lit(rightFlag).as("__flag"): _*)
-    val unioned = lp.union(rp)
-
-    val unionCols = unioned.columns.toSeq
-    val outSchema = StructType(
-      (keyCols ++ Seq(timeCol) ++ leftRest).map(c => lSchema(c)) ++
-        payloadCols.map(c => StructField(s"$outPrefix$c", rSchema(c).dataType, nullable = true)))
-    Prep(
-      unioned,
-      keyIdx = keyCols.map(unionCols.indexOf).toArray,
-      sortCols = (keyCols :+ timeCol :+ "__flag") ++ rightTieBreak.map(c => s"__p_$c"),
-      outSchema = outSchema,
-      layout = Layout(
-        flagIdx = unionCols.indexOf("__flag"),
-        payloadIdx = pName.map(unionCols.indexOf).toArray,
-        leftOutIdx = (keyCols ++ Seq(timeCol) ++ leftRest).map(unionCols.indexOf).toArray))
-  }
-
   def asofLast(
       left: DataFrame,
       right: DataFrame,
@@ -133,30 +77,22 @@ object AsofJoin {
       payloadCols: Seq[String],
       rightTieBreak: Seq[String] = Nil,
       strict: Boolean = false,
-      outPrefix: String = "asof_"): DataFrame = {
-    val p = prep(left, right, keyCols, timeCol, payloadCols, rightTieBreak, strict, outPrefix)
-    val (keyIdx, layout) = (p.keyIdx, p.layout)
-    p.unioned
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions(p.sortCols.map(col): _*)
-      .mapPartitions(it => Runs.runs(it, keyIdx).flatMap { case (_, run) => layout.carry(null, run) })(
-        Encoders.row(p.outSchema))
-  }
+      outPrefix: String = "asof_"): DataFrame =
+    join(left, right, keyCols, timeCol, payloadCols, rightTieBreak, strict, outPrefix)(_ => Ranged.Hashed(keyCols))
 
-  /** SKEW-RESISTANT as-of join — same semantics as [[asofLast]], on the
-    * range-partitioned two-pass engine ([[graft.plumba.Ranged]]): the
-    * tagged union is range-partitioned on (keys, time, side flag,
-    * tie-breaks), so a hot key's timeline spreads over several tasks
-    * instead of one. The carried state is the last right payload, and
-    * its merge is "the later stretch's payload wins if it has one": pass
-    * 1 reports each partition's first and last key run's last right
-    * payload, the driver chains them into the payload each partition's
-    * first run inherits, and pass 2 runs [[asofLast]]'s carry from that
-    * seed. The seed is exactly the carry state [[asofLast]] reaches at
-    * the partition edge, wherever the range boundaries fall, so equal
-    * times on both sides of an edge need no special routing. Null times
-    * sort first, as in the unsalted sort; the time column may be any
-    * orderable type.
+  /** SKEW-RESISTANT as-of join — same semantics as [[asofLast]], on
+    * [[graft.plumba.Ranged]]'s range layout: the tagged union is
+    * range-partitioned on (keys, time, side flag, tie-breaks), so a hot
+    * key's timeline spreads over several tasks instead of one. The
+    * carried state is the last right payload, and its merge is "the later
+    * stretch's payload wins if it has one": pass 1 reports each
+    * partition's last key run's last right payload, the driver chains
+    * them into the payload each partition's first run inherits, and pass
+    * 2 runs [[asofLast]]'s carry from that seed. The seed is exactly the
+    * carry state [[asofLast]] reaches at the partition edge, wherever the
+    * range boundaries fall, so equal times on both sides of an edge need
+    * no special routing. Null times sort first, as in the unsalted sort;
+    * the time column may be any orderable type.
     *
     * `buckets > 0` is the number of range partitions; `buckets <= 0`
     * (the default) takes the session's shuffle partitions, which
@@ -170,10 +106,52 @@ object AsofJoin {
       rightTieBreak: Seq[String] = Nil,
       strict: Boolean = false,
       outPrefix: String = "asof_",
-      buckets: Int = 0): DataFrame = {
-    val p = prep(left, right, keyCols, timeCol, payloadCols, rightTieBreak, strict, outPrefix)
-    val layout = p.layout
-    val law = Ranged.Law[Array[Any]](null, layout.lastRight, (l, r) => if (r != null) r else l)
-    Ranged(p.unioned, p.sortCols, p.keyIdx, buckets, law, p.outSchema)((_, from, run, _) => layout.carry(from, run))
+      buckets: Int = 0): DataFrame =
+    join(left, right, keyCols, timeCol, payloadCols, rightTieBreak, strict, outPrefix) { t =>
+      Ranged.Range(buckets, Ranged.Law[Array[Any]](t.lastRight, (l, r) => if (r != null) r else l))
+    }
+
+  /** Both joins: a tagged union with identical layout from both sides —
+    * keys, time, leftRest (null on right rows), payloads (null on left
+    * rows), flag — walked per key on `layout`. Right rows flag 0 sort
+    * BEFORE left rows (flag 1) at equal time -> inclusive (<=); strict
+    * mode flags right 2 -> after. Field types and indices come from the
+    * projections by position, and the left columns that are neither keys
+    * nor time match names under the session's case sensitivity, so names
+    * resolve as Spark resolves them. */
+  private def join(
+      left: DataFrame,
+      right: DataFrame,
+      keyCols: Seq[String],
+      timeCol: String,
+      payloadCols: Seq[String],
+      rightTieBreak: Seq[String],
+      strict: Boolean,
+      outPrefix: String)(layout: Tagged => Ranged.Layout[Array[Any]]): DataFrame = {
+    require(keyCols.nonEmpty, "at least one join key is required")
+    require(payloadCols.nonEmpty, "at least one right payload column is required")
+    require(rightTieBreak.forall(payloadCols.contains),
+      "tie-break columns must be included in payloadCols (they ride the union as payload)")
+    val head = left.select((keyCols :+ timeCol).map(col): _*).schema.fields
+    val caseSensitive = left.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
+    val leftRest = left.schema.fields.filterNot(f =>
+      (keyCols :+ timeCol).exists(c => if (caseSensitive) c == f.name else c.equalsIgnoreCase(f.name)))
+    val leftOut = head ++ leftRest
+    val pay = right.select(payloadCols.map(col): _*).schema.fields
+    val pName = payloadCols.map(c => s"__p_$c")
+
+    val lp = left.select((keyCols :+ timeCol).map(col) ++ leftRest.map(f => col(f.name)) ++
+      pay.zip(pName).map { case (f, n) => lit(null).cast(f.dataType).as(n) } :+ lit(1).as("__flag"): _*)
+    val rp = right.select((keyCols :+ timeCol).map(col) ++ leftRest.map(f => lit(null).cast(f.dataType).as(f.name)) ++
+      payloadCols.zip(pName).map { case (c, n) => col(c).as(n) } :+ lit(if (strict) 2 else 0).as("__flag"): _*)
+
+    val tagged = Tagged(
+      flagIdx = leftOut.length + pay.length,
+      payloadIdx = Array.range(leftOut.length, leftOut.length + pay.length),
+      leftOutIdx = leftOut.indices.toArray)
+    val outSchema = StructType(leftOut ++
+      pay.zip(payloadCols).map { case (f, c) => StructField(s"$outPrefix$c", f.dataType, nullable = true) })
+    Ranged(lp.union(rp), (keyCols :+ timeCol :+ "__flag") ++ rightTieBreak.map(c => s"__p_$c"),
+      keyCols.indices.toArray, layout(tagged), null, outSchema)((_, from, run, _) => tagged.carry(from, run))
   }
 }

@@ -2,7 +2,7 @@ package graft.plumba
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -31,14 +31,17 @@ import org.apache.spark.sql.types._
   *    else, and every streaming frame, counts as many partitions
   *    ([[onePartition]]). `collectScan` does not apply this rule.
   *  - Kernels declaring a [[Kernel.Merge]] run as *partial folds per
-  *    partition* on executors, combined in partition order on the driver —
-  *    O(#partitions) driver work, fully parallel, no row ever crosses to
-  *    the driver. This is the 100 TB path.
+  *    partition* on executors — [[Ranged]]'s edge pass with an empty key —
+  *    chained in partition order on the driver: O(#partitions) driver
+  *    work, fully parallel, no row ever crosses to the driver. This is
+  *    the 100 TB path. A lawful scan runs the same edge pass, then
+  *    re-scans each range partition from its prefix.
   *  - Non-mergeable kernels are inherently sequential (the reference's own
-  *    model: acc threads across 50k-row batches, :349). The parity path
+  *    model: acc threads across 50k-row batches, :349). The parity fold
   *    streams partitions to the driver one at a time via
   *    `toLocalIterator` — bounded memory, exactly the reference's
-  *    single-threaded streaming semantics. Prefer group-parallel
+  *    single-threaded streaming semantics; the parity scan walks
+  *    [[Ranged]]'s one-partition layout. Prefer group-parallel
   *    [[GroupOps]] at scale.
   */
 object CollectOps {
@@ -73,58 +76,48 @@ object CollectOps {
     require(valueCols.nonEmpty, "at least one folded column is required") // reference :272–273
     // every fold input below is projected to exactly `valueCols`
     val valIdx = valueCols.indices.toArray
-    lazy val kept = df.select((orderCols ++ valueCols).distinct.map(col): _*).na.drop(valueCols)
-    lazy val local = kept.sortWithinPartitions(orderCols.map(col): _*).select(valueCols.map(col): _*)
-    lazy val sorted = kept.orderBy(orderCols.map(col): _*).select(valueCols.map(col): _*)
-    // one partition needs no range sort: partition 0 holds every row in order
-    lazy val input = if (onePartition(local)) local else sorted
+    lazy val sorted = {
+      val kept = df.select((orderCols ++ valueCols).distinct.map(col): _*).na.drop(valueCols)
+      val local = kept.sortWithinPartitions(orderCols.map(col): _*).select(valueCols.map(col): _*)
+      // one partition needs no range sort: partition 0 holds every row in order
+      if (onePartition(local)) local else kept.orderBy(orderCols.map(col): _*).select(valueCols.map(col): _*)
+    }
     k.merge match {
-      case Some(m) if m.commutative =>
-        // Unsorted path: project + fold null policy only. Every partition
-        // folds from `neutral`; partials combine in any order onto `init`.
-        val proj = df.select(valueCols.distinct.map(col): _*)
-          .na.drop(valueCols.distinct)
-          .select(valueCols.map(col): _*)
-        proj.rdd
-          // tuple wrapper only for the ClassTag (A itself has none)
-          .mapPartitions(it => Iterator((0, Runs.fold(k, m.neutral, it, valIdx))))
-          .collect()
-          .foldLeft(k.init)((acc, p) => m.combine(acc, p._2))
       case Some(m) =>
-        // Executor-side partial folds; global sort range-partitions rows so
-        // partition index order IS row order. Combine partials in that order.
-        val partials = input.rdd
-          .mapPartitionsWithIndex { (idx, it) =>
-            Iterator((idx, Runs.fold(k, if (idx == 0) k.init else m.neutral, it, valIdx)))
-          }
-          .collect()
-          .sortBy(_._1)
-        if (partials.isEmpty) k.init
-        else partials.iterator.map(_._2).reduceLeft(m.combine)
+        // Executor-side partials on Ranged's edge pass (empty key), chained
+        // on the driver in partition order: a range sort makes partition
+        // order row order; a commutative merge folds the unsorted
+        // projection under the fold null policy.
+        val input =
+          if (m.commutative) df.select(valueCols.distinct.map(col): _*).na.drop(valueCols.distinct)
+            .select(valueCols.map(col): _*)
+          else sorted
+        Ranged.carry(input, k.init, Ranged.kernelLaw(k, m, valIdx))
       case None =>
         // Parity path: partitions stream to the driver in sorted order
         // through `toLocalIterator` and fold sequentially, like the reference.
-        Runs.fold(k, k.init, input.toLocalIterator().asScala, valIdx)
+        Runs.fold(k, k.init, sorted.toLocalIterator().asScala, valIdx)
     }
   }
 
   /** Ordered whole-frame scan → DataFrame of (orderCols..., resultName).
     *
     * Kernels declaring a [[Kernel.Merge]] law run the classic two-pass
-    * distributed prefix scan on [[Ranged]] with an empty key: range-sort
-    * once; pass 1 folds each partition's segment from `neutral` (skipped
-    * when the sort yields one partition); the driver prefix-combines the
-    * O(#partitions) partials in partition order; pass 2 re-scans every
-    * partition from its prefix over the same sorted RDD, with no
-    * checkpoint. Both passes key the seeds on the scanned partition's
-    * own index, so a downstream `coalesce` cannot misplace them. This
-    * is the parallel default for lawful kernels. A generic (possibly
-    * non-associative) prefix scan is inherently sequential, so it runs
-    * as a single sorted partition — reference parity (the reference is
-    * single-threaded too, README.md:57–62). For per-group scans use
-    * [[GroupOps.groupScan]] (parallel across groups); for partitioned
-    * associative scans [[WindowOps]]. Null rows emit null and do not
-    * advance the accumulator. */
+    * distributed prefix scan on [[Ranged]]'s range layout with an empty
+    * key: range-sort once; pass 1 folds each partition's segment from
+    * `neutral` (skipped when the sort yields one partition); the driver
+    * prefix-combines the O(#partitions) partials in partition order;
+    * pass 2 re-scans every partition from its prefix over the same
+    * sorted RDD, with no checkpoint. Both passes key the seeds on the
+    * scanned partition's own index, so a downstream `coalesce` cannot
+    * misplace them. This is the parallel default for lawful kernels. A
+    * generic (possibly non-associative) prefix scan is inherently
+    * sequential, so it runs on [[Ranged]]'s one-partition layout —
+    * reference parity (the reference is single-threaded too,
+    * README.md:57–62). For per-group scans use [[GroupOps.groupScan]]
+    * (parallel across groups); for partitioned associative scans
+    * [[WindowOps]]. Null rows emit null and do not advance the
+    * accumulator. */
   def collectScan[A](
       df: DataFrame,
       valueCols: Seq[String],
@@ -140,18 +133,10 @@ object CollectOps {
     val outSchema = StructType(
       orderCols.map(c => sel.schema(selCols.indexOf(c))) :+
         StructField(resultName, resultType, nullable = true))
-    val out = (r: Row, v: Any) => Row.fromSeq(Runs.values(r, ordIdx) :+ v)
-    k.merge match {
-      case Some(m) =>
-        // the key is empty: each partition is one run, seeded with the prefix before it
-        Ranged(sel, orderCols, Array.empty, 0, Ranged.kernelLaw(k, m, valIdx), outSchema) { (_, from, run, _) =>
-          Runs.scan(k, from, run, valIdx)(out)
-        }
-      case None =>
-        sel
-          .repartition(1)
-          .sortWithinPartitions(orderCols.map(col): _*)
-          .mapPartitions(it => Runs.scan(k, k.init, it, valIdx)(out))(Encoders.row(outSchema))
+    val layout = k.merge.fold[Ranged.Layout[A]](Ranged.One)(m => Ranged.Range(0, Ranged.kernelLaw(k, m, valIdx)))
+    // the key is empty: each partition is one run, seeded with the prefix before it
+    Ranged(sel, orderCols, Array.empty, layout, k.init, outSchema) { (_, from, run, _) =>
+      Runs.scan(k, from, run, valIdx)((r, v) => Row.fromSeq(Runs.values(r, ordIdx) :+ v))
     }
   }
 }

@@ -4,10 +4,10 @@ import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.Row
 
-/** The per-row and per-run mechanics every [[CollectOps]]/[[GroupOps]]
-  * partition body shares (and [[graft.operators.AsofJoin]]'s carry):
-  * reading a row's value vector, the fold and scan null policies around
-  * `step`, and splitting a sorted partition into contiguous key runs.
+/** The per-row and per-run mechanics of every ordered walk ([[Ranged]])
+  * and of the sequential [[CollectOps.collectFold]]: reading a row's value
+  * vector, the fold and scan null policies around `step`, and splitting a
+  * sorted partition into contiguous key runs.
   * The plain-Scala [[Kernel.foldRows]] / [[Kernel.scanRows]] stay the
   * independent reference these loops are tested against. */
 private[graft] object Runs {
@@ -79,9 +79,11 @@ private[graft] object Runs {
 
   /** Split a partition sorted on `keyIdx` into its contiguous runs of equal
     * key: `(key values, rows of the run)`. A run must be consumed before
-    * the next one is requested; whatever is left of it is skipped. */
+    * the next one is requested; whatever is left of it is skipped. With
+    * no key columns the partition is one run. */
   def runs(it: Iterator[Row], keyIdx: Array[Int]): Iterator[(IndexedSeq[Any], Iterator[Row])] =
-    new Iterator[(IndexedSeq[Any], Iterator[Row])] {
+    if (keyIdx.isEmpty) { if (it.hasNext) Iterator.single(IndexedSeq.empty -> it) else Iterator.empty }
+    else new Iterator[(IndexedSeq[Any], Iterator[Row])] {
       private val buf = it.buffered
       private var cur: Iterator[Row] = Iterator.empty
       def hasNext: Boolean = {

@@ -6460,7 +6460,13 @@ object LlmQueries {
          |FROM asg LEFT JOIN losers ON asg.vec_id = losers.vec_id
          |ORDER BY asg.vec_id""".stripMargin),
     // the skew fixture: rewrite → train on the REWRITTEN corpus →
-    // assign → per-cluster census → cap rule → pairing only below cap
+    // assign → per-cluster census → cap rule → pairing only below cap.
+    // `asg` is MATERIALIZED: DuckDB inlines a CTE into every reference,
+    // and `prs` joins `pa` (two references to `asg`, each the whole
+    // k-means chain) with itself, which ran out of 9 GB even at sf0.001.
+    // Each vector is cast to DOUBLE[] once, with its norm, and a pair's
+    // dot product is a list inner product, so no pair carries both
+    // embedding lists through an unnest.
     "dedup_semantic_skew" ->
       (s"""WITH skewsrc AS (SELECT vec_id,
          |    CASE WHEN vec_id % 3 = 0
@@ -6469,7 +6475,7 @@ object LlmQueries {
          |  FROM embeddings),
          |${kmeansTrainCtesFrom("skewsrc")},
          |""".stripMargin +
-       """asg AS (SELECT vec_id, c AS centroid, d AS dist2 FROM (
+       """asg AS MATERIALIZED (SELECT vec_id, c AS centroid, d AS dist2 FROM (
          |    SELECT vec_id, c, d, row_number() OVER (PARTITION BY vec_id ORDER BY d, c) AS rk
          |    FROM af) WHERE rk = 1),
          |oversize AS (SELECT centroid FROM (
@@ -6479,14 +6485,11 @@ object LlmQueries {
          |  WHERE oversize.centroid IS NULL),
          |prs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.dist2 AS da, b.dist2 AS db
          |  FROM pa a JOIN pa b ON a.centroid = b.centroid AND a.vec_id < b.vec_id),
-         |pv AS (SELECT p.id_a, p.id_b, ea.embedding AS va, eb.embedding AS vb
-         |  FROM prs p JOIN skewsrc ea ON ea.vec_id = p.id_a
-         |  JOIN skewsrc eb ON eb.vec_id = p.id_b),
-         |terms AS (SELECT id_a, id_b,
-         |    CAST(va[i+1] AS DOUBLE) AS xa, CAST(vb[i+1] AS DOUBLE) AS xb
-         |  FROM pv, unnest(range(0, len(va))) t(i)),
-         |dots AS (SELECT id_a, id_b, sum(xa*xb) AS dot, sum(xa*xa) AS na, sum(xb*xb) AS nb
-         |  FROM terms GROUP BY id_a, id_b),
+         |dv AS (SELECT vec_id, v, list_inner_product(v, v) AS n
+         |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM skewsrc)),
+         |dots AS (SELECT p.id_a, p.id_b, list_inner_product(ea.v, eb.v) AS dot, ea.n AS na, eb.n AS nb
+         |  FROM prs p JOIN dv ea ON ea.vec_id = p.id_a
+         |  JOIN dv eb ON eb.vec_id = p.id_b),
          |losers AS (SELECT DISTINCT CASE WHEN p.da < p.db OR (p.da = p.db AND p.id_a > p.id_b)
          |      THEN p.id_a ELSE p.id_b END AS vec_id
          |  FROM dots d JOIN prs p ON d.id_a = p.id_a AND d.id_b = p.id_b

@@ -1,15 +1,17 @@
 package graft.plumba
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.operators.AsofJoin
 import graft.plumba.Kernel._
+import graft.plumba.PartitionInvarianceSpec._
 import graft.plumba.syntax._
 
 /** Edge semantics through the full Spark paths: empty frames, all-null
-  * frames, single rows. */
+  * frames, single rows, column names in another case than the frame's. */
 class EdgeCaseSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -87,5 +89,46 @@ class EdgeCaseSpec extends AnyFunSuite {
     val s = one.collectScan(Seq("a"), Seq("idx"),
       Scan.of1[Double, Long](0.5)((acc, x) => acc + x), DoubleType)
     assert(s.collect().map(_.getDouble(1)).toSeq == Seq(7.5))
+  }
+
+  test("every ordered shape resolves column names case-insensitively, as Spark does") {
+    val s = spark.newSession()
+    val df = s.createDataFrame(s.sparkContext.parallelize((0 until 60).map { i =>
+      Row((i % 4).toLong, Long.box((i * 7) % 60), if (i % 9 == 0) null else Long.box(i.toLong))
+    }, 3), StructType(Seq(
+      StructField("g", LongType, nullable = false), StructField("ord", LongType), StructField("v", LongType))))
+    val quotes = s.createDataFrame(s.sparkContext.parallelize((0 until 20).map(j =>
+      Row((j % 4).toLong, Long.box(j * 3L + 1), j.toLong)), 2), StructType(Seq(
+      StructField("g", LongType, nullable = false), StructField("ord", LongType), StructField("q", LongType))))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    // each shape over (group key, order, value, payload) column names
+    val shapes: Seq[(String, (String, String, String, String) => Any)] = Seq(
+      "collectFold sequential" -> ((_, o, v, _) => CollectOps.collectFold(df, Seq(v), Seq(o), polySeq)),
+      "collectFold mergeable" -> ((_, o, v, _) => CollectOps.collectFold(df, Seq(v), Seq(o), polyMerge)),
+      "collectFold commutative" -> ((_, o, v, _) => CollectOps.collectFold(df, Seq(v), Seq(o), sumComm)),
+      "collectScan sequential" ->
+        ((_, o, v, _) => rows(CollectOps.collectScan(df, Seq(v), Seq(o), polyScan, LongType))),
+      "collectScan mergeable" ->
+        ((_, o, v, _) => rows(CollectOps.collectScan(df, Seq(v), Seq(o), polyScanMerge, LongType))),
+      "groupFold" ->
+        ((g, o, v, _) => rows(GroupOps.groupFold(df, Seq(g), Seq(v), Seq(o), polySeq, LongType, emit = hash))),
+      "groupFold commutative" ->
+        ((g, o, v, _) => rows(GroupOps.groupFold(df, Seq(g), Seq(v), Seq(o), sumComm, LongType))),
+      "groupScan" -> ((g, o, v, _) => rows(GroupOps.groupScan(df, Seq(g), Seq(v), Seq(o), polyScan, LongType))),
+      "groupFoldMergeable" -> ((g, o, v, _) =>
+        rows(GroupOps.groupFoldMergeable(df, Seq(g), Seq(v), Seq(o), polyMerge, LongType, emit = hash))),
+      "groupScanMergeable" -> ((g, o, v, _) =>
+        rows(GroupOps.groupScanMergeable(df, Seq(g), Seq(v), Seq(o), polyScanMerge, LongType))),
+      "asofLast" -> ((g, o, v, q) => rows(AsofJoin.asofLast(df, quotes, Seq(g), o, Seq(q)))),
+      "asofLastSalted" -> ((g, o, v, q) => rows(AsofJoin.asofLastSalted(df, quotes, Seq(g), o, Seq(q)))))
+    val failures = shapes.flatMap { case (name, run) =>
+      val want = run("g", "ord", "v", "q")
+      scala.util.Try(run("G", "ORD", "V", "Q")).toEither match {
+        case Right(got) if got == want => None
+        case Right(got) => Some(s"$name: $got != $want")
+        case Left(e) => Some(s"$name: ${e.getMessage.linesIterator.next()}")
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

@@ -13,8 +13,10 @@ import graft.plumba.Kernel._
   * null value rows and null ordering values. The plain-Scala
   * [[Kernel.foldRows]] / [[Kernel.scanRows]] over the rows in
   * (ord nulls first, id) order are the reference. The range-partitioned
-  * shapes ([[Ranged]]) also match their sequential twins whatever the
-  * range-partition count and adaptive coalescing. */
+  * shapes ([[Ranged]]) and their sequential twins also match a plain-Scala
+  * reference (per-key [[Kernel.foldRows]] / [[Kernel.scanRows]], a
+  * driver-side as-of loop) whatever the range-partition count and
+  * adaptive coalescing. */
 class PartitionInvarianceSpec extends AnyFunSuite {
   import PartitionInvarianceSpec._
 
@@ -114,21 +116,65 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     s
   }
 
-  /** Each range-partitioned shape with its sequential twin, over (events, quotes, buckets). */
-  private val rangedShapes: Seq[(String, (DataFrame, DataFrame, Int) => DataFrame, (DataFrame, DataFrame) => DataFrame)] =
+  /** The rows of `rs` in (ord nulls first, id) order. */
+  private def ordered(rs: Seq[Row]): Seq[Row] =
+    rs.sortBy(r => (!r.isNullAt(1), if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2)))
+  private def rangedVals(r: Row): IndexedSeq[Any] = IndexedSeq(r.get(3))
+  private def byKey(rs: Seq[Row]): Seq[Seq[Row]] = ordered(rs).groupBy(_.getLong(0)).values.toSeq
+  private def strings(rs: Seq[Row]): Seq[String] = rs.map(_.toString).sorted
+
+  /** Plain-Scala references over `rangedRows(n)`, as sorted row strings. */
+  private def rangedFoldRef[A](k: Fold[A], emit: A => Any)(n: Int): Seq[String] =
+    strings(byKey(rangedRows(n)).map(rs =>
+      Row(rs.head.getLong(0), emit(Kernel.foldRows(k, rs.iterator.map(rangedVals))))))
+  private def rangedScanRef[A](k: Scan[A], keyed: Boolean)(n: Int): Seq[String] = {
+    val runs = if (keyed) byKey(rangedRows(n)) else Seq(ordered(rangedRows(n)))
+    strings(runs.flatMap { rs =>
+      rs.zip(Kernel.scanRows(k, rs.iterator.map(rangedVals)).toSeq).map { case (r, out) =>
+        val tail = Seq(r.get(1), r.getLong(2), out.orNull)
+        Row.fromSeq(if (keyed) r.getLong(0) +: tail else tail)
+      }
+    })
+  }
+  /** Each left row (g, ord, id) gets `q` of the latest quote of its key at
+    * or before its time (strictly before with `strict`); a null time sorts
+    * before every other and equals another null. */
+  private def asofRef(strict: Boolean)(n: Int): Seq[String] = {
+    def time(r: Row): (Boolean, Long) = (!r.isNullAt(1), if (r.isNullAt(1)) 0L else r.getLong(1))
+    val before = Ordering[(Boolean, Long)].lt _
+    strings(rangedRows(n).map { l =>
+      val hits = quoteRows.filter(r => r.getLong(0) == l.getLong(0) &&
+        (before(time(r), time(l)) || (!strict && time(r) == time(l))))
+      Row(l.getLong(0), l.get(1), l.getLong(2), if (hits.isEmpty) null else hits.maxBy(time).getLong(2))
+    })
+  }
+
+  /** Each range-partitioned shape with its sequential twin, over (events,
+    * quotes, buckets), and the plain-Scala reference both must equal. */
+  private val rangedShapes: Seq[(String, (DataFrame, DataFrame, Int) => DataFrame, (DataFrame, DataFrame) => DataFrame,
+      Int => Seq[String])] =
     Seq(
       ("groupFoldMergeable",
         (df, _, b) => GroupOps.groupFoldMergeable(df, G, V, O, polyMerge, LongType, buckets = b, emit = hash),
-        (df, _) => GroupOps.groupFold(df, G, V, O, polyMerge, LongType, emit = hash)),
+        (df, _) => GroupOps.groupFold(df, G, V, O, polyMerge, LongType, emit = hash),
+        rangedFoldRef(polyMerge, hash)),
       ("groupScanMergeable",
         (df, _, b) => GroupOps.groupScanMergeable(df, G, V, O, polyScanMerge, LongType, buckets = b),
-        (df, _) => GroupOps.groupScan(df, G, V, O, polyScan, LongType)),
+        (df, _) => GroupOps.groupScan(df, G, V, O, polyScan, LongType),
+        rangedScanRef(polyScanMerge, keyed = true)),
       ("asofLastSalted",
         (df, q, b) => AsofJoin.asofLastSalted(df.select("g", "ord", "id"), q, G, "ord", Seq("q"), buckets = b),
-        (df, q) => AsofJoin.asofLast(df.select("g", "ord", "id"), q, G, "ord", Seq("q"))),
+        (df, q) => AsofJoin.asofLast(df.select("g", "ord", "id"), q, G, "ord", Seq("q")),
+        asofRef(strict = false)),
+      ("asofLastSalted strict",
+        (df, q, b) =>
+          AsofJoin.asofLastSalted(df.select("g", "ord", "id"), q, G, "ord", Seq("q"), strict = true, buckets = b),
+        (df, q) => AsofJoin.asofLast(df.select("g", "ord", "id"), q, G, "ord", Seq("q"), strict = true),
+        asofRef(strict = true)),
       ("collectScan mergeable",
         (df, _, _) => CollectOps.collectScan(df, V, O, polyScanMerge, LongType),
-        (df, _) => CollectOps.collectScan(df, V, O, polyScan, LongType)))
+        (df, _) => CollectOps.collectScan(df, V, O, polyScan, LongType),
+        rangedScanRef(polyScanMerge, keyed = false)))
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
@@ -144,14 +190,18 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     assert(parts(tiny, 8).length < 8)
   }
 
-  for ((name, ranged, twin) <- rangedShapes)
+  for ((name, ranged, twin, reference) <- rangedShapes)
     test(s"$name matches its sequential twin for every range-partition count and coalescing") {
-      for (buckets <- Seq(0, 1, 3, 8); coalesce <- Seq(true, false); n <- Seq(300, 5)) {
-        val s = rangedSession(buckets, coalesce)
-        val df = s.createDataFrame(s.sparkContext.parallelize(rangedRows(n), 3), schema)
-        val q = s.createDataFrame(s.sparkContext.parallelize(quoteRows, 2), quoteSchema)
-        val want = rows(twin(df, q))
-        assert(rows(ranged(df, q, buckets)) == want, s"buckets $buckets, coalescing $coalesce, $n rows")
+      for (n <- Seq(300, 5)) {
+        val want = reference(n)
+        for (buckets <- Seq(0, 1, 3, 8); coalesce <- Seq(true, false)) {
+          val s = rangedSession(buckets, coalesce)
+          val df = s.createDataFrame(s.sparkContext.parallelize(rangedRows(n), 3), schema)
+          val q = s.createDataFrame(s.sparkContext.parallelize(quoteRows, 2), quoteSchema)
+          val at = s"buckets $buckets, coalescing $coalesce, $n rows"
+          assert(rows(twin(df, q)) == want, s"twin, $at")
+          assert(rows(ranged(df, q, buckets)) == want, at)
+        }
       }
     }
 }

@@ -8,11 +8,13 @@ import graft.TestSpark
 import graft.operators.AsofJoin
 import graft.plumba.PartitionInvarianceSpec._
 
-/** The range-partitioned two-pass engine ([[Ranged]]) runs a fixed number
-  * of Spark jobs and keeps nothing: a range sort (sampling job + shuffle
-  * map job), pass 1 only when the sort yields more than one partition,
-  * and the result job. No call registers a persisted RDD (an eager
-  * `localCheckpoint` would). */
+/** The ordered engine ([[Ranged]]) runs a fixed number of Spark jobs and
+  * keeps nothing. On range partitions: a range sort (sampling job +
+  * shuffle map job), pass 1 only when the sort yields more than one
+  * partition, and the result job. No call registers a persisted RDD (an
+  * eager `localCheckpoint` would). On one partition or hash partitions:
+  * no job while the frame is built, then the exchange's map job and the
+  * result job. */
 class RangedSpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(
@@ -70,17 +72,50 @@ class RangedSpec extends AnyFunSuite {
     }
   }
 
+  /** The shapes on the one-partition and hash layouts. */
+  private val lazyShapes: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
+    "groupFold" -> ((df, _) => GroupOps.groupFold(df, Seq("g"), Seq("v"), Seq("ord"), polySeq, LongType, emit = hash)),
+    "groupScan" -> ((df, _) => GroupOps.groupScan(df, Seq("g"), Seq("v"), Seq("ord"), polyScan, LongType)),
+    "asofLast" -> ((df, q) => AsofJoin.asofLast(df, q, Seq("g"), "ord", Seq("q"))),
+    "collectScan sequential" -> ((df, _) => CollectOps.collectScan(df, Seq("v"), Seq("ord"), polyScan, LongType)))
+
+  for ((name, run) <- lazyShapes)
+    test(s"$name runs no job while it is built and 2 Spark jobs end to end") {
+      // the exchange's map job and the result job; building stays lazy
+      val (df, q) = inputs(TestSpark.spark.newSession())
+      val (built, buildJobs) = TestSpark.jobsDuring(run(df, q))
+      assert(buildJobs.isEmpty, s"${buildJobs.size} jobs while built")
+      assert(TestSpark.jobsDuring(built.collect())._2.size == 2)
+    }
+
+  test("collectFold over three input partitions runs 3 jobs mergeable, 1 commutative, 3 sequential") {
+    val (df, _) = inputs(TestSpark.spark.newSession())
+    val counts = for ((name, k) <- Seq("mergeable" -> polyMerge, "commutative" -> sumComm, "sequential" -> polySeq))
+      yield name -> TestSpark.jobsDuring(CollectOps.collectFold(df, Seq("v"), Seq("ord"), k))._2.size
+    assert(counts == Seq("mergeable" -> 3, "commutative" -> 1, "sequential" -> 3))
+  }
+
   test("the driver chain skips empty partitions and carries a key through a one-run partition") {
     // a running sum; binary keys compare by content
-    val law = Ranged.Law[Long](0L, _ => 0L, _ + _)
+    val law = Ranged.Law[Long](_ => 0L, _ + _)
     def key(b: Int): IndexedSeq[Any] = IndexedSeq(Array[Byte](b.toByte))
     def edges(first: Int, last: Int, runs: Int, lastAcc: Long) =
       Some(Ranged.Edges(key(first), key(last), runs, AccCodec.ser(lastAcc)))
-    val seeds = Ranged.chain(Array(
-      edges(1, 1, 1, 5L), None, edges(1, 2, 2, 4L), None, edges(2, 2, 1, 7L), edges(2, 3, 3, 6L), None), law)
+    val (seeds, carry) = Ranged.chain(Array(
+      edges(1, 1, 1, 5L), None, edges(1, 2, 2, 4L), None, edges(2, 2, 1, 7L), edges(2, 3, 3, 6L), None), 0L, law)
     val got = seeds.toSeq.map(s => (Option(s.acc).map(AccCodec.deser[Long]), s.runs, s.lastContinues))
     assert(got == Seq(
       (None, 1, true), (None, 0, false), (Some(5L), 2, true), (None, 0, false), (Some(4L), 1, true),
       (Some(11L), 3, false), (None, 0, false)))
+    // the last partition's last run (key 3) starts inside it
+    assert(carry == 6L)
+  }
+
+  test("over an empty key the driver chain's final carry is init combined with every partial in order") {
+    // string concatenation: order-sensitive, so a misplaced partial shows
+    val law = Ranged.Law[String](_ => "", _ + _)
+    def edges(acc: String) = Some(Ranged.Edges(IndexedSeq.empty, IndexedSeq.empty, 1, AccCodec.ser(acc)))
+    assert(Ranged.chain(Array(None, edges("a"), None, edges("bc"), edges("d")), ">", law)._2 == ">abcd")
+    assert(Ranged.chain(Array[Option[Ranged.Edges]](None, None), ">", law)._2 == ">")
   }
 }
