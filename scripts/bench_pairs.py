@@ -1,17 +1,16 @@
 #!/usr/bin/env python3
 """Alternating parent/change pairs of the benchmark, with a summary.
 
-    python3 scripts/bench_pairs.py --workload fold_scan --pairs 10 \
-        [--base HEAD~1] [--head HEAD] [--base-dir DIR] [--head-dir DIR] \
-        [--seconds 10] [--first-seed 1] [--work DIR] [--out FILE]
+    python3 scripts/bench_pairs.py --workload fold_scan --base REV \
+        [--pairs 10] [--first-seed 1] [--work DIR] [--out FILE]
 
-Each side runs from its own checkout: --base-dir/--head-dir name an
-existing one (`--head-dir .` benches the working tree), otherwise the
-revision is exported with `git archive` into <work>/<rev>. Both checkouts
-build the benchmark (perfbench/build.py) before the first pair, so no
-timed run pays for a build. Pair i runs `python3 perfbench/run.py
---workload W --seed S --seconds T --trace 0` on both sides with seed
-S = first-seed + i; odd seeds run the parent first, even seeds the change.
+The parent side is revision REV, exported once with `git archive` into
+<work>/<commit>; the change side is this working tree. Both build the
+benchmark (perfbench/build.py) before the first pair, so no timed run
+pays for a build. Pair i runs `python3 perfbench/run.py --workload W
+--seed S --seconds T --trace 0` on both sides with seed S = first-seed + i
+and T the `run_seconds` of BENCHMARK.json; odd seeds run the parent
+first, even seeds the change.
 
 For every end-to-end metric of BENCHMARK.json the summary prints each
 side's median and quartiles, the pairs the change won, whether the
@@ -88,20 +87,16 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=["fold_scan", "pipeline"])
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--base", default="HEAD~1", help="parent revision (ignored with --base-dir)")
-    ap.add_argument("--head", default="HEAD", help="change revision (ignored with --head-dir)")
-    ap.add_argument("--base-dir")
-    ap.add_argument("--head-dir")
-    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--base", required=True, help="parent revision; the change side is the working tree")
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--work", default=os.path.join(ROOT, ".bench_pairs"))
     ap.add_argument("--out", help="also write every run's metrics and the summary here as JSON")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
-        spec = json.load(fh)["end_to_end"]
-    sides = {"parent": os.path.abspath(a.base_dir) if a.base_dir else checkout(a.base, a.work),
-             "change": os.path.abspath(a.head_dir) if a.head_dir else checkout(a.head, a.work)}
+        bench = json.load(fh)
+    spec, seconds = bench["end_to_end"], bench["run_seconds"]
+    sides = {"parent": checkout(a.base, a.work), "change": ROOT}
     for name, cwd in sides.items():
         print(f"building {name} in {cwd}", flush=True)
         subprocess.run([sys.executable, "perfbench/build.py"], cwd=cwd, check=True, stdout=subprocess.DEVNULL)
@@ -113,7 +108,7 @@ def main() -> int:
         got = {}
         for side in order:
             t0 = time.time()
-            got[side] = run(sides[side], a.workload, seed, a.seconds)
+            got[side] = run(sides[side], a.workload, seed, seconds)
             failed += got[side] is None
             shown = "failed" if got[side] is None else " ".join(f"{k}={v:.4g}" for k, v in got[side].items())
             print(f"seed {seed} {side:6s} {time.time() - t0:5.0f}s {shown}", flush=True)

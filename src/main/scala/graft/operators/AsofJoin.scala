@@ -47,12 +47,12 @@ object AsofJoin {
     private def isRight(r: Row): Boolean = r.getInt(flagIdx) != 1
     private def payload(r: Row): Array[Any] = payloadIdx.map(r.get)
 
-    /** The last right payload of `run` (last-in-order wins), or null when
-      * it holds no right row. */
-    def lastRight(run: Iterator[Row]): Array[Any] = {
+    /** The last right payload of `run` (last-in-order wins), or `from`
+      * when it holds no right row. */
+    def lastRight(from: Array[Any], run: Iterator[Row]): Array[Any] = {
       var last: Row = null
       run.foreach(r => if (isRight(r)) last = r)
-      if (last == null) null else payload(last)
+      if (last == null) from else payload(last)
     }
 
     /** Walk one key's run carrying `from`: a right row replaces the
@@ -108,7 +108,7 @@ object AsofJoin {
       outPrefix: String = "asof_",
       buckets: Int = 0): DataFrame =
     join(left, right, keyCols, timeCol, payloadCols, rightTieBreak, strict, outPrefix) { t =>
-      Ranged.Range(buckets, Ranged.Law[Array[Any]](t.lastRight, (l, r) => if (r != null) r else l))
+      Ranged.Range(buckets, Ranged.Law[Array[Any]](null, t.lastRight, (l, r) => if (r != null) r else l))
     }
 
   /** Both joins: a tagged union with identical layout from both sides —
@@ -117,8 +117,7 @@ object AsofJoin {
     * BEFORE left rows (flag 1) at equal time -> inclusive (<=); strict
     * mode flags right 2 -> after. Field types and indices come from the
     * projections by position, and the left columns that are neither keys
-    * nor time match names under the session's case sensitivity, so names
-    * resolve as Spark resolves them. */
+    * nor time come from `drop`, so names resolve as Spark resolves them. */
   private def join(
       left: DataFrame,
       right: DataFrame,
@@ -133,9 +132,7 @@ object AsofJoin {
     require(rightTieBreak.forall(payloadCols.contains),
       "tie-break columns must be included in payloadCols (they ride the union as payload)")
     val head = left.select((keyCols :+ timeCol).map(col): _*).schema.fields
-    val caseSensitive = left.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
-    val leftRest = left.schema.fields.filterNot(f =>
-      (keyCols :+ timeCol).exists(c => if (caseSensitive) c == f.name else c.equalsIgnoreCase(f.name)))
+    val leftRest = left.drop((keyCols :+ timeCol): _*).schema.fields
     val leftOut = head ++ leftRest
     val pay = right.select(payloadCols.map(col): _*).schema.fields
     val pName = payloadCols.map(c => s"__p_$c")

@@ -104,8 +104,9 @@ object CollectOps {
     *
     * Kernels declaring a [[Kernel.Merge]] law run the classic two-pass
     * distributed prefix scan on [[Ranged]]'s range layout with an empty
-    * key: range-sort once; pass 1 folds each partition's segment from
-    * `neutral` (skipped when the sort yields one partition); the driver
+    * key: range-sort once; pass 1 folds each partition's segment, from
+    * `init` in partition 0 and from `neutral` as a partial in every later
+    * one (skipped when the sort yields one partition); the driver
     * prefix-combines the O(#partitions) partials in partition order;
     * pass 2 re-scans every partition from its prefix over the same
     * sorted RDD, with no checkpoint. Both passes key the seeds on the

@@ -51,7 +51,7 @@ object GroupOps {
     * [[Kernel.Merge]], on [[Ranged]]'s range layout: rows are
     * range-partitioned on (keys, order), so a hot group's ordered run
     * spreads over several partitions instead of one task. Pass 1 folds
-    * each partition's edge runs from `neutral`; the driver chains them
+    * each partition's last run; the driver chains these edges
     * into a seed for every partition's first run; pass 2 folds each
     * group from its seed and emits it in the partition where it ends.
     * Lawful only because the kernel declared mergeability (never applied

@@ -23,13 +23,12 @@ import org.apache.spark.sql.types.StructType
   * layout, one set of shuffle files, no checkpoint.
   *  1. Only when the RDD has more than one partition: each partition
   *     reports its edges — first key, last key, run count, and the last
-  *     run's partial folded from the neutral state (as [[AccCodec]]
-  *     bytes); a partition's first run needs no partial of its own, as
-  *     it is either the last run too or ends inside the partition. The
-  *     driver chains these O(partitions) edges into a seed for each
-  *     partition's first run and a flag saying whether the partition's
-  *     last run continues into the next non-empty partition. Keys
-  *     compare with [[Runs]]' grouping equality.
+  *     run's state as [[AccCodec]] bytes: folded from `init` where the
+  *     sequential walk starts it ([[startsFresh]]), else from the neutral
+  *     state as a partial. The driver chains these O(partitions) edges
+  *     into a seed for each partition's first run and a flag saying
+  *     whether the partition's last run continues into the next
+  *     non-empty partition. Keys compare with [[Runs]]' grouping equality.
   *  2. The returned DataFrame: each partition walks its key runs, the
   *     first one from its seed and every other from `init`.
   *
@@ -38,15 +37,15 @@ import org.apache.spark.sql.types.StructType
   * partition edge. The partition count only affects balance. */
 private[graft] object Ranged {
 
-  /** How a range-partitioned walk stitches its partition edges: `partial`
-    * folds one stretch of a key run from the neutral state, and `combine`
-    * appends a later stretch's partial to an earlier state. */
-  final case class Law[A](partial: Iterator[Row] => A, combine: (A, A) => A)
+  /** How a range-partitioned walk stitches its partition edges: `fold`
+    * folds one stretch of a key run from a state (`neutral` for a partial),
+    * and `combine` appends a later stretch's partial to an earlier state. */
+  final case class Law[A](neutral: A, fold: (A, Iterator[Row]) => A, combine: (A, A) => A)
 
-  /** The law of a mergeable kernel: partials fold from `neutral` under
-    * the fold null policy and combine with its merge. */
+  /** The law of a mergeable kernel: it folds under the fold null policy
+    * and combines with its merge. */
   def kernelLaw[A](k: Kernel.Stepper[A], m: Kernel.Merge[A], valIdx: Array[Int]): Law[A] =
-    Law(Runs.fold(k, m.neutral, _, valIdx), m.combine)
+    Law(m.neutral, Runs.fold(k, _, _, valIdx), m.combine)
 
   /** Where a walk's rows go; only [[Range]] splits a key run, so only it
     * carries the edge law that stitches the pieces. */
@@ -88,7 +87,7 @@ private[graft] object Ranged {
           else df.orderBy(order: _*)
         val rows = sorted.rdd
         val seeds =
-          if (rows.getNumPartitions <= 1) Array.empty[Seed] else chain(edges(rows, keyIdx, law), init, law)._1
+          if (rows.getNumPartitions <= 1) Array.empty[Seed] else chain(edges(rows, keyIdx, init, law), init, law)._1
         df.sparkSession.createDataFrame(rows.mapPartitionsWithIndex { (i, it) =>
           walk(it, keyIdx, init, if (i < seeds.length) seeds(i) else Unseeded, body)
         }, outSchema)
@@ -97,8 +96,9 @@ private[graft] object Ranged {
 
   /** The state a sequential walk of every row of `df` ends in, each of its
     * partitions being the next stretch of one run: pass 1 with an empty
-    * key, then the chain's final carry. */
-  def carry[A](df: DataFrame, init: A, law: Law[A]): A = chain(edges(df.rdd, Array.empty, law), init, law)._2
+    * key, then the chain's final carry. Partition 0 folds from `init`, so
+    * over one partition the result is the sequential fold's, bit for bit. */
+  def carry[A](df: DataFrame, init: A, law: Law[A]): A = chain(edges(df.rdd, Array.empty, init, law), init, law)._2
 
   /** Walk one partition's key runs, the first from the seed's state. */
   private def walk[A](it: Iterator[Row], keyIdx: Array[Int], init: A, s: Seed,
@@ -111,8 +111,14 @@ private[graft] object Ranged {
     }
   }
 
+  /** Whether partition `i`'s `runs`-th run starts where the sequential
+    * walk starts it from `init`: inside the partition, or at the start of
+    * partition 0. A partition's first run elsewhere may go on from an
+    * earlier partition. */
+  private def startsFresh(i: Int, runs: Int): Boolean = i == 0 || runs > 1
+
   /** Pass 1: the edges of every partition, indexed by partition (None when empty). */
-  private def edges[A](rows: RDD[Row], keyIdx: Array[Int], law: Law[A]): Array[Option[Edges]] = {
+  private def edges[A](rows: RDD[Row], keyIdx: Array[Int], init: A, law: Law[A]): Array[Option[Edges]] = {
     val out = Array.fill[Option[Edges]](rows.getNumPartitions)(None)
     rows.mapPartitionsWithIndex { (i, it) =>
       var first, last: IndexedSeq[Any] = null
@@ -122,8 +128,8 @@ private[graft] object Ranged {
       Runs.runs(it, keyIdx).foreach { case (k, run) =>
         if (n == 0) first = k
         last = k
-        lastAcc = law.partial(run)
         n += 1
+        lastAcc = law.fold(if (startsFresh(i, n)) init else law.neutral, run)
       }
       if (n == 0) Iterator.empty else Iterator(i -> Edges(first, last, n, AccCodec.ser(lastAcc)))
     }.collect().foreach { case (i, e) => out(i) = Some(e) }
@@ -144,8 +150,9 @@ private[graft] object Ranged {
       val from = if (continues) carry else init
       if (continues) seeds(prev) = seeds(prev).copy(lastContinues = true)
       seeds(i) = Seed(if (continues) AccCodec.ser(from) else null, e.runs, lastContinues = false)
-      // a partition of one run extends the carried state; otherwise its last run starts inside it
-      carry = law.combine(if (e.runs == 1) from else init, AccCodec.deser[A](e.lastAcc))
+      // a last run folded from init is already the state; a partial extends the carried one
+      val last = AccCodec.deser[A](e.lastAcc)
+      carry = if (startsFresh(i, e.runs)) last else law.combine(from, last)
       prev = i
     }
     (seeds, carry)

@@ -97,7 +97,7 @@ class RangedSpec extends AnyFunSuite {
 
   test("the driver chain skips empty partitions and carries a key through a one-run partition") {
     // a running sum; binary keys compare by content
-    val law = Ranged.Law[Long](_ => 0L, _ + _)
+    val law = Ranged.Law[Long](0L, (acc, _) => acc, _ + _)
     def key(b: Int): IndexedSeq[Any] = IndexedSeq(Array[Byte](b.toByte))
     def edges(first: Int, last: Int, runs: Int, lastAcc: Long) =
       Some(Ranged.Edges(key(first), key(last), runs, AccCodec.ser(lastAcc)))
@@ -113,9 +113,11 @@ class RangedSpec extends AnyFunSuite {
 
   test("over an empty key the driver chain's final carry is init combined with every partial in order") {
     // string concatenation: order-sensitive, so a misplaced partial shows
-    val law = Ranged.Law[String](_ => "", _ + _)
+    val law = Ranged.Law[String]("", (acc, _) => acc, _ + _)
     def edges(acc: String) = Some(Ranged.Edges(IndexedSeq.empty, IndexedSeq.empty, 1, AccCodec.ser(acc)))
     assert(Ranged.chain(Array(None, edges("a"), None, edges("bc"), edges("d")), ">", law)._2 == ">abcd")
+    // partition 0 reports the state it folded from init, not a partial
+    assert(Ranged.chain(Array(edges(">a"), edges("b")), ">", law)._2 == ">ab")
     assert(Ranged.chain(Array[Option[Ranged.Edges]](None, None), ">", law)._2 == ">")
   }
 }

@@ -47,6 +47,19 @@ class SinglePartitionPathSpec extends AnyFunSuite {
       } finally cached.unpersist()
     }
 
+  test("collectFold mergeable on one partition folds from init like the sequential fold, bit for bit") {
+    // a Double sum whose rounding depends on grouping: ((1 + 1e16) - 1e16) + 0.5 is 0.5,
+    // while 1 + ((0 + 1e16 - 1e16) + 0.5) is 1.5
+    val sum = Kernel.Fold[Double](1.0, (a, vs) => a + vs(0).asInstanceOf[Double],
+      merge = Some(Kernel.Merge(0.0, _ + _)))
+    val df = session.createDataFrame(session.sparkContext.parallelize(
+      Seq(Row(2L, 0.5), Row(0L, 1e16), Row(1L, -1e16)), 1),
+      StructType(Seq(StructField("ts", LongType), StructField("v", DoubleType))))
+    val expected = Kernel.foldRows(sum, Iterator(IndexedSeq(1e16), IndexedSeq(-1e16), IndexedSeq(0.5)))
+    assert(expected == 0.5)
+    assert(CollectOps.collectFold(df, V, O, sum) == expected)
+  }
+
   test("collectFold mergeable on five partitions still folds range partials in parallel") {
     val (result, jobs) = TestSpark.jobsDuring(CollectOps.collectFold(onePartition.repartition(5), V, O, polyMerge))
     assert(result == Kernel.foldRows(polyMerge, inOrder.iterator))
