@@ -422,7 +422,7 @@ object Dedup {
     * Output: (id_a, id_b, est_jaccard, hamming). */
   /** The composite band-key explosion behind [[crossModalPairs]],
     * factored out so the day-2 INCREMENTAL deploy can persist the same
-    * keys as a bucketed index ([[graft.queries.BucketCache]] pattern)
+    * keys as a bucketed index (an [[graft.queries.Artifacts]] entry)
     * and a streaming ingest can band each arriving pair for the probe
     * join — all expression-based, so it runs unchanged on a streaming
     * DataFrame. Output: (id, tsig, isig, bucket), `textBands·bitBands`

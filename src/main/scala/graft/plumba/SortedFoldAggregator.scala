@@ -64,10 +64,10 @@ object SortedFoldAggregator {
     *
     * NULL ordering values sort FIRST (the library-wide policy: groupFold's
     * ascending sort is nulls-first, the mergeable paths route null order
-    * to bucket 0): each ord key is coalesced to Long.MinValue, which
-    * keeps the packed array null-free for the encoder. (A genuine
-    * Long.MinValue key ties with null — the one corner this encoding
-    * collapses.) */
+    * to bucket 0): each ord key packs as a (null flag, value) pair —
+    * (0, 0) for null, (1, key) otherwise — which keeps the packed array
+    * null-free for the encoder and orders a null before every key,
+    * Long.MinValue included. */
   def foldColumn[A](
       ordCols: Seq[Column],
       valueCols: Seq[(Column, DataType)],
@@ -85,8 +85,11 @@ object SortedFoldAggregator {
     val allNotNull = valueCols.map(_._1.isNotNull).reduce(_ && _)
     // one argument per top-level field of the input encoder's schema
     agg(
-      functions.array(ordCols.map(c =>
-        functions.coalesce(c.cast("long"), functions.lit(Long.MinValue))): _*),
+      functions.array(ordCols.flatMap { c =>
+        val key = c.cast("long")
+        Seq(functions.when(key.isNull, functions.lit(0L)).otherwise(functions.lit(1L)),
+          functions.coalesce(key, functions.lit(0L)))
+      }: _*),
       functions.when(allNotNull,
         functions.struct(valueCols.zipWithIndex.map { case ((c, dt), i) => c.cast(dt).as(s"v$i") }: _*)))
       .getField("value")

@@ -282,15 +282,13 @@ object RelationalQueries {
     * sides' shuffles. Oracle: plain join SQL — bucketing changes layout,
     * never results. */
   val bucketedJoinRevenue: Q = (s, dir) => {
-    val Seq(liTable, oTable) = BucketCache.tables(s, s"rev:$dir", { (tag, tmp) =>
-      Tables(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
-        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"$tmp/li").mode("overwrite").saveAsTable(s"graft_li_b_$tag")
-      Tables(s, dir, "orders").select("o_orderkey", "o_orderdate")
-        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"$tmp/o").mode("overwrite").saveAsTable(s"graft_o_b_$tag")
-      Seq(s"graft_li_b_$tag", s"graft_o_b_$tag")
-    })
+    val li = Tables(s, dir, "lineitem")
+    val o = Tables(s, dir, "orders")
+    val (liTable, oTable) = Artifacts.getOrBuild("rev", Seq(li, o)) { a =>
+      (a.bucketedTable("graft_li_b", "l_orderkey",
+        li.select("l_orderkey", "l_extendedprice", "l_discount")),
+       a.bucketedTable("graft_o_b", "o_orderkey", o.select("o_orderkey", "o_orderdate")))
+    }
     s.table(liTable)
       .join(s.table(oTable).hint("merge"),
         col("l_orderkey") === col("o_orderkey"))

@@ -47,15 +47,12 @@ object StreamingQueries {
     * ≈ 10%), which is the substance the gates exercise, not overhead
     * to shave. Production callers own their real, durable checkpoint
     * location — this base only governs the catalog's gate streams
-    * (unique UUID query names ⇒ no collisions); removed at JVM exit. */
+    * (unique UUID query names ⇒ no collisions); removed at JVM exit
+    * ([[Artifacts.tempDir]]). */
   private lazy val checkpointBase: Option[String] = {
     val shm = new java.io.File("/dev/shm")
     if (!shm.isDirectory || !shm.canWrite) None
-    else {
-      val d = java.nio.file.Files.createTempDirectory(shm.toPath, "graft_ckpt_").toFile
-      sys.addShutdownHook(rmTree(d))
-      Some(d.getAbsolutePath)
-    }
+    else Some(Artifacts.tempDir("graft_ckpt_", Some(shm.toPath)).toString)
   }
 
   /** `noDataBatches = false` additionally disables Spark's trailing
@@ -137,7 +134,7 @@ object StreamingQueries {
     } finally {
       // drain() already materialized the result via localCheckpoint, so
       // the sink files are safe to remove before returning
-      for (d <- Seq(ckpt, outDir)) rmTree(d.toFile)
+      for (d <- Seq(ckpt, outDir)) Artifacts.deleteTree(d)
     }
   }
 
@@ -184,7 +181,7 @@ object StreamingQueries {
             expr("bit_xor(h)").as("content_xor"))
           .orderBy("disposition", "source"))
     } finally {
-      for (d <- Seq(ckpt, outDir)) rmTree(d.toFile)
+      for (d <- Seq(ckpt, outDir)) Artifacts.deleteTree(d)
     }
   }
 
@@ -233,44 +230,40 @@ object StreamingQueries {
     * replays them as `nFiles` genuine micro-batches in event_id order.
     * ONE partitioned write spills every bucket; a sparse event_id
     * domain may leave a bucket empty (no dir) — skipped, and the
-    * callers assert >= 2 data batches ran. Returns (dir, schema). */
-  /** Fixture cache: the spill is a deterministic function of
-    * (sf dir, nFiles, projected columns) — cache the spilled directory
-    * per key instead of re-running the write job for each of the many
-    * streaming catalog queries (×2 bench reps). The events call sites
-    * project the SAME column superset so one fixture serves them all;
-    * the documents fixture caches under its own column key. Cached
-    * dirs live until JVM exit (shutdown hook); FileStreamSource
-    * re-reads them fresh per query because every query starts a new
-    * (temp) checkpoint. */
-  private val fixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Int, Seq[String], String, String),
-      (java.io.File, org.apache.spark.sql.types.StructType)]()
-
-  private def spillEventIdBucketsCached(
+    * callers assert >= 2 data batches ran. Returns (dir, schema).
+    *
+    * The spill is an [[Artifacts]] entry over `df` itself, so it is
+    * written once per distinct frame (the events call sites project the
+    * SAME column superset, so one fixture serves them all; frames that
+    * differ in their filters get their own spill) instead of once per
+    * streaming query × bench rep. FileStreamSource re-reads the dir
+    * fresh per query because every query starts a new (temp)
+    * checkpoint. */
+  private[queries] def spillIdBuckets(
       s: SparkSession,
-      dir: String,
       ev: DataFrame,
-      nFiles: Int): (java.io.File, org.apache.spark.sql.types.StructType) =
-    spillIdBucketsCached(s, dir, ev, "event_id", nFiles)
-
-  /** `tag` disambiguates cache entries whose projected COLUMNS agree
-    * but whose rows differ (the pre-filtered click/error spills below
-    * project identical columns) — without it two filtered frames would
-    * collide on one cache key and silently share one spill. */
-  private def spillIdBucketsCached(
-      s: SparkSession,
-      dir: String,
-      df: DataFrame,
       idCol: String,
-      nFiles: Int,
-      tag: String = ""): (java.io.File, org.apache.spark.sql.types.StructType) =
-    fixtureCache.computeIfAbsent((dir, nFiles, df.columns.toSeq, idCol, tag), { _ =>
-      val out = spillIdBuckets(s, df, idCol, nFiles)
-      sys.addShutdownHook(rmTree(out._1))
-      out
-    })
+      nFiles: Int): (java.io.File, org.apache.spark.sql.types.StructType) =
+    Artifacts.getOrBuild(s"stream_fixture:$idCol:$nFiles", Seq(ev)) { a =>
+      import org.apache.spark.sql.functions._
+      val tmp = a.dir("graft_mb_").toFile
+      val maxId = ev.agg(max(idCol)).head.getLong(0)
+      val stage = new java.io.File(tmp, "stage")
+      val bucket = floor(col(idCol) * lit(nFiles) / lit(maxId + 1.0)).cast("int")
+      ev.withColumn("__b", bucket).repartition(nFiles, col("__b"))
+        .write.partitionBy("__b").mode("overwrite").parquet(stage.toString)
+      val written = (0 until nFiles).flatMap { b =>
+        val dirB = new java.io.File(stage, s"__b=$b")
+        Option(dirB.listFiles()).toSeq.flatMap(_.filter(_.getName.endsWith(".parquet"))).map { part =>
+          val dst = new java.io.File(tmp, f"$b%02d.parquet")
+          java.nio.file.Files.move(part.toPath, dst.toPath)
+          // distinct ascending mtimes pin oldest-first admission order
+          dst.setLastModified(1700000000000L + b * 60000L)
+          dst
+        }
+      }
+      (tmp, s.read.parquet(written.head.toString).schema)
+    }
 
   /** The click/error sides of the stream-stream join gates as
     * PRE-FILTERED shared spills: the `event_type` filter runs ONCE at
@@ -292,36 +285,7 @@ object StreamingQueries {
     val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"), col("value"))
       .filter(col("event_type") === eventType)
-    spillIdBucketsCached(s, dir, ev, "event_id", nFiles, tag = eventType)
-  }
-
-  private def spillIdBuckets(
-      s: SparkSession,
-      ev: DataFrame,
-      idCol: String,
-      nFiles: Int): (java.io.File, org.apache.spark.sql.types.StructType) = {
-    import org.apache.spark.sql.functions._
-    val maxId = ev.agg(max(idCol)).head.getLong(0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mb_").toFile
-    val stage = new java.io.File(tmp, "stage")
-    val bucket = floor(col(idCol) * lit(nFiles) / lit(maxId + 1.0)).cast("int")
-    ev.withColumn("__b", bucket).repartition(nFiles, col("__b"))
-      .write.partitionBy("__b").mode("overwrite").parquet(stage.toString)
-    val written = (0 until nFiles).flatMap { b =>
-      val dirB = new java.io.File(stage, s"__b=$b")
-      Option(dirB.listFiles()).toSeq.flatMap(_.filter(_.getName.endsWith(".parquet"))).map { part =>
-        val dst = new java.io.File(tmp, f"$b%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        // distinct ascending mtimes pin oldest-first admission order
-        dst.setLastModified(1700000000000L + b * 60000L)
-        dst
-      }
-    }
-    (tmp, s.read.parquet(written.head.toString).schema)
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+    spillIdBuckets(s, ev, "event_id", nFiles)
   }
 
   /** CROSS-MICRO-BATCH GroupState through the oracle gate — the
@@ -356,7 +320,7 @@ object StreamingQueries {
       val x = args(0).asInstanceOf[Double]
       if (acc + x <= 1000.0) acc + x else acc
     })
-    val (tmp, schema) = spillEventIdBucketsCached(s, dir, ev, nFiles = 4)
+    val (tmp, schema) = spillIdBuckets(s, ev, "event_id", nFiles = 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: the per-row appended balances
       // are chunk-invariant (any event_id-contiguous chunking threads
@@ -402,7 +366,7 @@ object StreamingQueries {
     val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"), col("value"))
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillEventIdBucketsCached(s, dir, ev, nFiles = 4)
+    val (tmp, schema) = spillIdBuckets(s, ev, "event_id", nFiles = 4)
     val src = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(tmp.getPath + "/*.parquet")
     val agg = src.groupBy("user_id")
@@ -495,8 +459,8 @@ object StreamingQueries {
   val streamMediaDedup: Q = (s, dir) => withStatePartitions(s, 8) {
     import org.apache.spark.sql.functions._
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillIdBucketsCached(s, dir,
-      LlmQueries.mediaCorpusParams(s, dir), "doc_id", 4, tag = "msig")
+    val (tmp, schema) =
+      spillIdBuckets(s, LlmQueries.mediaCorpusParams(s, dir), "doc_id", 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: emitted set is chunk-invariant
       // (distinct keys / stateless map), so 2 files per trigger keeps the
@@ -526,7 +490,7 @@ object StreamingQueries {
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val params = Tables(s, dir, "documents")
       .select(col("doc_id"), expr("CAST(doc_id DIV 8 AS BIGINT)").as("p"))
-    val (tmp, schema) = spillIdBucketsCached(s, dir, params, "doc_id", 4, tag = "asig")
+    val (tmp, schema) = spillIdBuckets(s, params, "doc_id", 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: emitted set is chunk-invariant
       // (distinct keys / stateless map), so 2 files per trigger keeps the
@@ -561,7 +525,7 @@ object StreamingQueries {
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val params = Tables(s, dir, "documents")
       .select(col("doc_id"), expr("CAST(doc_id DIV 8 AS BIGINT)").as("p"))
-    val (tmp, schema) = spillIdBucketsCached(s, dir, params, "doc_id", 4, tag = "vsig")
+    val (tmp, schema) = spillIdBuckets(s, params, "doc_id", 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: emitted set is chunk-invariant
       // (distinct keys / stateless map), so 2 files per trigger keeps the
@@ -588,7 +552,7 @@ object StreamingQueries {
     val uni = LlmQueries.trainedUnigram(s, dir) // frozen batch-side artifact
     val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillIdBucketsCached(s, dir, docs, "doc_id", 4)
+    val (tmp, schema) = spillIdBuckets(s, docs, "doc_id", 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: emitted set is chunk-invariant
       // (distinct keys / stateless map), so 2 files per trigger keeps the
@@ -620,8 +584,8 @@ object StreamingQueries {
   val streamCaptionDedup: Q = (s, dir) => withStatePartitions(s, 8) {
     import org.apache.spark.sql.functions._
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillIdBucketsCached(s, dir,
-      LlmQueries.mediaCorpusParams(s, dir), "doc_id", 4, tag = "capsig")
+    val (tmp, schema) =
+      spillIdBuckets(s, LlmQueries.mediaCorpusParams(s, dir), "doc_id", 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: emitted set is chunk-invariant
       // (distinct keys / stateless map), so 2 files per trigger keeps the
@@ -653,7 +617,7 @@ object StreamingQueries {
     import org.apache.spark.sql.functions._
     val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillIdBucketsCached(s, dir, docs, "doc_id", 4)
+    val (tmp, schema) = spillIdBuckets(s, docs, "doc_id", 4)
     val src = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(tmp.getPath + "/*.parquet")
     val agg = graft.llm.Sketches.cmsCounters(src, "text", depth = 4, width = 256)
@@ -684,9 +648,9 @@ object StreamingQueries {
     import org.apache.spark.sql.functions._
     val wT = LlmQueries.dsirWeightsTable(s, dir)
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillIdBucketsCached(s, dir,
+    val (tmp, schema) = spillIdBuckets(s,
       Tables(s, dir, "documents").filter(col("doc_id") % 2 =!= 0)
-        .select("doc_id", "text"), "doc_id", 2, tag = "dsirb")
+        .select("doc_id", "text"), "doc_id", 2)
     val src = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(tmp.getPath + "/*.parquet")
     val scored = graft.llm.Sampling.dsirScoreFrozen(s.table(wT), src,
@@ -726,20 +690,17 @@ object StreamingQueries {
   val streamAnnIvfProbe: Q = (s, dir) => withStatePartitions(s, 8) {
     import org.apache.spark.sql.functions._
     val e = Tables(s, dir, "embeddings")
-    val idxTable = LlmQueries.ivfIndexTable(s, dir)
-    // round 22: the quantizer is a build-time artifact of the persisted
-    // index — load it from the per-dir artifact cache instead of
-    // re-running the centroid corpus pass per invocation
-    val cents = LlmQueries.ivfCentroidsArtifact(s, dir)
+    // the quantizer lives with the persisted index: routing reuses its
+    // centroids instead of re-running the centroid corpus pass
+    val idx = LlmQueries.ivfIndex(s, dir)
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillIdBucketsCached(s, dir,
-      e.filter(col("vec_id") < 10).select("vec_id", "embedding"), "vec_id", 2,
-      tag = "annq")
+    val (tmp, schema) = spillIdBuckets(s,
+      e.filter(col("vec_id") < 10).select("vec_id", "embedding"), "vec_id", 2)
     val src = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(tmp.getPath + "/*.parquet")
     val routed = graft.llm.Similarity.ivfRouteCells(
-      src, cents, "vec_id", "embedding", "query_id", "qvec", 4, "cell")
-    val scored = routed.join(s.table(idxTable), Seq("cell"))
+      src, idx.centroids, "vec_id", "embedding", "query_id", "qvec", 4, "cell")
+    val scored = routed.join(s.table(idx.table), Seq("cell"))
       .filter(col("corpus_id") =!= col("query_id"))
       .select(col("query_id"),
         graft.llm.Similarity.cosine(col("qvec"), col("cvec2")).as("cos"),
@@ -948,15 +909,12 @@ object StreamingQueries {
     * (ONE builder under the cache key; the bm25IndexTables lesson). */
   private def diffSnapshotTable(s: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions._
-    graft.queries.BucketCache.tables(s, s"diff_snap_a:$dir", { (tag, tmp) =>
-      val name = s"graft_diff_a_$tag"
-      Tables(s, dir, "documents").filter(col("text").isNotNull)
+    val docs = Tables(s, dir, "documents")
+    Artifacts.getOrBuild("diff_snap_a", Seq(docs)) { a =>
+      a.bucketedTable("graft_diff_a", "doc_id", docs.filter(col("text").isNotNull)
         .filter(diffBucket(col("doc_id")) < 3)
-        .select(col("doc_id"), md5(to_binary(col("text"), lit("utf-8"))).as("a_md5"))
-        .write.bucketBy(8, "doc_id").sortBy("doc_id")
-        .option("path", s"$tmp/snapa").mode("overwrite").saveAsTable(name)
-      Seq(name)
-    }).head
+        .select(col("doc_id"), md5(to_binary(col("text"), lit("utf-8"))).as("a_md5")))
+    }
   }
 
   /** SNAPSHOT-CUT CLOSE — the `removed` half the ingest stream cannot
@@ -1086,7 +1044,7 @@ object StreamingQueries {
       // trigger broadcasts cached blocks instead of re-aggregating.
       .localCheckpoint()
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillEventIdBucketsCached(s, dir, ev, nFiles = 4)
+    val (tmp, schema) = spillIdBuckets(s, ev, "event_id", nFiles = 4)
     val src = s.readStream.schema(schema)
       // r22: stateless broadcast enrich — emitted set is the batch join,
       // chunk-invariant, so 2 files per trigger keeps >=2-batch coverage
@@ -1136,7 +1094,7 @@ object StreamingQueries {
     val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"), col("value"))
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillEventIdBucketsCached(s, dir, ev, nFiles = 4)
+    val (tmp, schema) = spillIdBuckets(s, ev, "event_id", nFiles = 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: emitted set is chunk-invariant
       // (distinct keys / stateless map), so 2 files per trigger keeps the
@@ -1327,7 +1285,7 @@ object StreamingQueries {
     val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"), col("value"))
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillEventIdBucketsCached(s, dir, ev, nFiles = 4)
+    val (tmp, schema) = spillIdBuckets(s, ev, "event_id", nFiles = 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: emitted set is chunk-invariant
       // (see docstring), so 2 files per trigger keeps >=2-batch coverage
@@ -1370,7 +1328,7 @@ object StreamingQueries {
     val cust = Tables(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillEventIdBucketsCached(s, dir, ev, nFiles = 4)
+    val (tmp, schema) = spillIdBuckets(s, ev, "event_id", nFiles = 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: emitted set is chunk-invariant
       // (see docstring), so 2 files per trigger keeps >=2-batch coverage
@@ -1407,53 +1365,52 @@ object StreamingQueries {
     * [[graft.llm.Dedup.minHashPairsFromHashes]] (boilerplate buckets
     * would otherwise fan every probe out by the bucket size).
     *
-    * Scale: the index is built ONCE (localCheckpoint, cached per
-    * fixture dir for the JVM's lifetime — the BucketCache convention;
-    * a persisted table bucketed by band key in production, as
+    * Scale: the index is built ONCE ([[neardupIndex]]: localCheckpoint,
+    * an [[Artifacts]] entry; a persisted table bucketed by band key in
+    * production, as
     * `dedup_incremental_bucketed` demonstrates for exact hashes), so
     * each micro-batch pays one narrow map + one equi-join against a
     * pre-bucketed static side — never a corpus rescan, nothing
     * all-pairs. Probe state is ZERO: near-dup admission control at
     * ingest without a growing state store. */
-  /** Cached entries hold localCheckpoint blocks owned by the
-    * SparkContext that built them, so a hit is only valid while that
-    * context is alive — a fresh session in the same JVM (stop +
-    * rebuild, the common test-harness pattern) must rebuild, not
-    * silently reuse a frame whose RDD blocks died with the old
-    * context. (The fixture cache above has no such binding: it holds
-    * plain parquet paths + schemas, valid across sessions.) */
-  private val neardupIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private def neardupIsBatch: org.apache.spark.sql.Column =
+    graft.llm.Sampling.hashBucket256(org.apache.spark.sql.functions.col("doc_id")) < 13
+
+  /** The static corpus LSH index (cand_id, cand_sig, bucket), built once
+    * per corpus rather than per invocation × bench reps (the
+    * r9-measured 2.6 s was mostly index rebuild). It holds
+    * localCheckpoint blocks, so the entry is bound to the SparkContext
+    * that built it: a fresh context (stop + rebuild, the common
+    * test-harness pattern) rebuilds instead of reusing blocks that died
+    * with the old one. */
+  private[queries] def neardupIndex(docs: DataFrame): DataFrame =
+    Artifacts.getOrBuild("neardup_index", Seq(docs)) { a =>
+      import org.apache.spark.sql.functions._
+      import graft.llm.Dedup
+      a.bind()
+      val maxBucket = 1000 // same cap as the batch minhash family
+      val corpusIdx = Dedup.bandBuckets(
+          Dedup.shingleHashSets(docs.filter(!neardupIsBatch), "doc_id", "text"))
+        .select(col("id").as("cand_id"), col("sig").as("cand_sig"), col("bucket"))
+      val okBuckets = corpusIdx.groupBy("bucket")
+        .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket).select("bucket")
+      corpusIdx.join(okBuckets, "bucket").localCheckpoint()
+    }
 
   val streamNeardupProbe: Q = (s, dir) => withStatePartitions(s, 8) {
     import org.apache.spark.sql.functions._
-    import graft.llm.{Dedup, Sampling}
-    val maxBucket = 1000 // same cap as the batch minhash family
+    import graft.llm.Dedup
     val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-    val isBatch = Sampling.hashBucket256(col("doc_id")) < 13
-    // the static index is a pure function of the fixture dir: build its
-    // shingle/minhash/band jobs once per JVM, not once per invocation
-    // × bench reps (the r9-measured 2.6 s was mostly index rebuild)
-    val idx = neardupIdxCache.compute(dir, { (_, cached) =>
-      if (cached != null && !cached.sparkSession.sparkContext.isStopped) cached
-      else {
-        val corpusIdx = Dedup.bandBuckets(
-            Dedup.shingleHashSets(docs.filter(!isBatch), "doc_id", "text"))
-          .select(col("id").as("cand_id"), col("sig").as("cand_sig"), col("bucket"))
-        val okBuckets = corpusIdx.groupBy("bucket")
-          .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket).select("bucket")
-        corpusIdx.join(okBuckets, "bucket").localCheckpoint()
-      }
-    })
+    val idx = neardupIndex(docs)
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillIdBucketsCached(s, dir, docs, "doc_id", nFiles = 4)
+    val (tmp, schema) = spillIdBuckets(s, docs, "doc_id", nFiles = 4)
     val src = s.readStream.schema(schema)
       // r22, the r12 join-gate precedent: emitted set is chunk-invariant
       // (see docstring), so 2 files per trigger keeps >=2-batch coverage
       // at half the per-trigger machinery (verified emission-identical)
       .option("maxFilesPerTrigger", "2").parquet(tmp.getPath + "/*.parquet")
     val probes = Dedup.bandBuckets(
-      Dedup.shingleHashSets(src.filter(isBatch), "doc_id", "text"))
+      Dedup.shingleHashSets(src.filter(neardupIsBatch), "doc_id", "text"))
     val q = probes.join(broadcast(idx), "bucket")
       .withColumn("est_jaccard", Dedup.signatureSimilarity(col("sig"), col("cand_sig")))
       .filter(col("est_jaccard") >= 0.3)
@@ -1487,7 +1444,7 @@ object StreamingQueries {
     val docs = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     val maxId = docs.agg(max("doc_id")).head.getLong(0)
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val (tmp, schema) = spillIdBucketsCached(s, dir, docs, "doc_id", nFiles = 4)
+    val (tmp, schema) = spillIdBuckets(s, docs, "doc_id", nFiles = 4)
     val src = s.readStream.schema(schema)
       // r22: the emitted pair set equals the doc_id-order prefix replay
       // (within-batch arrivals probe-then-join the same cumulative

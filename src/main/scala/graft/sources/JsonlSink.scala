@@ -20,75 +20,32 @@ import org.apache.spark.sql.DataFrame
   */
 object JsonlSink {
 
-  /** One lazily-written export per key. The holder's `lazy val` runs
-    * the distributed write OUTSIDE the map's bin lock (a
-    * `compute`-closure write would hold a ConcurrentHashMap bin lock
-    * across an entire Spark job) while still guaranteeing
-    * exactly-one write per key. */
-  private final class Export(mk: () => String) { lazy val path: String = mk() }
-
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Export]()
-
-  private val tmpDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-
-  private lazy val cleanupHook: Unit = {
-    sys.addShutdownHook {
-      import scala.jdk.CollectionConverters._
-      tmpDirs.asScala.foreach { tmp =>
-        try {
-          if (java.nio.file.Files.exists(tmp)) {
-            val walk = java.nio.file.Files.walk(tmp)
-            try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-              .foreach(p => p.toFile.delete())
-            finally walk.close()
-          }
-        } catch { case _: java.io.IOException => () }
-      }
-    }
-    ()
-  }
-
-  /** Export `df` ONCE per cache key (bench reps / verify + tests in
-    * one JVM pay the write once, like a real export job), then read it
-    * back with the writer's own schema. The cache holds only a PATH,
-    * and the read binds to the CALLER's session — safe across session
-    * restarts in one JVM, unlike caching a DataFrame. */
-  private def writeRead(df: DataFrame, key: String, format: String,
+  /** Export `df` ONCE per [[graft.queries.Artifacts]] key (bench reps /
+    * verify + tests in one JVM pay the write once, like a real export
+    * job), then read it back with the writer's own schema. The entry
+    * holds only a PATH, valid while the dir exists, and the read binds
+    * to the CALLER's session — safe across session restarts in one
+    * JVM, unlike caching a DataFrame. */
+  private def writeRead(df: DataFrame, format: String,
       writeOpts: Map[String, String], readOpts: Map[String, String]): DataFrame = {
-    // fold a schema fingerprint into the cache key so a reused caller
-    // key with a different shape can never silently return the stale
-    // export (full-data fingerprinting would cost a second job; the
-    // schema catches the reuse-with-different-query class of mistakes)
-    val fullKey = key + "|" + format + "|" +
-      df.schema.fields.map(f => s"${f.name}:${f.dataType.catalogString}").mkString(",")
-    def mk(): String = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_export_")
-      cleanupHook // register the single drain hook (idempotent)
-      tmpDirs.add(tmp)
-      df.write.mode("overwrite").options(writeOpts).format(format).save(tmp.toString)
-      tmp.toString
-    }
-    val holder = cache.computeIfAbsent(fullKey, _ => new Export(() => mk()))
-    var path = holder.path // lazy: first caller writes, outside any bin lock
-    if (!new java.io.File(path).exists()) { // swept by an external cleanup — redo
-      cache.remove(fullKey, holder)
-      path = cache.computeIfAbsent(fullKey, _ => new Export(() => mk())).path
+    val path = graft.queries.Artifacts.getOrBuild(s"export_$format", Seq(df)) { a =>
+      val tmp = a.dir("graft_export_").toString
+      df.write.mode("overwrite").options(writeOpts).format(format).save(tmp)
+      tmp
     }
     df.sparkSession.read.schema(df.schema).options(readOpts).format(format).load(path)
   }
 
-  def roundTrip(df: DataFrame, key: String): DataFrame =
-    writeRead(df, key, "json", Map.empty, Map.empty)
+  def roundTrip(df: DataFrame): DataFrame =
+    writeRead(df, "json", Map.empty, Map.empty)
 
   /** ORC round trip — the columnar ALTERNATIVE sink: unlike the text
     * formats above it keeps types natively, splits on stripes, and
     * retains column pruning + predicate pushdown on re-read, so it is
     * a valid INGEST format for downstream Spark stages, not just
     * egress. Zero dialect options by construction. */
-  def roundTripOrc(df: DataFrame, key: String): DataFrame =
-    writeRead(df, key, "orc", Map.empty, Map.empty)
+  def roundTripOrc(df: DataFrame): DataFrame =
+    writeRead(df, "orc", Map.empty, Map.empty)
 
   /** CSV round trip — the interop format whose DIALECT, not its data
     * model, is the hazard: embedded newlines need `multiLine` on read
@@ -99,8 +56,8 @@ object JsonlSink {
     * a character no document contains) because bare CSV cannot encode
     * the difference. quoteAll keeps the writer's output unambiguous
     * under any locale's delimiters. */
-  def roundTripCsv(df: DataFrame, key: String): DataFrame =
-    writeRead(df, key, "csv",
+  def roundTripCsv(df: DataFrame): DataFrame =
+    writeRead(df, "csv",
       // the WRITER trims cell whitespace by default (ignore*WhiteSpace
       // defaults true on write, false on read — asymmetric!), so a
       // whitespace-only document silently came back shortened. Caught

@@ -579,16 +579,16 @@ class LlmSpec extends AnyFunSuite {
       (3L, "unicode é中😀 and controlchar", "zh", "b", 25L),
       (4L, "", "en", "b", 0L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val back = graft.sources.JsonlSink.roundTrip(nasty, "test:" + java.util.UUID.randomUUID())
+    val back = graft.sources.JsonlSink.roundTrip(nasty)
     val a = nasty.collect().map(_.toSeq).sortBy(_.head.toString)
     val b = back.collect().map(_.toSeq).sortBy(_.head.toString)
     assert(a.toSeq == b.toSeq, s"round trip must be exact: ${b.toSeq}")
     // the CSV dialect survives the same hostile rows: embedded newlines
     // (multiLine), RFC-4180 doubled quotes, backslashes, empty strings
-    val csv = graft.sources.JsonlSink.roundTripCsv(nasty, "testcsv:" + java.util.UUID.randomUUID())
+    val csv = graft.sources.JsonlSink.roundTripCsv(nasty)
     val c = csv.collect().map(_.toSeq).sortBy(_.head.toString)
     assert(a.toSeq == c.toSeq, s"CSV round trip must be exact: ${c.toSeq}")
-    val orc = graft.sources.JsonlSink.roundTripOrc(nasty, "testorc:" + java.util.UUID.randomUUID())
+    val orc = graft.sources.JsonlSink.roundTripOrc(nasty)
     val o = orc.collect().map(_.toSeq).sortBy(_.head.toString)
     assert(a.toSeq == o.toSeq, s"ORC round trip must be exact: ${o.toSeq}")
   }

@@ -164,6 +164,23 @@ class GroupFoldVariantsSpec extends AnyFunSuite {
     assert(viaAgg == viaGroupOps)
   }
 
+  test("SortedFoldAggregator orders a null ord before a Long.MinValue ord, in any input order") {
+    import spark.implicits._
+    val digits = Fold[Double](0.0, (acc, args) => acc * 10 + args(0).asInstanceOf[Double])
+    val rows = Seq((1L, Option.empty[Long], 1.0), (1L, Option(Long.MinValue), 2.0))
+    for (input <- Seq(rows, rows.reverse)) {
+      val df = input.toDF("g", "ord", "v").coalesce(1)
+      val viaAgg = df.groupBy("g")
+        .agg(SortedFoldAggregator.foldColumn(
+          Seq(col("ord")), Seq(col("v") -> DoubleType), digits, DoubleType).as("d"))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val viaGroupOps = GroupOps.groupFold(df, Seq("g"), Seq("v"), Seq("ord"), digits, DoubleType)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(viaGroupOps == Map(1L -> 12.0), "groupFold: null ord first")
+      assert(viaAgg == viaGroupOps, s"input order ${input.map(_._2)}")
+    }
+  }
+
   test("SortedFoldAggregator composes with other aggregates in one agg list") {
     val balance = Fold[Double](0.0, (acc, args) => {
       val x = args(0).asInstanceOf[Double]

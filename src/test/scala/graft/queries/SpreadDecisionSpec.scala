@@ -51,4 +51,28 @@ class SpreadDecisionSpec extends AnyFunSuite {
       rm(tmp)
     }
   }
+
+  test("same-schema tables in one dir: per-table spread decisions") {
+    val s = spark
+    val target = s.sparkContext.defaultParallelism
+    val tmp = java.nio.file.Files.createTempDirectory("graft_same_").toFile
+    try {
+      s.range(0, 1000).select(col("id").as("doc_id"))
+        .repartition(32 * target)
+        .write.mode("overwrite").parquet(s"${tmp.getPath}/many.parquet")
+      s.range(0, 1000).select(col("id").as("doc_id"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"${tmp.getPath}/single.parquet")
+
+      val many = s.read.parquet(s"${tmp.getPath}/many.parquet")
+      val single = s.read.parquet(s"${tmp.getPath}/single.parquet")
+      assert(many.rdd.getNumPartitions >= target, "fixture: many must be spread already")
+      assert(single.rdd.getNumPartitions < target, "fixture: single must be under-partitioned")
+
+      graft.queries.LlmQueries.spreadForCompute(s, tmp.getPath, many)
+      val singleOut = graft.queries.LlmQueries.spreadForCompute(s, tmp.getPath, single)
+      assert(singleOut.rdd.getNumPartitions == target,
+        "a same-columns neighbor must still get its own spread decision")
+    } finally Artifacts.deleteTree(tmp.toPath)
+  }
 }

@@ -23,7 +23,7 @@ class StreamAnnRestartSpec extends AnyFunSuite {
     import s.implicits._
     val dir = TestSpark.sfDir
     val e = Tables(s, dir, "embeddings").select("vec_id", "embedding")
-    val idxTable = LlmQueries.ivfIndexTable(s, dir)
+    val idxTable = LlmQueries.ivfIndex(s, dir).table
     val cents = Similarity.ivfCentroids(e, "vec_id", "embedding", 16)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
 

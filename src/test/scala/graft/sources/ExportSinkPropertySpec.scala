@@ -29,15 +29,16 @@ class ExportSinkPropertySpec extends AnyFunSuite {
   private val hostileString: Gen[String] =
     Gen.listOf(hostileChar).map(_.mkString)
 
+  private def exported(fmt: String, df: org.apache.spark.sql.DataFrame) = fmt match {
+    case "json" => JsonlSink.roundTrip(df)
+    case "csv"  => JsonlSink.roundTripCsv(df)
+    case "orc"  => JsonlSink.roundTripOrc(df)
+  }
+
   private def roundTrips(fmt: String, texts: List[String]): Boolean = {
     import spark.implicits._
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    val key = s"prop:$fmt:" + java.util.UUID.randomUUID()
-    val back = fmt match {
-      case "json" => JsonlSink.roundTrip(df, key)
-      case "csv"  => JsonlSink.roundTripCsv(df, key)
-      case "orc"  => JsonlSink.roundTripOrc(df, key)
-    }
+    val back = exported(fmt, df)
     val a = df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
     val rawBack = back.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
     if (fmt == "csv") {
@@ -76,18 +77,24 @@ class ExportSinkPropertySpec extends AnyFunSuite {
     import spark.implicits._
     val empty = Seq.empty[(Long, String)].toDF("id", "text")
     for (fmt <- Seq("json", "csv", "orc")) {
-      val key = s"prop:empty:$fmt:" + java.util.UUID.randomUUID()
-      val back = fmt match {
-        case "json" => JsonlSink.roundTrip(empty, key)
-        case "csv"  => JsonlSink.roundTripCsv(empty, key)
-        case "orc"  => JsonlSink.roundTripOrc(empty, key)
-      }
+      val back = exported(fmt, empty)
       assert(back.count() == 0L, s"$fmt: empty in, empty out")
       // file sources force nullable=true on read (standard Spark file-
       // scan behavior); names and types must survive exactly
       assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
         empty.schema.fields.map(f => (f.name, f.dataType)).toSeq,
         s"$fmt: names+types survive emptiness")
+    }
+  }
+
+  test("two same-schema frames with different rows each read back their own rows") {
+    import spark.implicits._
+    val first = Seq((1L, "first")).toDF("id", "text")
+    val second = Seq((2L, "second")).toDF("id", "text")
+    for (fmt <- Seq("json", "csv", "orc"); df <- Seq(first, second)) {
+      val back = exported(fmt, df).collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(back == df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq,
+        s"$fmt must export each frame's own rows")
     }
   }
 

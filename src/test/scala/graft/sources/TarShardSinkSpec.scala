@@ -22,7 +22,7 @@ class TarShardSinkSpec extends AnyFunSuite {
   private lazy val fixture = docs.toDF("doc_id", "text")
 
   test("roundtrip preserves membership, sizes, and content digests") {
-    val back = TarShardSink.roundTrip(fixture, "doc_id", "text", "spec1", 4)
+    val back = TarShardSink.roundTrip(fixture, "doc_id", "text", 4)
       .collect().map(r => (r.getString(1), r.getLong(2), r.getString(3))).toSet
     val want = docs.map { case (id, t) =>
       val b = t.getBytes(UTF_8)
@@ -37,10 +37,20 @@ class TarShardSinkSpec extends AnyFunSuite {
     def hash60(s: String): Long = java.lang.Long.parseLong(
       java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes(UTF_8)).map("%02x".format(_)).mkString.take(15), 16)
-    val back = TarShardSink.roundTrip(fixture, "doc_id", "text", "spec1", 4)
+    val back = TarShardSink.roundTrip(fixture, "doc_id", "text", 4)
       .collect().map(r => (r.getString(1).takeWhile(_ != '.').toLong, r.getInt(0))).toMap
     docs.foreach { case (id, _) =>
       assert(back(id) === (hash60(id.toString) % 4).toInt, s"doc $id")
+    }
+  }
+
+  test("two same-schema frames with different rows each read back their own rows") {
+    val first = docs.take(2).toDF("doc_id", "text")
+    val second = docs.drop(2).toDF("doc_id", "text")
+    for (df <- Seq(first, second)) {
+      val back = TarShardSink.roundTrip(df, "doc_id", "text", 4)
+        .collect().map(_.getString(1)).toSet
+      assert(back === df.collect().map(r => f"${r.getLong(0)}%012d.txt").toSet)
     }
   }
 
@@ -62,14 +72,14 @@ class TarShardSinkSpec extends AnyFunSuite {
       to_binary(col("text"), lit("utf-8")).as("payload"),
       to_binary(concat(lit("meta:"), col("doc_id").cast("string")), lit("utf-8")).as("meta"))
     val back = TarShardSink.roundTripEntries(mm, "doc_id",
-        Seq(("txt", "payload"), ("json", "meta")), "spec_mm", 2)
+        Seq(("txt", "payload"), ("json", "meta")), 2)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(3)))
     assert(back.length === docs.size * 2)
     // a key's modalities are ADJACENT in their shard: within each
     // archive the walker sees txt immediately followed by json of the
     // SAME key (the property a streaming dataloader depends on)
     val dirPath = TarShardSink.writeShardEntries(mm, "doc_id",
-      Seq(("txt", "payload"), ("json", "meta")), "spec_mm", 2)
+      Seq(("txt", "payload"), ("json", "meta")), 2)
     val names = TarShardSink.readShards(spark, dirPath)
       .collect().map(r => (r.getInt(0), r.getString(1)))
     names.groupBy(_._1).values.foreach { shardEntries =>
@@ -94,7 +104,7 @@ class TarShardSinkSpec extends AnyFunSuite {
   test("a stock tar binary lists and extracts the shards") {
     import scala.sys.process._
     assume(scala.util.Try("tar --version".!!).isSuccess, "no tar binary")
-    val dir = TarShardSink.writeShards(fixture, "doc_id", "text", "spec1", 4)
+    val dir = TarShardSink.writeShards(fixture, "doc_id", "text", 4)
     val tars = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".tar"))
     assert(tars.nonEmpty)
     val names = tars.flatMap(t => s"tar -tf ${t.getAbsolutePath}".!!.trim
