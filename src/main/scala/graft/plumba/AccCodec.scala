@@ -1,6 +1,6 @@
 package graft.plumba
 
-import org.apache.spark.SparkConf
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
 
 /** Accumulator byte codec for the partition-edge partials and seeds of
@@ -21,17 +21,27 @@ import org.apache.spark.serializer.{KryoSerializer, SerializerInstance}
   * fidelity matters, which KryoRoundTripSpec pins for every
   * accumulator shape the salted operators ship. */
 private[graft] object AccCodec {
-  private val local = new ThreadLocal[SerializerInstance] {
-    override def initialValue(): SerializerInstance = {
-      // Build from the live SparkEnv conf when one exists (executor or
-      // local-mode task thread) so user kryo settings — custom
-      // registrators, spark.kryoserializer.buffer.max — apply to these
-      // partials too; a bare SparkConf() only as the no-session
-      // fallback (unit tests). With the default conf the per-value
-      // ceiling is spark.kryoserializer.buffer.max = 64m — far above
-      // any per-(group,bucket) accumulator, but a session that raises
-      // it now gets the raise here as well.
-      serializer(Option(org.apache.spark.SparkEnv.get).map(_.conf).getOrElse(new SparkConf()))
+  /** A thread's Kryo instance and the `SparkEnv` it was built under. */
+  private final class Bound(val env: SparkEnv, val instance: SerializerInstance)
+  private val local = new ThreadLocal[Bound]
+
+  /** This thread's instance for `env`, rebuilt whenever `env` is not the
+    * env the cached one was built under: built from the live SparkEnv
+    * conf when one exists (executor or local-mode task thread) so user
+    * kryo settings — custom registrators,
+    * spark.kryoserializer.buffer.max — apply to these partials too; a
+    * bare SparkConf() only while no env exists (unit tests). A thread
+    * that first serialized before a context started, or under one since
+    * stopped, thus never keeps that stale conf. With the default conf
+    * the per-value ceiling is spark.kryoserializer.buffer.max = 64m —
+    * far above any per-(group,bucket) accumulator. */
+  private[plumba] def instanceFor(env: SparkEnv): SerializerInstance = {
+    val b = local.get()
+    if (b != null && (b.env eq env)) b.instance
+    else {
+      val fresh = serializer(Option(env).map(_.conf).getOrElse(new SparkConf()))
+      local.set(new Bound(env, fresh))
+      fresh
     }
   }
 
@@ -43,14 +53,14 @@ private[graft] object AccCodec {
     new KryoSerializer(conf.clone().set("spark.kryo.registrationRequired", "false")).newInstance()
 
   def ser(a: Any): Array[Byte] = {
-    val bb = local.get().serialize[Any](a)(scala.reflect.ClassTag.Any)
+    val bb = instanceFor(SparkEnv.get).serialize[Any](a)(scala.reflect.ClassTag.Any)
     val out = new Array[Byte](bb.remaining())
     bb.get(out)
     out
   }
 
   def deser[A](bytes: Array[Byte]): A =
-    local.get()
+    instanceFor(SparkEnv.get)
       .deserialize[Any](java.nio.ByteBuffer.wrap(bytes))(scala.reflect.ClassTag.Any)
       .asInstanceOf[A]
 }

@@ -3664,10 +3664,12 @@ object LlmQueries {
   val bpeDecodeRoundtrip: Q = (s, dir) => {
     val trainedB = trainedBpeBytes(s, dir)
     val trainedC = trainedBpe(s, dir)
+    // local rows (a LocalRelation), so the frame's plan — and with it
+    // the `spread` artifact key below — is the same on every call
     val hostile = s.createDataFrame(
-      s.sparkContext.parallelize(HostileTexts.zipWithIndex.map { case (t, i) =>
+      java.util.Arrays.asList(HostileTexts.zipWithIndex.map { case (t, i) =>
         org.apache.spark.sql.Row(1000000L + i, t)
-      }, 1),
+      }: _*),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType))))

@@ -33,6 +33,13 @@ object Tables {
     normalizeTs(spark.readStream.schema(raw).parquet(s"$dir/events.parquet*"))
   }
 
+  /** The documents table as a STREAMING source: one whole file, so it
+    * arrives in one micro-batch. The glob sidesteps FileStreamSource's
+    * directory check (documents.parquet is one file). */
+  private[queries] def documentsStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(apply(spark, dir, "documents").schema)
+      .parquet(s"$dir/documents.parquet*")
+
   /** Normalize a `ts` column to bigint epoch nanos, branching on the
     * type ACTUALLY loaded (the TimeGap dtype-branching pattern — never
     * assume the fixture's physical type): LongType is already nanos;

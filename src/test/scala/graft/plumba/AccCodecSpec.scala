@@ -2,7 +2,7 @@ package graft.plumba
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.SparkConf
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-21 focused spec for the kryo accumulator codec that replaced
@@ -57,5 +57,26 @@ class AccCodecSpec extends AnyFunSuite {
       java.sql.Date.valueOf("2026-08-18"), null, 3.25)
     assert(rtc(pay).toSeq == pay.toSeq)
     assert(conf.get("spark.kryo.registrationRequired") == "true", "the caller's conf is left as it was")
+  }
+
+  test("a thread's instance is rebuilt when the SparkEnv it was built under is gone") {
+    graft.TestSpark.spark
+    val live = SparkEnv.get
+    assert(live != null)
+    @volatile var seen: Seq[Boolean] = Nil
+    // a fresh thread: its first instance is built before any env (null),
+    // then the live env appears, as for a thread that serialized before
+    // the context started
+    val t = new Thread(() => {
+      val bare = AccCodec.instanceFor(null)
+      val bareAgain = AccCodec.instanceFor(null)
+      val onLive = AccCodec.instanceFor(live)
+      val onLiveAgain = AccCodec.instanceFor(live)
+      seen = Seq(bare eq bareAgain, onLive ne bare, onLiveAgain eq onLive)
+    })
+    t.start()
+    t.join()
+    assert(seen == Seq(true, true, true),
+      "one instance per (thread, env): rebuilt on every env change, reused while the env stays")
   }
 }
