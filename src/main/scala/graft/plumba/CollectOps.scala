@@ -21,15 +21,18 @@ import org.apache.spark.sql.types._
   * Scale design (SURVEY §3.1–3.2):
   *  - One partition is already totally ordered once it is sorted in
   *    place: a single partition satisfies every ordered distribution, so
-  *    an ordered fold over at most one partition sorts it with
-  *    `sortWithinPartitions` — no range exchange, no sampling job, one
-  *    Spark job of one stage — and otherwise runs the path its kernel
-  *    runs over many partitions. The partition count is read from the
+  *    a fold over at most one partition sorts it with
+  *    `sortWithinPartitions` (a commutative kernel skips even that) — no
+  *    range exchange, no sampling job — and folds it from `init` in one
+  *    task, whatever its kernel: one plan, one Spark job of one stage, no
+  *    SQL execution. Otherwise it runs the path its kernel runs over many
+  *    partitions. The partition count is read from the
   *    projected input's physical plan, and only when that plan holds no
   *    exchange, no subquery and no adaptive wrapper (nor does any cached
   *    plan it scans), so building its RDD runs no Spark job; anything
   *    else, and every streaming frame, counts as many partitions
-  *    ([[onePartition]]). `collectScan` does not apply this rule.
+  *    ([[onePartition]]). The rows then leave that same plan
+  *    ([[Ranged.rows]]). `collectScan` does not apply this rule.
   *  - Kernels declaring a [[Kernel.Merge]] run as *partial folds per
   *    partition* on executors — [[Ranged]]'s edge pass with an empty key —
   *    chained in partition order on the driver: O(#partitions) driver
@@ -37,10 +40,11 @@ import org.apache.spark.sql.types._
   *    the 100 TB path. A lawful scan runs the same edge pass, then
   *    re-scans each range partition from its prefix.
   *  - Non-mergeable kernels are inherently sequential (the reference's own
-  *    model: acc threads across 50k-row batches, :349). The parity fold
-  *    streams partitions to the driver one at a time via
+  *    model: acc threads across 50k-row batches, :349). Over one
+  *    partition the parity fold is that one task; only a multi-partition
+  *    input streams to the driver, one partition at a time via
   *    `toLocalIterator` — bounded memory, exactly the reference's
-  *    single-threaded streaming semantics; the parity scan walks
+  *    single-threaded streaming semantics. The parity scan walks
   *    [[Ranged]]'s one-partition layout. Prefer group-parallel
   *    [[GroupOps]] at scale.
   */
@@ -51,17 +55,15 @@ object CollectOps {
     * scans) holds no exchange, no subquery and no adaptive wrapper, so
     * building its RDD only reads partition metadata. A streaming frame,
     * or any plan that would have to run jobs to know, counts as many
-    * partitions. */
+    * partitions. The count comes from `df.queryExecution.toRdd`, the
+    * RDD [[Ranged.rows]] reads `df`'s rows from: a call plans `df` once. */
   private[plumba] def onePartition(df: DataFrame): Boolean = {
     def runsNoJob(p: SparkPlan): Boolean = p match {
       case _: Exchange | _: AdaptiveSparkPlanExec => false
       case s: InMemoryTableScanExec => runsNoJob(s.relation.cachedPlan)
       case _ => p.subqueries.isEmpty && p.children.forall(runsNoJob)
     }
-    !df.isStreaming && {
-      val plan = df.queryExecution.executedPlan
-      runsNoJob(plan) && plan.execute().getNumPartitions <= 1
-    }
+    !df.isStreaming && runsNoJob(df.queryExecution.executedPlan) && df.queryExecution.toRdd.getNumPartitions <= 1
   }
 
   /** Ordered whole-frame fold → scalar. Kernels whose merge law is
@@ -76,27 +78,30 @@ object CollectOps {
     require(valueCols.nonEmpty, "at least one folded column is required") // reference :272–273
     // every fold input below is projected to exactly `valueCols`
     val valIdx = valueCols.indices.toArray
-    lazy val sorted = {
-      val kept = df.select((orderCols ++ valueCols).distinct.map(col): _*).na.drop(valueCols)
-      val local = kept.sortWithinPartitions(orderCols.map(col): _*).select(valueCols.map(col): _*)
-      // one partition needs no range sort: partition 0 holds every row in order
-      if (onePartition(local)) local else kept.orderBy(orderCols.map(col): _*).select(valueCols.map(col): _*)
-    }
-    k.merge match {
-      case Some(m) =>
-        // Executor-side partials on Ranged's edge pass (empty key), chained
-        // on the driver in partition order: a range sort makes partition
-        // order row order; a commutative merge folds the unsorted
-        // projection under the fold null policy.
-        val input =
-          if (m.commutative) df.select(valueCols.distinct.map(col): _*).na.drop(valueCols.distinct)
-            .select(valueCols.map(col): _*)
-          else sorted
-        Ranged.carry(input, k.init, Ranged.kernelLaw(k, m, valIdx))
-      case None =>
-        // Parity path: partitions stream to the driver in sorted order
-        // through `toLocalIterator` and fold sequentially, like the reference.
-        Runs.fold(k, k.init, sorted.toLocalIterator().asScala, valIdx)
+    val values = valueCols.map(col)
+    val kept = df.na.drop(valueCols)
+    // a commutative merge folds the unsorted projection: row order is irrelevant to it
+    val input =
+      if (k.merge.exists(_.commutative)) kept.select(values: _*)
+      else kept.sortWithinPartitions(orderCols.map(col): _*).select(values: _*)
+    if (onePartition(input)) {
+      // partition 0 holds every row, in order where order matters: one task
+      // folds it from `init`, whatever the kernel; the state comes back as
+      // AccCodec bytes, as Ranged's partials do
+      val folded = input.sparkSession.sparkContext.runJob(Ranged.rows(input),
+        (it: Iterator[Row]) => AccCodec.ser(Runs.fold(k, k.init, it, valIdx)))
+      folded.headOption.fold(k.init)(AccCodec.deser[A])
+    } else {
+      // a range sort makes partition order row order
+      lazy val sorted = kept.orderBy(orderCols.map(col): _*).select(values: _*)
+      k.merge match {
+        // Ranged's edge pass (empty key): executor-side partials, chained on
+        // the driver in partition order
+        case Some(m) => Ranged.carry(if (m.commutative) input else sorted, k.init, Ranged.kernelLaw(k, m, valIdx))
+        // parity path: partitions stream to the driver in order, one at a
+        // time, and fold sequentially, like the reference
+        case None => Runs.fold(k, k.init, sorted.toLocalIterator().asScala, valIdx)
+      }
     }
   }
 

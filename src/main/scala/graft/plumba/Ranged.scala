@@ -2,25 +2,33 @@ package graft.plumba
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** The engine behind every ordered partition walk: every [[GroupOps]]
   * shape, both [[CollectOps.collectScan]] paths, the mergeable
-  * [[CollectOps.collectFold]] and both [[graft.operators.AsofJoin]] joins.
-  * A walk lays its rows out, sorts each partition on `keys ++ order`,
-  * splits it into key runs ([[Runs.runs]]) and walks each run from a
-  * seed. The [[Layout]] says where the rows go: [[One]] partition (a
-  * sequential walk of the whole frame), [[Hashed]] partitions on the keys
-  * (a key's whole run in one partition, the secondary-sort pattern), or
+  * [[CollectOps.collectFold]] over many partitions and both
+  * [[graft.operators.AsofJoin]] joins. A walk lays its rows out, sorts
+  * each partition on `keys ++ order`, splits it into key runs
+  * ([[Runs.runs]]) and walks each run from a seed. The [[Layout]] says
+  * where the rows go: [[One]] partition (a sequential walk of the whole
+  * frame), [[Hashed]] partitions on the keys (a key's whole run in one
+  * partition, the secondary-sort pattern), or
   * [[Range]] partitions on `keys ++ order` (a hot key's run may straddle
   * several partitions; each stays one sorted stretch of the global
   * order). On [[One]] and [[Hashed]] every run starts from `init` and the
   * walk stays a lazy `Dataset.mapPartitions`: building it runs no job.
+  * Every other row a walk or fold reads, here and in the one-partition
+  * [[CollectOps.collectFold]], leaves a plan the call has already built
+  * ([[rows]]): one plan per call, no second `QueryExecution` for a
+  * deserializer.
   *
-  * Only [[Range]] carries an edge [[Law]]. It takes the sorted frame's RDD
-  * once and runs both passes over that same RDD object: one partition
-  * layout, one set of shuffle files, no checkpoint.
+  * Only [[Range]] carries an edge [[Law]]. It takes the sorted frame's rows
+  * once ([[rows]]: one plan, read from its `toRdd`) and runs both passes
+  * over that same RDD object: one partition layout, one set of shuffle
+  * files, no checkpoint.
   *  1. Only when the RDD has more than one partition: each partition
   *     reports its edges — first key, last key, run count, and the last
   *     run's state as [[AccCodec]] bytes: folded from `init` where the
@@ -85,10 +93,10 @@ private[graft] object Ranged {
         val sorted =
           if (buckets > 0) df.repartitionByRange(buckets, order: _*).sortWithinPartitions(order: _*)
           else df.orderBy(order: _*)
-        val rows = sorted.rdd
-        val seeds =
-          if (rows.getNumPartitions <= 1) Array.empty[Seed] else chain(edges(rows, keyIdx, init, law), init, law)._1
-        df.sparkSession.createDataFrame(rows.mapPartitionsWithIndex { (i, it) =>
+        val sortedRows = rows(sorted)
+        val seeds = if (sortedRows.getNumPartitions <= 1) Array.empty[Seed]
+          else chain(edges(sortedRows, keyIdx, init, law), init, law)._1
+        df.sparkSession.createDataFrame(sortedRows.mapPartitionsWithIndex { (i, it) =>
           walk(it, keyIdx, init, if (i < seeds.length) seeds(i) else Unseeded, body)
         }, outSchema)
     }
@@ -98,7 +106,20 @@ private[graft] object Ranged {
     * partitions being the next stretch of one run: pass 1 with an empty
     * key, then the chain's final carry. Partition 0 folds from `init`, so
     * over one partition the result is the sequential fold's, bit for bit. */
-  def carry[A](df: DataFrame, init: A, law: Law[A]): A = chain(edges(df.rdd, Array.empty, init, law), init, law)._2
+  def carry[A](df: DataFrame, init: A, law: Law[A]): A = chain(edges(rows(df), Array.empty, init, law), init, law)._2
+
+  /** The rows of `df` with the values `collect()` gives, read from the
+    * plan `df` has already built: its `queryExecution.toRdd`, each row
+    * deserialized in the task by the `Row` encoder of `df.schema`, made
+    * under `df`'s session conf (which picks `java.time` or `java.sql`
+    * values). No second `QueryExecution` and no `DeserializeToObject`
+    * plan. Each row is deserialized before anything buffers it, as `toRdd`
+    * may reuse one `UnsafeRow` for every row of a partition. */
+  private[plumba] def rows(df: DataFrame): RDD[Row] = {
+    val enc = SQLConf.withExistingConf(df.sparkSession.sessionState.conf)(ExpressionEncoder(df.schema))
+    val fromRow = enc.resolveAndBind().createDeserializer()
+    df.queryExecution.toRdd.mapPartitions(_.map(fromRow))
+  }
 
   /** Walk one partition's key runs, the first from the seed's state. */
   private def walk[A](it: Iterator[Row], keyIdx: Array[Int], init: A, s: Seed,

@@ -30,6 +30,13 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(empty.collectFold(Seq("a"), Seq("idx"), sumKM) == 0.5)
   }
 
+  test("collectFold over an input of zero partitions returns init (every kernel kind)") {
+    val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    assert(none.rdd.getNumPartitions == 0)
+    val sumKC = sumK.copy(merge = Some(Merge(0.0, (a: Double, b: Double) => a + b, commutative = true)))
+    for (k <- Seq(sumK, sumKM, sumKC)) assert(none.collectFold(Seq("a"), Seq("idx"), k) == 0.5)
+  }
+
   test("collectFold over an all-null frame returns init (null-drop policy)") {
     val nulls = frame(Seq(Row(1, null), Row(2, null)))
     assert(nulls.collectFold(Seq("a"), Seq("idx"), sumK) == 0.5)
