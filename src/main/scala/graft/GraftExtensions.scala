@@ -6,11 +6,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 
 import org.apache.spark.sql.graft.ArrayScanExpr
 
-import graft.functions.{CosineSimExpr, HammingBitsExpr, HyperplaneSigExpr, MinHashFromHashes, MinHashPortable, QuantizedHyperplaneSigExpr, ShingleHashes, ShinglePortableHash, SimHash64Expr, SimHashBitsExpr}
+import graft.functions.{CosineSimExpr, HammingBitsExpr, MinHashPortable, QuantizedHyperplaneSigExpr, ShinglePortableHash, SimHashBitsExpr}
 
 /** `SparkSessionExtensions` installer: registers the graft custom
   * expressions as SQL functions, so `spark.sql("SELECT
-  * simhash64(split(lower(text), ' ')) ...")` works next to the Scala API.
+  * simhash_bits(split(lower(text), ' +')) ...")` works next to the Scala
+  * API. The hash functions are the md5-derived family: every value is
+  * recomputable in any engine with md5(varchar), which is what the
+  * DuckDB correctness oracles replay.
   *
   * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`.
@@ -38,17 +41,7 @@ object GraftExtensions {
   }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "shingle_hashes" -> ((args: Seq[Expression]) => ShingleHashes(args.head,
-      if (args.length > 1) intArg(args(1), "shingle width n") else 3)),
-    "minhash_signature" -> ((args: Seq[Expression]) => MinHashFromHashes(args.head,
-      if (args.length > 1) intArg(args(1), "signature size k") else 32)),
-    "simhash64" -> ((args: Seq[Expression]) => SimHash64Expr(args.head)),
     "cosine_sim" -> ((args: Seq[Expression]) => CosineSimExpr(args(0), args(1))),
-    "hyperplane_sig" -> ((args: Seq[Expression]) => HyperplaneSigExpr(args.head,
-      if (args.length > 1) intArg(args(1), "plane count") else 16)),
-    // engine-portable (md5-derived) variants — identical values are
-    // recomputable in any engine with md5(varchar), which is what the
-    // DuckDB correctness oracles replay
     "shingle_hash60" -> ((args: Seq[Expression]) => ShinglePortableHash(args.head,
       if (args.length > 1) intArg(args(1), "shingle width n") else 3)),
     "minhash60" -> ((args: Seq[Expression]) => MinHashPortable(args.head,

@@ -1,130 +1,36 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the hash-sketch hot paths.
+/** Custom Catalyst expressions for the hash-sketch hot paths — ONE
+  * hash family, md5-derived: every value (shingle hashes, MinHash
+  * components, SimHash bits, window and chunk hashes) is read from md5
+  * digests — their top 15 hex chars, their bits, or integer arithmetic
+  * on those — so any engine with `md5(varchar)` replays it value for
+  * value (the DuckDB oracles do). An xxhash64 family ran beside it until measured: it was only
+  * 1.12–1.20× faster (README) and no caller chose it.
   *
-  * Rationale (measured, sf0.1 documents = 5k docs × ~52 shingles):
-  * the higher-order-function formulation (`transform(sequence(0,k-1),
-  * seed -> array_min(transform(hashes, h -> xxhash64(seed, h))))`)
-  * evaluates interpreted lambdas AND re-evaluates the inner array
-  * expression once per seed — 86 s for what is ~8M hash calls. These
-  * expressions do the same work as one compiled loop per row (< 1 s).
-  * This is preference order (b) from the build contract: a native
-  * `Expression` where the built-in operator composition genuinely cannot
-  * express the computation efficiently.
+  * Rationale for compiled expressions (measured, sf0.1 documents = 5k
+  * docs × ~52 shingles): the higher-order-function formulation
+  * (`transform(sequence(0,k-1), seed -> array_min(transform(hashes,
+  * h -> hash(seed, h))))`) evaluates interpreted lambdas AND
+  * re-evaluates the inner array expression once per seed — 86 s for
+  * what is ~8M hash calls. These expressions do the same work as one
+  * compiled loop per row (< 1 s). This is preference order (b) from the
+  * build contract: a native `Expression` where the built-in operator
+  * composition genuinely cannot express the computation efficiently.
   *
   * `CodegenFallback` is deliberate: the eval body is a tight compiled
   * Scala loop over `ArrayData`, and these sit in a projection beside
   * codegen'd neighbors; fusing them into generated Java would save only
   * the per-row call overhead.
   */
-
-/** Word n-gram shingle set → 64-bit hash per distinct shingle.
-  * Input: array<string> words (e.g. `split(lower(text), " +")`).
-  * Output: array<bigint>, one xxhash64 per distinct n-gram. */
-case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "shingle_hashes"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[ArrayData]
-    val len = words.numElements()
-    val nShingles = math.max(len - n + 1, 1)
-    val seen = new java.util.HashSet[Long](nShingles * 2)
-    val out = new Array[Long](nShingles)
-    var outLen = 0
-    val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    while (i < nShingles) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n && i + j < len) {
-        if (j > 0) sb.append(' ')
-        val w = words.getUTF8String(i + j)
-        if (w != null) sb.append(w.toString)
-        j += 1
-      }
-      val h = XxHash64Function.hash(UTF8String.fromString(sb.toString), StringType, 42L)
-      if (seen.add(h)) { out(outLen) = h; outLen += 1 }
-      i += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(out, outLen))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes = copy(child = newChild)
-}
-
-/** MinHash signature from pre-hashed shingles: for each of k seeds, the
-  * minimum seeded remix of the input hashes. One compiled pass:
-  * W elements × k seeds. Empty input → signature of Long.MaxValue. */
-case class MinHashFromHashes(child: Expression, k: Int) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val hashes = input.asInstanceOf[ArrayData]
-    val len = hashes.numElements()
-    val sig = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    while (i < len) {
-      val h = hashes.getLong(i)
-      var s = 0
-      while (s < k) {
-        val m = XxHash64Function.hash(h, LongType, s.toLong)
-        if (m < sig(s)) sig(s) = m
-        s += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(sig)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashFromHashes = copy(child = newChild)
-}
-
-/** 64-bit SimHash from a words array: per-word xxhash64, majority vote
-  * per bit. One compiled pass: W × 64 bit tests. */
-case class SimHash64Expr(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val words = input.asInstanceOf[ArrayData]
-    val len = words.numElements()
-    val counts = new Array[Int](64)
-    var i = 0
-    var n = 0
-    while (i < len) {
-      val w = words.getUTF8String(i)
-      if (w != null) {
-        val h = XxHash64Function.hash(w, StringType, 42L)
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) counts(b) += 1
-          b += 1
-        }
-        n += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (counts(b) * 2 > n) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr = copy(child = newChild)
-}
 
 /** Shared thread-confined MD5 digester for the portable hash family.
   * MessageDigest is not thread-safe and `getInstance` per call would
@@ -237,8 +143,7 @@ case class Md5Hash60(child: Expression) extends UnaryExpression {
 /** ENGINE-PORTABLE shingle hashing: word n-gram shingles → one 60-bit
   * md5-derived integer per DISTINCT shingle (the top 15 hex chars of
   * `md5(shingle)` read as a number — equivalently, the big-endian first
-  * 8 digest bytes >>> 4). Unlike [[ShingleHashes]] (xxhash64 — fast but
-  * Spark-only), every value is replayable in any engine with
+  * 8 digest bytes >>> 4). Every value is replayable in any engine with
   * `md5(varchar)` + integer arithmetic; 60 bits (not 64) so the DuckDB
   * replay stays inside signed BIGINT and the MinHash remix stays inside
   * HUGEINT. One md5 per shingle — the per-seed work downstream is pure
@@ -276,16 +181,6 @@ case class ShinglePortableHash(child: Expression, n: Int) extends UnaryExpressio
   override protected def withNewChildInternal(newChild: Expression): ShinglePortableHash = copy(child = newChild)
 }
 
-/** POSITIONAL window hashing for substring-level exact dedup: the
-  * 60-bit md5 hash ([[Md5.top60]]) of EVERY w-word sliding window, in
-  * offset order — `out(i) = hash60(words[i..i+w-1] joined by ' ')`, so
-  * `posexplode` yields 0-based (offset, hash) pairs. Unlike
-  * [[ShinglePortableHash]] this keeps positions and duplicates (a
-  * within-doc repeat IS a signal here) and emits NOTHING for documents
-  * shorter than one full window (no partial spans — an exact-span
-  * operator must not hash a truncated span as if it were full). Same
-  * portability contract: any engine replays each value by parsing the
-  * top 15 hex chars of md5(span). */
 /** Content-defined-chunking SPANS over a STRING: position `i` (1-based)
   * is a boundary when `top60(md5(substring(text, i, w))) % maskMod == 0`
   * — the cut falls at `i + w − 1` (the chunk ends with its boundary
@@ -297,7 +192,7 @@ case class ShinglePortableHash(child: Expression, n: Int) extends UnaryExpressio
   *
   * Emitting SPANS (not cut points) is load-bearing twice over: the
   * interpreted `filter(sequence(...), i -> md5(substring(...)))` HOF
-  * chain measured 52.8 s on the sf0.1 corpus (the ShingleHashes lesson),
+  * chain measured 52.8 s on the sf0.1 corpus (the header's HOF lesson),
   * and a separate cuts→spans projection references the cuts array four
   * times, which CollapseProject inlines into FOUR md5 loops per row
   * (the langIdHeuristic expression-duplication trap). One expression,
@@ -375,6 +270,16 @@ case class CdcSpans(child: Expression, w: Int, maskMod: Int)
   override protected def withNewChildInternal(newChild: Expression): CdcSpans = copy(child = newChild)
 }
 
+/** POSITIONAL window hashing for substring-level exact dedup: the
+  * 60-bit md5 hash ([[Md5.top60]]) of EVERY w-word sliding window, in
+  * offset order — `out(i) = hash60(words[i..i+w-1] joined by ' ')`, so
+  * `posexplode` yields 0-based (offset, hash) pairs. Unlike
+  * [[ShinglePortableHash]] this keeps positions and duplicates (a
+  * within-doc repeat IS a signal here) and emits NOTHING for documents
+  * shorter than one full window (no partial spans — an exact-span
+  * operator must not hash a truncated span as if it were full). Same
+  * portability contract: any engine replays each value by parsing the
+  * top 15 hex chars of md5(span). */
 case class WindowHash60(child: Expression, w: Int) extends UnaryExpression with CodegenFallback {
   require(w > 0, "window width must be positive")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -418,7 +323,7 @@ case class WindowHash60(child: Expression, w: Int) extends UnaryExpression with 
   * divides 2^64. k×W multiply-adds instead of k×W md5 calls — measured
   * ~3× faster on the sf0.1 dedup family than the min-over-md5-hex
   * scheme, with the same oracle-exactness. Empty input → Long.MaxValue
-  * per component (matches [[MinHashFromHashes]]). */
+  * per component. */
 case class MinHashPortable(child: Expression, k: Int) extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash60"
@@ -527,15 +432,6 @@ case class HammingBitsExpr(left: Expression, right: Expression)
 
 object HashFunctions {
   private def expr(c: Column): Expression = ColumnBridge.expression(c)
-
-  def shingleHashes(words: Column, n: Int): Column =
-    ColumnBridge.column(ShingleHashes(expr(words), n))
-
-  def minHashSignature(hashes: Column, k: Int): Column =
-    ColumnBridge.column(MinHashFromHashes(expr(hashes), k))
-
-  def simHash64(words: Column): Column =
-    ColumnBridge.column(SimHash64Expr(expr(words)))
 
   def shingleHash60(words: Column, n: Int): Column =
     ColumnBridge.column(ShinglePortableHash(expr(words), n))

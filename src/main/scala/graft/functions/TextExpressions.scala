@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled text-statistics expressions — same design as the hash-sketch
-  * family ([[ShingleHashes]] et al.): `CodegenFallback` with a tight
+  * family ([[ShinglePortableHash]] et al.): `CodegenFallback` with a tight
   * compiled eval loop. The interpreted higher-order-function
   * formulation (`transform` + `array_distinct` + explode/group/max)
   * re-evaluates nested lambdas per element and shuffles every n-gram;

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -58,66 +58,6 @@ case class CosineSimExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Random-hyperplane signature: `nPlanes` sign bits as a "0"/"1" string.
-  * Plane components are deterministic pseudo-randoms in [-1,1) derived
-  * from (plane, dim) via xxhash64 — identical on every executor, nothing
-  * to broadcast. The component matrix depends only on (nPlanes, dims),
-  * so it is computed ONCE per task and cached (recomputing it per row
-  * costs nPlanes×dims hash calls per row — measured to dominate the
-  * projection arithmetic). */
-case class HyperplaneSigExpr(child: Expression, nPlanes: Int)
-    extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "hyperplane_sig"
-
-  private lazy val isFloat = VecRead.isFloatArray(child.dataType)
-
-  // benign race: concurrent tasks sharing this instance would build
-  // identical matrices; last assignment wins, both are correct
-  @transient private var cachedDims = -1
-  @transient private var planes: Array[Double] = _
-
-  private def planeMatrix(dims: Int): Array[Double] = {
-    if (cachedDims != dims) {
-      val m = new Array[Double](nPlanes * dims)
-      var p = 0
-      while (p < nPlanes) {
-        var d = 0
-        while (d < dims) {
-          val h = XxHash64Function.hash(d.toLong, LongType, p.toLong)
-          m(p * dims + d) = h.toDouble / Long.MaxValue.toDouble
-          d += 1
-        }
-        p += 1
-      }
-      planes = m
-      cachedDims = dims
-    }
-    planes
-  }
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val vec = input.asInstanceOf[ArrayData]
-    val n = vec.numElements()
-    val m = planeMatrix(n)
-    val bits = new Array[Char](nPlanes)
-    var p = 0
-    while (p < nPlanes) {
-      var proj = 0.0
-      var d = 0
-      while (d < n) {
-        proj += VecRead.get(vec, d, isFloat) * m(p * n + d)
-        d += 1
-      }
-      bits(p) = if (proj >= 0) '1' else '0'
-      p += 1
-    }
-    UTF8String.fromString(new String(bits))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSigExpr = copy(child = newChild)
-}
-
 /** ENGINE-PORTABLE random-hyperplane signature: the vector is quantized
   * to `floor(x * 1000)` (exact IEEE double math, identical in every
   * engine) and the plane components are Rademacher ±1 signs drawn from
@@ -126,8 +66,10 @@ case class HyperplaneSigExpr(child: Expression, nPlanes: Int)
   * arithmetic: exact, order-independent, and replayable in SQL (no
   * float-summation-order hazard), which is what makes the LSH-bucketed
   * similarity queries oracle-able in DuckDB. ±1 hyperplanes over a
-  * quantized vector are a standard SimHash-style LSH family; the sign
-  * matrix is cached per (nPlanes, dims) like [[HyperplaneSigExpr]]. */
+  * quantized vector are a standard SimHash-style LSH family. The sign
+  * matrix depends only on (nPlanes, dims), so it is computed ONCE per
+  * task and cached (recomputing it per row costs nPlanes×dims md5 calls
+  * per row, which would dominate the projection arithmetic). */
 case class QuantizedHyperplaneSigExpr(child: Expression, nPlanes: Int)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = StringType
@@ -360,9 +302,6 @@ case class KmeansArgminTwoLevelExpr(child: Expression,
 object VectorFunctions {
   def cosineSim(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  def hyperplaneSignature(vec: Column, nPlanes: Int): Column =
-    ColumnBridge.column(HyperplaneSigExpr(ColumnBridge.expression(vec), nPlanes))
 
   def hyperplaneSignatureQ(vec: Column, nPlanes: Int): Column =
     ColumnBridge.column(QuantizedHyperplaneSigExpr(ColumnBridge.expression(vec), nPlanes))

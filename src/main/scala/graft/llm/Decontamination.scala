@@ -114,8 +114,8 @@ object Decontamination {
     * near-duplicate (exact cosine ≥ `threshold`) of ANY eval vector.
     *
     * Scale shape: both sides are banded by the quantized-hyperplane
-    * LSH signature ([[Similarity.hyperplaneSignature]] portable mode —
-    * candidates only on shared bands, NEVER all-pairs), and the eval
+    * LSH signature ([[Similarity.hyperplaneSignature]] — candidates
+    * only on shared bands, NEVER all-pairs), and the eval
     * side — small by construction, a benchmark suite — is BROADCAST,
     * so the training corpus is probed scan-side: one narrow pass
     * computing the signature, a broadcast equi-join on the band key,

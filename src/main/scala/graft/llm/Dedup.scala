@@ -9,25 +9,22 @@ import org.apache.spark.sql.functions._
   * Scale design (the 100 TB story):
   *  - Exact dedup is one hash-aggregate on a 128-bit content hash — the
   *    shuffle carries (hash, id), never the text.
-  *  - MinHash/SimHash signatures are computed scan-side with built-in
-  *    codegen'd functions only (split/transform/xxhash64/array_min) —
-  *    no UDF, no shuffle. Candidate generation explodes per LSH band
-  *    (bounded factor = #bands) and shuffles only (bucket-key, id,
-  *    signature); pair verification happens inside each bucket group.
-  *    Hot buckets (skew) are capped with an explicit, logged limit —
-  *    never silently.
+  *  - MinHash/SimHash signatures are computed scan-side by compiled
+  *    expressions ([[graft.functions.HashFunctions]]) — no UDF, no
+  *    shuffle. Candidate generation explodes per LSH band (bounded
+  *    factor = #bands) and shuffles only (bucket-key, id, signature);
+  *    pair verification happens inside each bucket group
+  *    ([[bucketPairs]]). Hot buckets (skew) are capped with an
+  *    explicit, auditable limit — never silently.
   *  - Exact-Jaccard verification joins candidate id-pairs back to the
   *    shingle sets — proportional to candidates, not n².
   *
-  * `portable = true` (the default) selects the md5-derived hash family
-  * every value of which the DuckDB oracle replays; `false` the raw
-  * xxhash64 variants. The tax was MEASURED, not assumed: sf0.1
-  * documents at local[32], min of 3 warm reps — minHashPairs 0.712 s
-  * portable vs 0.635 s xxhash64 (1.12×), simHashPairs 0.510 vs
-  * 0.424 s (1.20×; table in README). Both modes run the same compiled
-  * expressions and identical plans — the digest choice is the only
-  * delta — so cross-engine verifiability costs ~15% and stays the
-  * default.
+  * There is ONE hash family, md5-derived, every value of which the
+  * DuckDB oracle replays. An xxhash64 family ran beside it until its
+  * speed-up was measured at only 1.12–1.20× (sf0.1 documents at
+  * local[32], min of 3 warm reps: minHashPairs 0.712 vs 0.635 s,
+  * simHashPairs 0.510 vs 0.424 s; table in README) — too little to
+  * keep a second family no caller chose.
   */
 object Dedup {
 
@@ -39,46 +36,30 @@ object Dedup {
         i => concat_ws(" ", slice(words, i + 1, lit(n)))))
   }
 
-  /** 64-bit hashes of the shingle set — custom compiled expression
-    * ([[graft.functions.ShingleHashes]]); the HOF formulation
-    * (`transform(shingles, xxhash64)`) is interpreted and measured 10×
-    * slower. Hash values are identical to `xxhash64(shingle)` (seed 42). */
-  def shingleHashes(text: Column, n: Int = 3): Column =
-    graft.functions.HashFunctions.shingleHashes(split(lower(text), " +"), n)
-
-  /** MinHash signature of `k` permutations: min over the shingle hashes
-    * remixed per seed — one compiled pass ([[graft.functions.MinHashFromHashes]]);
-    * the nested-lambda formulation re-evaluates the hash array once per
-    * seed (measured 86 s → sub-second on sf0.1 documents). */
-  def minHashSignature(hashes: Column, k: Int = 32): Column =
-    graft.functions.HashFunctions.minHashSignature(hashes, k)
-
-  /** ENGINE-PORTABLE shingle hashing: one 60-bit md5-derived integer
-    * per distinct n-gram shingle ([[graft.functions.ShinglePortableHash]])
-    * — every value replayable by the DuckDB oracle (parse the top 15
-    * hex chars of md5). One md5 per shingle, same as the xxhash64 path's
-    * one hash per shingle. */
+  /** Shingle hashing: one 60-bit md5-derived integer per distinct
+    * n-gram shingle ([[graft.functions.ShinglePortableHash]]) — every
+    * value replayable by the DuckDB oracle (parse the top 15 hex chars
+    * of md5). One compiled pass, one md5 per shingle; the HOF
+    * formulation (`transform(shingles, hash)`) is interpreted and
+    * measured 10× slower. */
   def shingleMd5(text: Column, n: Int = 3): Column =
     graft.functions.HashFunctions.shingleHash60(split(lower(text), " +"), n)
 
-  /** ENGINE-PORTABLE MinHash over 60-bit shingle hashes: per-seed
-    * affine remix `(A_s*h + B_s) mod 2^60`, min per seed — pure integer
-    * arithmetic the oracle replays in HUGEINT
-    * ([[graft.functions.MinHashPortable]]). */
+  /** MinHash over 60-bit shingle hashes: per-seed affine remix
+    * `(A_s*h + B_s) mod 2^60`, min per seed — one compiled pass of pure
+    * integer arithmetic the oracle replays in HUGEINT
+    * ([[graft.functions.MinHashPortable]]); the nested-lambda
+    * formulation re-evaluates the hash array once per seed (measured
+    * 86 s → sub-second on sf0.1 documents). */
   def minHashSignatureP(hashes60: Column, k: Int = 32): Column =
     graft.functions.HashFunctions.minHash60(hashes60, k)
 
-  /** LSH band keys: the signature is cut into `bands` slices of `rowsPer`
-    * entries; each slice is hashed to one bucket key. Docs sharing ANY
-    * band key become candidates (standard banding amplification). */
-  def bandKeys(sig: Column, bands: Int, rowsPer: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      xxhash64(concat_ws(",", transform(slice(sig, b * rowsPer + 1, lit(rowsPer)), _.cast("string")), b.cast("string"))))
-
-  /** ENGINE-PORTABLE band keys: built-in md5 of
-    * "sliceJoinedByComma:bandIdx" (signature components rendered as
+  /** LSH band keys: the signature is cut into `bands` slices of
+    * `rowsPer` entries; each slice becomes one bucket key, the built-in
+    * md5 of "sliceJoinedByComma:bandIdx" (components rendered as
     * decimal strings) — codegen'd, and the DuckDB oracle recomputes the
-    * identical hex keys. */
+    * identical hex keys. Docs sharing ANY band key become candidates
+    * (standard banding amplification). */
   def bandKeysP(sig: Column, bands: Int, rowsPer: Int): Column =
     transform(sequence(lit(0), lit(bands - 1)), b =>
       md5(concat_ws(":",
@@ -194,10 +175,8 @@ object Dedup {
       k: Int = 32,
       bands: Int = 8,
       threshold: Double = 0.5,
-      maxBucket: Int = 1000,
-      portable: Boolean = true): DataFrame =
-    minHashPairsFromHashes(shingleHashSets(df, idCol, textCol, n, portable),
-      k, bands, threshold, maxBucket, portable)
+      maxBucket: Int = 1000): DataFrame =
+    minHashPairsFromHashes(shingleHashSets(df, idCol, textCol, n), k, bands, threshold, maxBucket)
 
   /** Per-doc distinct shingle-hash sets `(id, hs)` — the ONE
     * shingle-hashing pass of the dedup pipeline, shared between
@@ -207,11 +186,8 @@ object Dedup {
     * spill at cluster scale) — the hash pass is the dominant CPU term
     * and Spark performs no cross-join common-subexpression reuse, so an
     * unmaterialized plan recomputes it per consumer. */
-  def shingleHashSets(df: DataFrame, idCol: String, textCol: String, n: Int = 3,
-      portable: Boolean = true): DataFrame = {
-    val setCol = if (portable) shingleMd5(col(textCol), n) else shingleHashes(col(textCol), n)
-    df.select(col(idCol).as("id"), setCol.as("hs"))
-  }
+  def shingleHashSets(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
+    df.select(col(idCol).as("id"), shingleMd5(col(textCol), n).as("hs"))
 
   /** Exploded LSH band-bucket index `(id, sig, bucket)` — one row per
     * (doc, band) over precomputed shingle-hash sets `(id, hs)`. This is
@@ -219,77 +195,69 @@ object Dedup {
     * `bucket`) it is the static corpus index; being all expression-based
     * it also runs unchanged on a STREAMING DataFrame to band each
     * arriving doc for the probe join. Batch candidate generation
-    * ([[minHashPairsFromHashes]]) groups this same frame by bucket. */
-  def bandBuckets(sets: DataFrame, k: Int = 32, bands: Int = 8,
-      portable: Boolean = true): DataFrame = {
-    val rowsPer = k / bands
-    val sigCol =
-      if (portable) minHashSignatureP(col("hs"), k)
-      else minHashSignature(col("hs"), k)
-    val bandsCol =
-      if (portable) bandKeysP(col("sig"), bands, rowsPer)
-      else bandKeys(col("sig"), bands, rowsPer)
-    sets.select(col("id"), sigCol.as("sig"))
-      .select(col("id"), col("sig"), explode(bandsCol).as("bucket"))
-  }
+    * ([[minHashPairsFromHashes]]) and the audit histogram
+    * ([[lshBuckets]]) group this same frame by bucket. */
+  def bandBuckets(sets: DataFrame, k: Int = 32, bands: Int = 8): DataFrame =
+    sets.select(col("id"), minHashSignatureP(col("hs"), k).as("sig"))
+      .select(col("id"), col("sig"), explode(bandKeysP(col("sig"), bands, k / bands)).as("bucket"))
 
   /** [[minHashPairs]] over precomputed shingle-hash sets `(id, hs)`
-    * from [[shingleHashSets]] (same `portable` flag — the per-seed
-    * remix must match the hash family). */
+    * from [[shingleHashSets]]. */
   def minHashPairsFromHashes(
       sets: DataFrame,
       k: Int = 32,
       bands: Int = 8,
       threshold: Double = 0.5,
-      maxBucket: Int = 1000,
-      portable: Boolean = true): DataFrame = {
-    val buckets = bandBuckets(sets, k, bands, portable)
-    val grouped = buckets
-      .groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col("sig"))).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-    // pairs within a bucket (i<j), then global dedup on the id pair
-    val pairs = grouped.select(explode(
-      flatten(transform(col("members"), (m, i) =>
-        transform(slice(col("members"), i + 2, size(col("members"))), o =>
-          struct(
-            least(m.getField("id"), o.getField("id")).as("id_a"),
-            greatest(m.getField("id"), o.getField("id")).as("id_b"),
-            signatureSimilarity(m.getField("sig"), o.getField("sig")).as("est_jaccard")))))).as("p"))
-      .select("p.*")
-      .filter(col("est_jaccard") >= threshold)
-      .groupBy("id_a", "id_b")
-      .agg(max("est_jaccard").as("est_jaccard"))
-    pairs
-  }
+      maxBucket: Int = 1000): DataFrame =
+    bucketPairs(bandBuckets(sets, k, bands), "bucket", Seq("id", "sig"), maxBucket,
+      (m, o) => Seq(signatureSimilarity(m.getField("sig"), o.getField("sig")).as("est_jaccard")),
+      keep = col("est_jaccard") >= threshold,
+      aggs = Seq(max("est_jaccard").as("est_jaccard")))
 
   /** The LSH bucket histogram — for auditing what maxBucket drops. */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String, n: Int = 3, k: Int = 32, bands: Int = 8,
-      portable: Boolean = true): DataFrame = {
-    val rowsPer = k / bands
-    val sigCol =
-      if (portable) minHashSignatureP(shingleMd5(col(textCol), n), k)
-      else minHashSignature(shingleHashes(col(textCol), n), k)
-    val sigs = df.select(col(idCol).as("id"), sigCol.as("sig"))
-    val bandsCol =
-      if (portable) bandKeysP(col("sig"), bands, rowsPer)
-      else bandKeys(col("sig"), bands, rowsPer)
-    sigs.select(explode(bandsCol).as("bucket"))
+  def lshBuckets(df: DataFrame, idCol: String, textCol: String, n: Int = 3, k: Int = 32,
+      bands: Int = 8): DataFrame =
+    bandBuckets(shingleHashSets(df, idCol, textCol, n), k, bands)
       .groupBy("bucket").agg(count(lit(1)).as("n"))
-  }
 
-  /** 64-bit SimHash over word tokens: bit b of the result is set iff
-    * more token hashes have bit b set than clear. Custom compiled
-    * expression ([[graft.functions.SimHash64Expr]]) — one pass per row
-    * instead of 64 interpreted filter scans. */
-  def simHash64(text: Column): Column =
-    graft.functions.HashFunctions.simHash64(split(lower(text), " +"))
+  /** The bucket-pair skeleton every LSH pairer rides
+    * ([[minHashPairsFromHashes]], [[bitSignaturePairs]],
+    * [[crossModalPairs]] and [[Similarity.cosineNearDupPairs]]): group
+    * `banded` on `bucketCol` (the ONE corpus shuffle), collect each
+    * bucket's `memberCols` (one of them `id`), drop buckets outside
+    * 2..`maxBucket` (an oversize bucket — a degenerate signature —
+    * drops, loud in the audit histograms, never a quadratic), emit every
+    * in-bucket i<j pair as `(id_a, id_b, scores…)` — `scores` maps the
+    * two member structs to named columns — keep the pairs `keep`
+    * accepts, and reduce each (id_a, id_b) over the buckets it shares
+    * with `aggs`. Banding and the NULL-signature policy stay with the
+    * caller. */
+  private[llm] def bucketPairs(
+      banded: DataFrame,
+      bucketCol: String,
+      memberCols: Seq[String],
+      maxBucket: Int,
+      scores: (Column, Column) => Seq[Column],
+      keep: Column,
+      aggs: Seq[Column]): DataFrame =
+    banded.groupBy(bucketCol)
+      .agg(collect_list(struct(memberCols.map(col): _*)).as("members"))
+      .filter(size(col("members")).between(2, maxBucket))
+      .select(explode(
+        flatten(transform(col("members"), (m, i) =>
+          transform(slice(col("members"), i + 2, size(col("members"))), o =>
+            struct(
+              least(m.getField("id"), o.getField("id")).as("id_a") +:
+                greatest(m.getField("id"), o.getField("id")).as("id_b") +:
+                scores(m, o): _*))))).as("p"))
+      .select("p.*")
+      .filter(keep)
+      .groupBy("id_a", "id_b")
+      .agg(aggs.head, aggs.tail: _*)
 
-  /** Hamming distance between two 64-bit SimHashes. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** ENGINE-PORTABLE SimHash as a 64-char '0'/'1' bit string: per-word
-    * md5-derived bits, majority vote ([[graft.functions.SimHashBitsExpr]]).
+  /** SimHash as a 64-char '0'/'1' bit string: per-word md5-derived
+    * bits, majority vote ([[graft.functions.SimHashBitsExpr]]) — one
+    * compiled pass per row instead of 64 interpreted filter scans.
     * Band keys are plain substrings and the DuckDB oracle rebuilds the
     * identical string with substr/strpos arithmetic. */
   def simHashBits(text: Column): Column =
@@ -301,57 +269,15 @@ object Dedup {
 
   /** SimHash near-dup pairs: band the 64 bits into 4×16-bit keys (any
     * exact-matching band ⇒ candidate; guarantees recall for hamming ≤ 3),
-    * verify with full hamming distance. `portable = true` uses the
-    * md5-derived bit-string signature (oracle-replayable); `false` the
-    * faster xxhash64 64-bit long. */
-  def simHashPairs(df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3, maxBucket: Int = 1000,
-      portable: Boolean = true): DataFrame = {
-    if (portable)
-      bitSignaturePairs(df.select(col(idCol).as("id"), simHashBits(col(textCol)).as("sig")),
-        "id", "sig", nBits = 64, bands = 4, maxHamming = maxHamming, maxBucket = maxBucket)
-    else
-      // same banded skeleton as the portable path — only the band key
-      // (16-bit slices of the long) and the hamming verifier differ
-      bandedPairs(
-        df.select(col(idCol).as("id"), simHash64(col(textCol)).as("sig")),
-        bands = 4,
-        bandKey = b => shiftright(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)).cast("string"),
-        hamming = (a, o) => hamming64(a, o).cast("int"),
-        maxHamming = maxHamming, maxBucket = maxBucket)
-  }
-
-  /** The banded-LSH pairing skeleton both signature families ride:
-    * explode each row into `bands` bucket keys, group on the bucket
-    * (the ONE corpus shuffle), cap oversize buckets at `maxBucket`,
-    * emit in-bucket i<j pairs verified by `hamming`, and dedup the pair
-    * globally to its minimum distance. `sigs` must be `(id, sig)`;
-    * NULL signatures (decode failures) are dropped — a fingerprint that
-    * doesn't exist must not bucket. */
-  private def bandedPairs(sigs: DataFrame, bands: Int, bandKey: Int => Column,
-      hamming: (Column, Column) => Column, maxHamming: Int, maxBucket: Int): DataFrame = {
-    val banded = sigs.filter(col("sig").isNotNull)
-      .select(col("id"), col("sig"),
-        explode(array((0 until bands).map(b =>
-          concat_ws(":", lit(b).cast("string"), bandKey(b))): _*)).as("bucket"))
-    val grouped = banded.groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col("sig"))).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-    grouped.select(explode(
-      flatten(transform(col("members"), (m, i) =>
-        transform(slice(col("members"), i + 2, size(col("members"))), o =>
-          struct(
-            least(m.getField("id"), o.getField("id")).as("id_a"),
-            greatest(m.getField("id"), o.getField("id")).as("id_b"),
-            hamming(m.getField("sig"), o.getField("sig")).as("hamming")))))).as("p"))
-      .select("p.*")
-      .filter(col("hamming") <= maxHamming)
-      .groupBy("id_a", "id_b")
-      .agg(min("hamming").as("hamming"))
-  }
+    * verify with full hamming distance. */
+  def simHashPairs(df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3,
+      maxBucket: Int = 1000): DataFrame =
+    bitSignaturePairs(df.select(col(idCol).as("id"), simHashBits(col(textCol)).as("sig")),
+      "id", "sig", nBits = 64, bands = 4, maxHamming = maxHamming, maxBucket = maxBucket)
 
   /** Banded near-dup pairs over ANY '0'/'1' bit-string signature — the
-    * LSH machinery behind [[simHashPairs]]' portable path, factored out
-    * so other fingerprints ride it (a text SimHash, an image dHash
+    * LSH machinery behind [[simHashPairs]], factored out so other
+    * fingerprints ride it (a text SimHash, an image dHash
     * ([[Multimodal.imageDHash]]), any future perceptual hash): the
     * `nBits` signature splits into `bands` equal substrings; any
     * exact-matching band makes a candidate pair (guaranteed recall for
@@ -370,56 +296,27 @@ object Dedup {
     * not a crash.
     *
     * Scale shape: ONE shuffle on the band key; buckets cap at
-    * `maxBucket` (oversize buckets — degenerate signatures — drop,
-    * loud in the audit histograms, never a quadratic); pairs emit via
-    * the in-bucket i<j transform, so nothing is ever all-pairs.
-    * Output: (id_a, id_b, hamming), one row per surviving pair. */
+    * `maxBucket`; pairs emit via the in-bucket i<j transform
+    * ([[bucketPairs]]), so nothing is ever all-pairs.
+    * Output: (id_a, id_b, hamming), one row per surviving pair, at its
+    * minimum distance. */
   def bitSignaturePairs(df: DataFrame, idCol: String, sigCol: String,
       nBits: Int, bands: Int = 4, maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
     require(bands > 0 && nBits % bands == 0,
       s"nBits ($nBits) must split evenly into bands ($bands)")
     val bandLen = nBits / bands
-    bandedPairs(
-      df.select(col(idCol).as("id"), col(sigCol).as("sig")),
-      bands = bands,
-      bandKey = b => substring(col("sig"), b * bandLen + 1, bandLen),
-      hamming = (a, o) => hammingBits(a, o).cast("int"),
-      maxHamming = maxHamming, maxBucket = maxBucket)
+    val banded = df.select(col(idCol).as("id"), col(sigCol).as("sig"))
+      .filter(col("sig").isNotNull)
+      .select(col("id"), col("sig"),
+        explode(array((0 until bands).map(b =>
+          concat_ws(":", lit(b).cast("string"), substring(col("sig"), b * bandLen + 1, bandLen))): _*))
+          .as("bucket"))
+    bucketPairs(banded, "bucket", Seq("id", "sig"), maxBucket,
+      (m, o) => Seq(hammingBits(m.getField("sig"), o.getField("sig")).cast("int").as("hamming")),
+      keep = col("hamming") <= maxHamming,
+      aggs = Seq(min("hamming").as("hamming")))
   }
 
-  /** CROSS-MODAL near-dup pairs — the joint (caption, image) dedup a
-    * multimodal crawl needs: the common duplicate is the SAME image
-    * re-posted with a PARAPHRASED caption, which neither modality's
-    * dedup alone should collapse (same image + genuinely different
-    * caption is a reuse, not a dup; same caption + different image is
-    * an illustration swap). Candidates must therefore share a band in
-    * BOTH families at once: each row carries a MinHash signature
-    * (`textSigCol`, [[minHashSignatureP]] over the caption shingles)
-    * and a '0'/'1' perceptual bit signature (`bitSigCol`, e.g.
-    * [[Multimodal.imageDHash]]), and the bucket key is the COMPOSITE
-    * of one text band key and one image band substring — the
-    * `textBands × bitBands` cross product per row, so a pair is a
-    * candidate iff SOME text band matches AND SOME image band matches.
-    * Verification is dual too: estimated Jaccard ≥ `threshold` AND
-    * image Hamming ≤ `maxHamming`.
-    *
-    * Same scale skeleton as [[bitSignaturePairs]]' `bandedPairs` (ONE
-    * shuffle on the composite bucket, `maxBucket` cap, in-bucket i<j
-    * transform — never all-pairs); the row fan-out is
-    * `textBands · bitBands` band rows instead of `bands`. The banding
-    * amplification multiplies: a pair matching with prob p_t on some
-    * text band and p_i on some image band is a candidate with
-    * ~p_t · p_i — composite banding is deliberately STRICTER than
-    * either family alone, which is the semantics joint dedup wants.
-    *
-    * CALLER NOTE (CollapseProject): `textSigCol`/`bitSigCol` are each
-    * referenced by the bucket derivation AND the member struct; if
-    * they are unmaterialized expensive expressions the optimizer will
-    * inline them into both consumers — materialize the (id, tsig,
-    * isig) frame (localCheckpoint) before calling when the signatures
-    * are computed in-plan.
-    *
-    * Output: (id_a, id_b, est_jaccard, hamming). */
   /** The composite band-key explosion behind [[crossModalPairs]],
     * factored out so the day-2 INCREMENTAL deploy can persist the same
     * keys as a bucketed index (an [[graft.queries.Artifacts]] entry)
@@ -443,6 +340,39 @@ object Dedup {
               col("isig").substr(bi * lit(bandLen) + 1, lit(bandLen))))))).as("bucket"))
   }
 
+  /** CROSS-MODAL near-dup pairs — the joint (caption, image) dedup a
+    * multimodal crawl needs: the common duplicate is the SAME image
+    * re-posted with a PARAPHRASED caption, which neither modality's
+    * dedup alone should collapse (same image + genuinely different
+    * caption is a reuse, not a dup; same caption + different image is
+    * an illustration swap). Candidates must therefore share a band in
+    * BOTH families at once: each row carries a MinHash signature
+    * (`textSigCol`, [[minHashSignatureP]] over the caption shingles)
+    * and a '0'/'1' perceptual bit signature (`bitSigCol`, e.g.
+    * [[Multimodal.imageDHash]]), and the bucket key is the COMPOSITE
+    * of one text band key and one image band substring — the
+    * `textBands × bitBands` cross product per row, so a pair is a
+    * candidate iff SOME text band matches AND SOME image band matches.
+    * Verification is dual too: estimated Jaccard ≥ `threshold` AND
+    * image Hamming ≤ `maxHamming`.
+    *
+    * Same scale skeleton as [[bitSignaturePairs]] ([[bucketPairs]]: ONE
+    * shuffle on the composite bucket, `maxBucket` cap, in-bucket i<j
+    * transform — never all-pairs); the row fan-out is
+    * `textBands · bitBands` band rows instead of `bands`. The banding
+    * amplification multiplies: a pair matching with prob p_t on some
+    * text band and p_i on some image band is a candidate with
+    * ~p_t · p_i — composite banding is deliberately STRICTER than
+    * either family alone, which is the semantics joint dedup wants.
+    *
+    * CALLER NOTE (CollapseProject): `textSigCol`/`bitSigCol` are each
+    * referenced by the bucket derivation AND the member struct; if
+    * they are unmaterialized expensive expressions the optimizer will
+    * inline them into both consumers — materialize the (id, tsig,
+    * isig) frame (localCheckpoint) before calling when the signatures
+    * are computed in-plan.
+    *
+    * Output: (id_a, id_b, est_jaccard, hamming). */
   def crossModalPairs(df: DataFrame, idCol: String, textSigCol: String,
       bitSigCol: String, k: Int = 32, textBands: Int = 8,
       nBits: Int = 56, bitBands: Int = 4,
@@ -450,21 +380,12 @@ object Dedup {
       maxBucket: Int = 1000): DataFrame = {
     val banded = crossModalBandKeys(df, idCol, textSigCol, bitSigCol,
       k, textBands, nBits, bitBands)
-    val grouped = banded.groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col("tsig"), col("isig"))).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-    grouped.select(explode(
-      flatten(transform(col("members"), (m, i) =>
-        transform(slice(col("members"), i + 2, size(col("members"))), o =>
-          struct(
-            least(m.getField("id"), o.getField("id")).as("id_a"),
-            greatest(m.getField("id"), o.getField("id")).as("id_b"),
-            signatureSimilarity(m.getField("tsig"), o.getField("tsig")).as("est_jaccard"),
-            hammingBits(m.getField("isig"), o.getField("isig")).cast("int").as("hamming")))))).as("p"))
-      .select("p.*")
-      .filter(col("est_jaccard") >= threshold && col("hamming") <= maxHamming)
-      .groupBy("id_a", "id_b")
-      .agg(max("est_jaccard").as("est_jaccard"), min("hamming").as("hamming"))
+    bucketPairs(banded, "bucket", Seq("id", "tsig", "isig"), maxBucket,
+      (m, o) => Seq(
+        signatureSimilarity(m.getField("tsig"), o.getField("tsig")).as("est_jaccard"),
+        hammingBits(m.getField("isig"), o.getField("isig")).cast("int").as("hamming")),
+      keep = col("est_jaccard") >= threshold && col("hamming") <= maxHamming,
+      aggs = Seq(max("est_jaccard").as("est_jaccard"), min("hamming").as("hamming")))
   }
 
   /** Connected components over an undirected edge list (id_a, id_b) —
@@ -566,9 +487,9 @@ object Dedup {
     * the hash pass — prefer [[verifyJaccardSets]] with a materialized
     * [[shingleHashSets]] frame when the pairs came from
     * [[minHashPairsFromHashes]] over the same sets. */
-  def verifyJaccard(pairs: DataFrame, docs: DataFrame, idCol: String, textCol: String, n: Int = 3,
-      portable: Boolean = true): DataFrame =
-    verifyJaccardSets(pairs, shingleHashSets(docs, idCol, textCol, n, portable))
+  def verifyJaccard(pairs: DataFrame, docs: DataFrame, idCol: String, textCol: String,
+      n: Int = 3): DataFrame =
+    verifyJaccardSets(pairs, shingleHashSets(docs, idCol, textCol, n))
 
   /** Exact n-gram Jaccard verification against precomputed shingle-hash
     * sets `(id, hs)` — candidate-proportional: two joins of the pair

@@ -281,7 +281,7 @@ object Retrieval {
     * the corpus has them; MMR returns one copy plus k−1 genuinely
     * different neighbors.
     *
-    * All integer, bit-portable: relevance is the exact BIGINT dot
+    * All integer and bit-portable — relevance is the exact BIGINT dot
     * product of 1e-3-quantized embeddings (1e-6 cosine units on unit
     * vectors, the [[hybridRerank]] rule), pairwise similarity the same,
     * and the marginal score is `λmilli·rel − (1000−λmilli)·maxSim` —

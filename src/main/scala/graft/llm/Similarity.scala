@@ -13,13 +13,13 @@ import org.apache.spark.sql.functions._
   *    executors, then a per-query top-k window over |corpus| candidate
   *    rows. The baseline and the verifier for the approximate path.
   *  - [[lshTopK]]: random-hyperplane LSH. Signatures are computed
-  *    scan-side from deterministic pseudo-random planes (xxhash64-derived
-  *    — no RNG state to ship); candidates are corpus rows whose signature
-  *    shares a prefix band with the query, re-ranked exactly. At 100 TB
-  *    the corpus is bucketed by band key (one shuffle, or pre-bucketed at
-  *    write time) and each query probes only its buckets — recall is
-  *    tunable via bands/bits, and the drop vs brute force is measured,
-  *    not assumed (see SimilaritySpec).
+  *    scan-side from deterministic ±1 planes (md5-derived — no RNG state
+  *    to ship, and the oracle replays them); candidates are corpus rows
+  *    whose signature shares a prefix band with the query, re-ranked
+  *    exactly. At 100 TB the corpus is bucketed by band key (one
+  *    shuffle, or pre-bucketed at write time) and each query probes only
+  *    its buckets — recall is tunable via bands/bits, and the drop vs
+  *    brute force is measured, not assumed (see SimilaritySpec).
   *
   * All expressions are built-in HOFs (zip_with/aggregate/transform) —
   * codegen'd, no UDFs.
@@ -336,16 +336,14 @@ object Similarity {
     picked.toSeq.toDF("rank", idCol, "dist2")
   }
 
-  /** Sign bits of the vector against `nPlanes` deterministic pseudo-
-    * random hyperplanes, as a bit string column ("101..."). Prefix bands
-    * of this string are LSH bucket keys. `portable = true` (default)
-    * uses the quantized ±1-plane signature
-    * ([[graft.functions.QuantizedHyperplaneSigExpr]]) whose integer
-    * projections the DuckDB oracle replays exactly; `false` the
-    * Gaussian-ish xxhash64 planes ([[graft.functions.HyperplaneSigExpr]]). */
-  def hyperplaneSignature(vec: Column, nPlanes: Int = 16, portable: Boolean = true): Column =
-    if (portable) graft.functions.VectorFunctions.hyperplaneSignatureQ(vec, nPlanes)
-    else graft.functions.VectorFunctions.hyperplaneSignature(vec, nPlanes)
+  /** Sign bits of the vector against `nPlanes` deterministic
+    * md5-derived ±1 hyperplanes, as a bit string column ("101...").
+    * Prefix bands of this string are LSH bucket keys. The projections
+    * are integer arithmetic on the quantized vector
+    * ([[graft.functions.QuantizedHyperplaneSigExpr]]), which the DuckDB
+    * oracle replays exactly. */
+  def hyperplaneSignature(vec: Column, nPlanes: Int = 16): Column =
+    graft.functions.VectorFunctions.hyperplaneSignatureQ(vec, nPlanes)
 
   // ---------------------------------------------------------------------
   // Deterministic quantizer training (Lloyd's k-means on a bounded,
@@ -1146,17 +1144,17 @@ object Similarity {
   }
 
   /** The banded corpus: one row per (id, vec, band-key) — the shared
-    * first stage of [[cosineNearDupPairs]] and [[embeddingBuckets]]. */
+    * first stage of [[cosineNearDupPairs]], [[embeddingBuckets]] and
+    * [[lshTopK]]. */
   private def bandedCorpus(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
       nPlanes: Int,
-      bands: Int,
-      portable: Boolean): DataFrame = {
+      bands: Int): DataFrame = {
     val bits = nPlanes / bands
     corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .withColumn("sig", hyperplaneSignature(col("vec"), nPlanes, portable))
+      .withColumn("sig", hyperplaneSignature(col("vec"), nPlanes))
       .select(col("id"), col("vec"),
         explode(array((0 until bands).map(b =>
           concat_ws(":", lit(b), substring(col("sig"), b * bits + 1, bits))): _*)).as("band"))
@@ -1187,27 +1185,14 @@ object Similarity {
       threshold: Double = 0.95,
       nPlanes: Int = 16,
       bands: Int = 4,
-      maxBucket: Int = 1000,
-      portable: Boolean = true): DataFrame = {
-    val banded = bandedCorpus(corpus, idCol, vecCol, nPlanes, bands, portable)
-    val grouped = banded
-      .groupBy("band")
-      .agg(collect_list(struct(col("id"), col("vec"))).as("members"))
-      .filter(size(col("members")).between(2, maxBucket))
-    // pairs within a capped bucket (i<j); cosine is symmetric so the
-    // id order swap needs no vector realignment
-    grouped.select(explode(
-      flatten(transform(col("members"), (m, i) =>
-        transform(slice(col("members"), i + 2, size(col("members"))), o =>
-          struct(
-            least(m.getField("id"), o.getField("id")).as("id_a"),
-            greatest(m.getField("id"), o.getField("id")).as("id_b"),
-            cosine(m.getField("vec"), o.getField("vec")).as("cos")))))).as("p"))
-      .select("p.*")
-      .filter(col("cos") >= threshold)
-      .groupBy("id_a", "id_b")
-      .agg(max("cos").as("cos"))
-  }
+      maxBucket: Int = 1000): DataFrame =
+    // cosine is symmetric, so the skeleton's id-order swap needs no
+    // vector realignment
+    Dedup.bucketPairs(bandedCorpus(corpus, idCol, vecCol, nPlanes, bands), "band",
+      Seq("id", "vec"), maxBucket,
+      (m, o) => Seq(cosine(m.getField("vec"), o.getField("vec")).as("cos")),
+      keep = col("cos") >= threshold,
+      aggs = Seq(max("cos").as("cos")))
 
   /** Embedding-LSH bucket histogram — the audit view for
     * [[cosineNearDupPairs]]' hot-bucket cap: how many band buckets hold
@@ -1218,9 +1203,8 @@ object Similarity {
       idCol: String,
       vecCol: String,
       nPlanes: Int = 16,
-      bands: Int = 4,
-      portable: Boolean = true): DataFrame =
-    bandedCorpus(corpus, idCol, vecCol, nPlanes, bands, portable)
+      bands: Int = 4): DataFrame =
+    bandedCorpus(corpus, idCol, vecCol, nPlanes, bands)
       .groupBy("band").agg(count(lit(1)).as("n"))
 
   /** LSH-bucketed approximate top-k: candidates share any of `bands`
@@ -1233,25 +1217,15 @@ object Similarity {
       vecCol: String,
       k: Int = 5,
       nPlanes: Int = 16,
-      bands: Int = 4,
-      portable: Boolean = true): DataFrame = {
-    val bits = nPlanes / bands
-    def withBands(df: DataFrame, id: String, vec: String): DataFrame =
-      df.select(col(idCol).as(id), col(vecCol).as(vec))
-        .withColumn(s"${id}_sig", hyperplaneSignature(col(vec), nPlanes, portable))
-        .select(col(id), col(vec),
-          explode(array((0 until bands).map(b =>
-            concat_ws(":", lit(b), substring(col(s"${id}_sig"), b * bits + 1, bits))): _*)).as(s"${id}_band"))
-    val c = withBands(corpus, "corpus_id", "cvec")
-    val q = withBands(queries, "query_id", "qvec")
+      bands: Int = 4): DataFrame = {
+    val c = bandedCorpus(corpus, idCol, vecCol, nPlanes, bands).as("c")
+    val q = bandedCorpus(queries, idCol, vecCol, nPlanes, bands).select("id", "band").as("q")
     // A pair can match on several bands — dedup on the id PAIR only (the
     // distinct's shuffle key must never include the float vectors), then
     // rejoin the vectors for exact re-ranking: corpus vectors via one
     // id-keyed join, query vectors via broadcast.
-    val cands = c.join(broadcast(q.select("query_id", "query_id_band")),
-        col("corpus_id_band") === col("query_id_band") &&
-        col("corpus_id") =!= col("query_id"))
-      .select("query_id", "corpus_id", "cvec")
+    val cands = c.join(broadcast(q), col("c.band") === col("q.band") && col("c.id") =!= col("q.id"))
+      .select(col("q.id").as("query_id"), col("c.id").as("corpus_id"), col("c.vec").as("cvec"))
       .groupBy("query_id", "corpus_id").agg(first("cvec").as("cvec"))
     val qVecs = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
     val scored = cands.join(broadcast(qVecs), "query_id")

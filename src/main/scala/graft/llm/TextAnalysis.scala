@@ -93,10 +93,9 @@ object TextAnalysis {
       .otherwise(element_at(names, array_position(scores, best).cast("int")))
   }
 
-  /** Document fingerprints: md5 content hash (dedup key) and a 64-bit
-    * xxhash64 (cheap join key). */
+  /** Document fingerprint: md5 content hash of the lowercased text (the
+    * dedup key). */
   def fingerprintMd5(text: Column): Column = md5(to_binary(lower(text), lit("utf-8")))
-  def fingerprint64(text: Column): Column = xxhash64(lower(text))
 
   /** Canonical text normalization: lowercase, strip punctuation,
     * collapse whitespace runs, trim. */

@@ -11,13 +11,12 @@ import graft.llm.{Bpe, Decontamination, Dedup, Graph, Multimodal, Retrieval, Sam
   * Jaccard), similarity search (brute-force + LSH), multimodal plumbing.
   *
   * Oracle policy: operators whose semantics are engine-portable (string
-  * arithmetic, md5, counts) carry exact DuckDB SQL twins. Since round 3
-  * the whole dedup/LSH family runs in PORTABLE mode by default —
-  * md5-derived MinHash/SimHash/hyperplane signatures whose every
-  * intermediate value the DuckDB oracle recomputes — so those carry
-  * exact oracles too (the xxhash64 fast paths remain available via
-  * `portable = false`). Only float-valued stub features
-  * (media_features) remain rows-only, pinned by ScalaTests. */
+  * arithmetic, md5, counts) carry exact DuckDB SQL twins. The whole
+  * dedup/LSH family runs on the one md5-derived hash family —
+  * MinHash/SimHash/hyperplane signatures whose every intermediate value
+  * the DuckDB oracle recomputes — so those carry exact oracles too.
+  * Only float-valued stub features (media_features) remain rows-only,
+  * pinned by ScalaTests. */
 object LlmQueries {
 
   type Q = (SparkSession, String) => DataFrame
@@ -5925,8 +5924,8 @@ object LlmQueries {
   /** Shared DuckDB CTE chain replaying the QUANTIZED hyperplane LSH:
     * floor(x*1000) integer quantization, ±1 signs from md5 parity,
     * integer projections → 16-bit signature string → 4 bands of 4 bits
-    * (mirrors [[Similarity.hyperplaneSignature]] portable mode with
-    * nPlanes=16, bands=4). Projections are pure integer arithmetic —
+    * (mirrors [[Similarity.hyperplaneSignature]] with nPlanes=16,
+    * bands=4). Projections are pure integer arithmetic —
     * exact and order-independent in both engines. */
   private val hyperplaneCtes: String =
     """qv AS (SELECT vec_id, i, CAST(floor(CAST(embedding[i+1] AS DOUBLE) * 1000) AS BIGINT) AS q

@@ -11,11 +11,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
   test("custom expressions usable from SQL after registration") {
     GraftExtensions.registerTemp(spark)
     val r = spark.sql(
-      """SELECT simhash64(split(lower('a b c'), ' ')) AS sh,
-        |  size(shingle_hashes(split('a b c d', ' '), 2)) AS nsh,
-        |  size(minhash_signature(shingle_hashes(split('a b c d', ' '), 2), 16)) AS k
+      """SELECT simhash_bits(split(lower('a b c'), ' ')) AS sh,
+        |  size(shingle_hash60(split('a b c d', ' '), 2)) AS nsh,
+        |  size(minhash60(shingle_hash60(split('a b c d', ' '), 2), 16)) AS k
         |""".stripMargin).head
-    assert(r.getAs[Long]("sh") != 0L)
+    assert(r.getAs[String]("sh").length == 64 && r.getAs[String]("sh").contains('1'))
     assert(r.getAs[Int]("nsh") == 3) // "a b","b c","c d"
     assert(r.getAs[Int]("k") == 16)
   }
@@ -27,7 +27,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         |                  array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS self,
         |  cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
         |             array(CAST(0.0 AS FLOAT), CAST(1.0 AS FLOAT))) AS ortho,
-        |  length(hyperplane_sig(array(CAST(0.5 AS FLOAT), CAST(-0.5 AS FLOAT)), 8)) AS bits
+        |  length(hyperplane_sig_q(array(CAST(0.5 AS FLOAT), CAST(-0.5 AS FLOAT)), 8)) AS bits
         |""".stripMargin).head
     assert(math.abs(r.getAs[Double]("self") - 1.0) < 1e-12)
     assert(math.abs(r.getAs[Double]("ortho")) < 1e-12)
@@ -38,8 +38,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     GraftExtensions.registerTemp(spark)
     import spark.implicits._
     val df = Seq("the quick brown fox", "jumps over the dog").toDF("text")
-    val viaSql = df.selectExpr("simhash64(split(lower(text), ' ')) AS s").collect().map(_.getLong(0))
-    val viaCol = df.select(graft.llm.Dedup.simHash64($"text").as("s")).collect().map(_.getLong(0))
+    val viaSql = df.selectExpr("simhash_bits(split(lower(text), ' +')) AS s").collect().map(_.getString(0))
+    val viaCol = df.select(graft.llm.Dedup.simHashBits($"text").as("s")).collect().map(_.getString(0))
     assert(viaSql.sameElements(viaCol))
   }
 

@@ -70,9 +70,11 @@ class LlmSpec extends AnyFunSuite {
   }
 
   test("simhash: identical docs have distance 0, near-dups small, unrelated large") {
-    val sigs = docs.select($"doc_id", Dedup.simHash64($"text").as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(sigs(a) ^ sigs(b))
+    val sigs = docs.select($"doc_id".as("id"), Dedup.simHashBits($"text").as("sig"))
+    val dist = sigs.as("l").crossJoin(sigs.as("r"))
+      .select($"l.id", $"r.id", Dedup.hammingBits($"l.sig", $"r.sig"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    def ham(a: Long, b: Long) = dist((a, b))
     assert(ham(1L, 2L) == 0)
     assert(ham(1L, 3L) <= 10, s"near-dup hamming ${ham(1L, 3L)}")
     assert(ham(1L, 4L) > 10, s"unrelated hamming ${ham(1L, 4L)}")
@@ -135,6 +137,34 @@ class LlmSpec extends AnyFunSuite {
     val hist = Similarity.embeddingBuckets(corpus, "vec_id", "embedding")
       .collect().map(r => r.getLong(1)).toSet
     assert(hist.exists(_ >= 20L), s"audit histogram must surface the >=20-member bucket: $hist")
+  }
+
+  test("LSH pairers share one bucket cap: maxBucket members pair, maxBucket + 1 emit none") {
+    // n rows with IDENTICAL signatures land together in every band's
+    // bucket and every pair passes verification, so a pairer emits all
+    // C(n, 2) pairs or, once the bucket is over the cap, none
+    val maxBucket = 5
+    val bits = "0110100111010010"
+    val img = "01101001110100101011010011100101101001110100101101001110"
+    val pairers: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "bitSignaturePairs" -> (n => Dedup.bitSignaturePairs(
+        Seq.tabulate(n)(i => (i.toLong, bits)).toDF("id", "sig"), "id", "sig",
+        nBits = 16, bands = 4, maxHamming = 0, maxBucket = maxBucket)),
+      "minHashPairsFromHashes" -> (n => Dedup.minHashPairsFromHashes(
+        Seq.tabulate(n)(i => (i.toLong, Seq(11L, 22L, 33L))).toDF("id", "hs"),
+        threshold = 1.0, maxBucket = maxBucket)),
+      "crossModalPairs" -> (n => Dedup.crossModalPairs(
+        Seq.tabulate(n)(i => (i.toLong, Seq.tabulate(32)(_.toLong), img)).toDF("id", "tsig", "isig"),
+        "id", "tsig", "isig", threshold = 1.0, maxHamming = 0, maxBucket = maxBucket)),
+      "cosineNearDupPairs" -> (n => Similarity.cosineNearDupPairs(
+        Seq.tabulate(n)(i => (i.toLong, Seq(1.0f, -2.0f, 3.0f, 0.5f))).toDF("id", "vec"),
+        "id", "vec", threshold = 0.99, maxBucket = maxBucket)))
+    pairers.foreach { case (name, pairs) =>
+      val atCap = pairs(maxBucket).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(atCap === (for (a <- 0 until maxBucket; b <- a + 1 until maxBucket) yield (a.toLong, b.toLong)).toSet,
+        s"$name: a bucket of exactly maxBucket members must pair in full")
+      assert(pairs(maxBucket + 1).count() === 0L, s"$name: a bucket of maxBucket + 1 members must emit no pair")
+    }
   }
 
   test("parallel two-pass collectScanMergeable == sequential collectScan (running max)") {
