@@ -1,10 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.queries.Artifacts
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // File artifact beside the stdout line: stdout has repeatedly been
     // truncated by the harness (tail queries lost 3 rounds running), so
     // the identical JSON is ALWAYS written to a file too.
@@ -21,14 +19,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val catalog = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Warm up session machinery (codegen, parquet footer reads) so the
     // first timed query doesn't absorb one-time init cost.
     spark.range(1000).selectExpr("sum(id)").collect()

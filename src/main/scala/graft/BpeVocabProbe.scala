@@ -53,13 +53,7 @@ object BpeVocabProbe {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(20000)
     val vocab = args.lift(1).map(_.toInt).getOrElse(6000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val docs = corpus(spark, nDocs, 120, vocab).localCheckpoint(true)
     println(s"BPEVOCAB\tcorpus\t-\t-\t${docs.count()} docs")

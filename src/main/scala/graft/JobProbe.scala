@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 /** Round-21 job/stage breakdown probe: runs one catalog query (after a
   * warm rep) with a listener that prints per-job wall time and
   * per-stage task-time sums — where a gate's seconds actually go.
@@ -9,14 +8,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** State-growth probe for [[graft.streaming.StreamingNearDup]] — the
@@ -29,15 +28,8 @@ object NeardupStateProbe {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
+    spark.conf.set("spark.sql.shuffle.partitions", "8") // state partitions: fixed per stream
 
     val docs0 = graft.queries.Tables(spark, baseDir, "documents").select("doc_id", "text")
     val nBase = docs0.agg(max("doc_id")).head.getLong(0) + 1

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Writes `.explain("formatted")` output for named catalog queries to
   * files — the round-21+ optimization-evidence harness (plans/r21/).
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <name,name,...>
@@ -9,15 +8,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, names) = args.take(3)
     val only = names.split(",").toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.contains(n) }

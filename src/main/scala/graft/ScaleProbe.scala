@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *    `n_chars` stays valid.
   *
   * Usage: `sbt "runMain graft.ScaleProbe [baseDir] [copies]"` with
-  * SPARK_GRAFT_CPUS (default 32). Prints one `SCALE\t...` TSV line per
+  * SPARK_GRAFT_CPUS (default 4). Prints one `SCALE\t...` TSV line per
   * query: name, base seconds, 10× seconds, ratio, base rows, 10× rows.
   * Timing mirrors Bench: noop sink (all output columns computed),
   * min of SPARK_GRAFT_BENCH_REPS (default 2) warm reps.
@@ -400,16 +400,8 @@ object ScaleProbe {
     // iteration — probe only the operators that changed)
     val names = args.lift(2).map(_.split(",").toSeq).getOrElse(flagship)
     require(names.forall(flagship.contains), s"unknown probe name in $names")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val probeDir = java.nio.file.Files.createTempDirectory("graft_scale_").toString
     val t0 = System.nanoTime()

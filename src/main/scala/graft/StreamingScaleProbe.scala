@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** STREAMING scale probe — demonstrates that the streaming family's
@@ -37,15 +37,8 @@ object StreamingScaleProbe {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mults = args.lift(1).map(_.split(",").toSeq.map(_.toInt)).getOrElse(Seq(1, 10, 100))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8") // state partitions: fixed per stream
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
+    spark.conf.set("spark.sql.shuffle.partitions", "8") // state partitions: fixed per stream
 
     def stealTicks(): Long =
       try {

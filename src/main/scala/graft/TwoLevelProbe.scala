@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llm.Similarity
@@ -24,13 +23,7 @@ import graft.llm.Similarity
 object TwoLevelProbe {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     val k = 4096
     val n = 20000L
@@ -45,7 +38,7 @@ object TwoLevelProbe {
           s"((((id % $k) * 73856093) ^ (CAST(j AS BIGINT) * 19349663)) % 2001 - 1000 + " +
           s"((id * 31 + j * 17) % 21) - 10) AS DOUBLE) / 1000.0)")
       val df = spark.range(n).select(col("id"), vec.as("v"))
-        .repartition(cpus.toInt).localCheckpoint(true) // generation off the clock
+        .repartition(LocalSession.cpus).localCheckpoint(true) // generation off the clock
 
       def time(f: => org.apache.spark.sql.DataFrame): (Double, org.apache.spark.sql.DataFrame) = {
         f.foreach(_ => ()) // warm (codegen + JIT)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 /** Deduplication operator family for training-data pipelines: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -182,10 +183,9 @@ object Dedup {
     * shingle-hashing pass of the dedup pipeline, shared between
     * [[minHashPairsFromHashes]] (signatures) and [[verifyJaccardSets]]
     * (exact verification). Callers running both should materialize this
-    * frame once (`localCheckpoint`; reliable checkpoint / persist with
-    * spill at cluster scale) — the hash pass is the dominant CPU term
-    * and Spark performs no cross-join common-subexpression reuse, so an
-    * unmaterialized plan recomputes it per consumer. */
+    * frame once (`Materialize.shared`) — the hash pass is the dominant
+    * CPU term and Spark performs no cross-join common-subexpression
+    * reuse, so an unmaterialized plan recomputes it per consumer. */
   def shingleHashSets(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
     df.select(col(idCol).as("id"), shingleMd5(col(textCol), n).as("hs"))
 
@@ -369,8 +369,8 @@ object Dedup {
     * referenced by the bucket derivation AND the member struct; if
     * they are unmaterialized expensive expressions the optimizer will
     * inline them into both consumers — materialize the (id, tsig,
-    * isig) frame (localCheckpoint) before calling when the signatures
-    * are computed in-plan.
+    * isig) frame (`Materialize.shared`) before calling when the
+    * signatures are computed in-plan.
     *
     * Output: (id_a, id_b, est_jaccard, hamming). */
   def crossModalPairs(df: DataFrame, idCol: String, textSigCol: String,
@@ -403,42 +403,29 @@ object Dedup {
     *
     * Returns (id, component) for every vertex that appears in an edge. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    // localCheckpoint (not persist): each round's plan embeds the
-    // previous round's TWICE (labels ⋈ nbrMin(labels)), so without
-    // lineage truncation the logical plan doubles per iteration —
-    // exponential tree growth that OOMs the driver before any data
-    // does. At cluster scale the same pattern uses reliable
-    // checkpointing; the per-round data (one row per vertex) is tiny
-    // either way.
-    // Round 22: the symmetrized edge list reads `edges` TWICE (one
-    // select per direction, and a self-union shares no subtree), so a
-    // caller passing a raw candidate-pair PLAN paid the whole
-    // shingle→minhash→band pipeline twice inside this one
-    // materialization. Lazily checkpoint the narrow (id_a, id_b)
-    // projection first: the sym job computes the pair pipeline once
-    // and its second branch reads the cached blocks. Callers that
-    // already checkpoint their pairs only add one narrow cached copy.
-    val e0 = edges.select(col("id_a"), col("id_b")).localCheckpoint(false)
+    // The per-round labels are `truncated`: each round's plan embeds
+    // the previous round's TWICE (labels ⋈ nbrMin(labels)), so without
+    // lineage truncation the plan doubles per iteration and OOMs the
+    // driver before any data does; the per-round data is one row per
+    // vertex. The symmetrized edge list reads `edges` TWICE (one select
+    // per direction, and a self-union shares no subtree), so the narrow
+    // (id_a, id_b) projection is `shared`: a caller passing a raw
+    // candidate-pair plan pays the shingle→minhash→band pipeline once.
+    // `sym` is `shared` too: every round reads it.
+    val e0 = Materialize.shared(edges.select(col("id_a"), col("id_b")))
     val sym = e0.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(e0.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint()
-    // Round-21: seed labels at least(id, min neighbor) instead of the
-    // identity — the same one aggregation the identity init pays for its
+      .transform(Materialize.shared)
+    // Seed labels at least(id, min neighbor) instead of the identity —
+    // the same one aggregation the identity init pays for its
     // distinct(), but it pre-applies round 1's 1-hop min, so every
-    // converging run exits one full round (2 joins + checkpoint + count)
-    // earlier. Correctness unchanged: labels stay member ids, are
-    // monotonically non-increasing, and the fixpoint is still the
-    // component min whatever the (within-component) start.
-    // Round 22: LAZY checkpoints for the init and per-round labels —
-    // the eager form paid one materialization job plus a separate
-    // count job per round; lazily-checkpointed, the convergence count
-    // is the action that materializes the blocks, so each round is ONE
-    // job (same compute, one less scheduling round-trip), and later
-    // rounds still read the cached blocks. `sym` stays eager: it is
-    // consumed by every round across many jobs.
+    // converging run exits one full round earlier. Correctness
+    // unchanged: labels stay member ids, are monotonically
+    // non-increasing, and the fixpoint is still the component min
+    // whatever the (within-component) start.
     var labels = sym.groupBy("src").agg(min("dst").as("nbr"))
       .select(col("src").as("id"), least(col("src"), col("nbr")).as("comp"))
-      .localCheckpoint(false)
+      .transform(Materialize.truncated)
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
@@ -458,7 +445,7 @@ object Dedup {
         .join(jumpTo, col("comp") === col("jid"), "left")
         .select(col("id"), col("old"),
           least(col("comp"), coalesce(col("jcomp"), col("comp"))).as("comp"))
-        .localCheckpoint(false)
+        .transform(Materialize.truncated)
       changed = updated.filter(col("comp") =!= col("old")).count()
       labels = updated.select("id", "comp")
       i += 1

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 /** Iterative graph analytics over the near-duplicate candidate graph —
   * the remaining classic Spark workload shape (synchronous iteration to
@@ -35,16 +36,16 @@ object Graph {
     * with `damping` in ppm (default 850 000 — the textbook 0.85).
     *
     * Scale shape: the edge list (with degree attached) materializes
-    * ONCE (`localCheckpoint`; reliable checkpoint at cluster scale) and
-    * each round is one edge⋈rank join + one dst-keyed partial-agg
-    * shuffle — the Pregel profile, `iters`× the cost of one degree
-    * count. Unlike [[Dedup.connectedComponents]] (whose labels feed
+    * ONCE (`Materialize.shared`) and each round is one edge⋈rank join +
+    * one dst-keyed partial-agg shuffle — the Pregel profile, `iters`×
+    * the cost of one degree count. Unlike [[Dedup.connectedComponents]] (whose labels feed
     * BOTH sides of its per-round join, doubling the plan per round),
     * `ranks` has exactly ONE consumer per round, so lineage grows
     * LINEARLY and the rounds chain inside one job — checkpointing
     * every round would only buy 8 needless materializations (measured
-    * ~0.2 s each in local mode). Lineage is truncated every
-    * `checkpointEvery` rounds (default 16) as the long-run guard.
+    * ~0.2 s each in local mode). Lineage is truncated
+    * (`Materialize.truncated`) every `checkpointEvery` rounds (default
+    * 16) as the long-run guard.
     * (Round 22 note: a lazy per-4-rounds truncation was A/B-tested to
     * bound AQE's per-stage replanning over the unrolled chain; an
     * interleaved same-shell A/B showed the apparent win was warm-up
@@ -67,7 +68,7 @@ object Graph {
       .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
     val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
     // one materialization feeds every round
-    val edges = sym.join(deg, "src").localCheckpoint(false)
+    val edges = Materialize.shared(sym.join(deg, "src"))
     var ranks = edges.select(col("src").as("id")).distinct()
       .select(col("id"), lit(1000000L).as("r"))
     for (it <- 1 to iters) {
@@ -80,7 +81,7 @@ object Graph {
       // single-consumer lineage grows linearly — truncate only on the
       // long-run cadence, never per round
       if (it % checkpointEvery == 0 && it < iters)
-        ranks = ranks.localCheckpoint(false)
+        ranks = Materialize.truncated(ranks)
     }
     ranks.select(col("id"), col("r").as("rank_ppm"))
   }

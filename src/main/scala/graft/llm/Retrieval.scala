@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.operators.GroupTopK
 
@@ -84,12 +85,11 @@ object Retrieval {
       bMilli: Int = 750,
       excludeSelf: Boolean = false,
       maxDfPpm: Int = 1000000): DataFrame = {
-    // the tf index feeds three consumers (the probe, dl, df): checkpoint
-    // it lazily so the corpus scan + explode + aggregate run ONCE (the
-    // shared-stage rule); a production deployment persists this index
-    // ([[buildTfIndex]] written bucketBy(token) — the
-    // `bm25_topk_persisted` gate) and probes it via [[bm25FromIndex]]
-    bm25FromIndex(buildTfIndex(corpus, idCol, textCol).localCheckpoint(false),
+    // the tf index feeds three consumers (the probe, dl, df); a
+    // production deployment persists it instead ([[buildTfIndex]]
+    // written bucketBy(token) — the `bm25_topk_persisted` gate) and
+    // probes it via [[bm25FromIndex]]
+    bm25FromIndex(Materialize.shared(buildTfIndex(corpus, idCol, textCol)),
       queries, qIdCol, qTextCol, k, k1Milli, bMilli, excludeSelf,
       maxDfPpm = maxDfPpm)
   }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 /** Deterministic, engine-portable sampling and splitting for
   * training-data pipelines. Every decision derives from `md5(id)` — no
@@ -312,11 +313,10 @@ object Sampling {
     * keeping the sum normalizer-free keeps it integer.
     *
     * Scale shape: ONE tokenized corpus scan builds the n-gram
-    * instance stream (narrow explode, checkpointed once for its two
-    * consumers — the [[TextAnalysis.bigramLogProb]] convention); the
-    * bucket histogram is `nBuckets` rows with map-side partials and
-    * BROADCASTS back to the instance stream (the corpus never
-    * shuffles for the weight join); the per-doc re-aggregation rides
+    * instance stream (narrow explode, `Materialize.shared` for its two
+    * consumers); the bucket histogram is `nBuckets` rows with map-side
+    * partials and BROADCASTS back to the instance stream (the corpus
+    * never shuffles for the weight join); the per-doc re-aggregation rides
     * one id-keyed shuffle of partial sums. Nothing here is
     * vocabulary-sized — the whole point of hashing is that the weight
     * table is O(nBuckets) at any corpus size.
@@ -366,10 +366,9 @@ object Sampling {
 
   def dsirScores(df: DataFrame, idCol: String, textCol: String,
       isTarget: Column, nBuckets: Int = 1024): DataFrame = {
-    // the gram stream feeds two consumers (the weight histogram and
-    // the scoring join): materialize it once
+    // two consumers: the weight histogram and the scoring join
     val grams = dsirGrams(df, idCol, textCol, isTarget, nBuckets)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val weights = grams.groupBy("bucket")
       .agg(count(lit(1)).as("c_raw"),
         sum(when(col("is_target"), 1L).otherwise(0L)).as("c_target"))
@@ -413,7 +412,7 @@ object Sampling {
       isTarget: Column, topN: Int, nBuckets: Int = 1024): DataFrame = {
     require(topN > 0, "topN must be positive")
     val scores = dsirScores(df, idCol, textCol, isTarget, nBuckets)
-      .localCheckpoint(false) // two consumers: the top-N rank + the flag join
+      .transform(Materialize.shared) // two consumers: the top-N rank + the flag join
     val sel = graft.operators.GroupTopK.topK(
         scores.withColumn("__g", lit(1)), Seq("__g"),
         Seq(("dsir_score", false), ("id", true)), topN)

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -883,11 +884,10 @@ object Similarity {
     * surfaces the skipped volume as a stage.
     *
     * The assignment frame has FOUR consumers (both pair-join sides,
-    * the verdict join, the cluster-size audit); it is lazily
-    * checkpointed so the corpus scan + argmin run ONCE per call (the
-    * checkpoint-once rule — a persisted deployment materializes the
-    * assignment table instead, the `dedup_semantic_incremental`
-    * shape). */
+    * the verdict join, the cluster-size audit); it is
+    * `Materialize.shared`, so the corpus scan + argmin run ONCE per call
+    * (a persisted deployment materializes the assignment table
+    * instead, the `dedup_semantic_incremental` shape). */
   def semDedup(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int = 4, sampleN: Int = 16, iters: Int = 2,
       threshold: Double = 0.4, targetClusterSize: Int = 128,
@@ -906,13 +906,12 @@ object Similarity {
       targetClusterSize, knownCount)
     val cents = kmeansL2Long(sample.map(quantizeGrid), kEff, iters, floorUpdate = true)
     val capEff = resolveMaxCluster(maxCluster, targetClusterSize)
-    // checkpoint-once: FOUR consumers below (pair-join both sides, the
-    // verdict join, the cluster-size audit) — without this the corpus
-    // scan + compiled argmin would run once per consumer
+    // FOUR consumers below (pair-join both sides, the verdict join,
+    // the cluster-size audit)
     val a = kmeansAssignWith(corpus, cents, idCol, vecCol)
       .select(col(idCol).as("vec_id"), col(vecCol).as("v"),
         col("centroid"), col("dist2"))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     // at most kEff rows survive the filter — broadcast back onto `a`
     val oversize = a.groupBy("centroid").agg(count(lit(1)).as("c_n"))
       .filter(col("c_n") > capEff)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, fingerprinting.
@@ -391,11 +392,9 @@ object TextAnalysis {
     val toks = df.select(col(idCol).as("id"),
         explode(split(normalizeText(col(textCol)), " ")).as("token"))
       .filter(length(col("token")) > 0)
-    // four consumers (head rank, tail anti, two instance joins) —
-    // materialize the vocab aggregate once or Spark recomputes the
-    // corpus-wide count per consumer (reliable checkpoint at cluster
-    // scale, same as the shingleHashSets convention)
-    val counts = toks.groupBy("token").agg(count(lit(1)).as("c")).localCheckpoint()
+    // four consumers (head rank, tail anti, two instance joins) of the
+    // corpus-wide vocab aggregate
+    val counts = Materialize.shared(toks.groupBy("token").agg(count(lit(1)).as("c")))
     val head = graft.operators.GroupTopK.topK(
         counts.withColumn("g", lit(1)), Seq("g"), Seq(("c", false), ("token", true)), headV)
       .select("token", "c")
@@ -437,10 +436,8 @@ object TextAnalysis {
   def bigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val words = filter(split(normalizeText(col(textCol)), " "),
       w => length(w) > 0)
-    // materialize the exploded bigram stream ONCE (localCheckpoint —
-    // the minhashEstError convention): three consumers below (c2, c1,
-    // the instance join) would otherwise each re-scan and re-explode
-    // the corpus. At 100 TB: reliable checkpoint / persist(DISK_ONLY).
+    // three consumers of the exploded bigram stream below (c2, c1, the
+    // instance join)
     val bg = df.select(col(idCol).as("id"), words.as("ws"))
       .filter(size(col("ws")) >= 2)
       .select(col("id"), explode(expr(
@@ -448,7 +445,7 @@ object TextAnalysis {
           "i -> struct(element_at(ws, CAST(i AS INT)) AS prev, " +
           "element_at(ws, CAST(i + 1 AS INT)) AS nxt))")).as("b"))
       .select(col("id"), col("b.prev").as("prev"), col("b.nxt").as("nxt"))
-      .localCheckpoint(true)
+      .transform(Materialize.shared)
     val c2 = bg.groupBy("prev", "nxt").agg(count(lit(1)).as("c2"))
     val c1 = bg.groupBy("prev").agg(count(lit(1)).as("c1"))
     def lg(c: Column): Column = (length(bin(c)) - 1).cast("long")

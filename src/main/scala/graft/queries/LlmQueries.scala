@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.llm.{Bpe, Decontamination, Dedup, Graph, Multimodal, Retrieval, Sampling, Similarity, Sketches, TextAnalysis, Unigram}
 
@@ -31,10 +32,7 @@ object LlmQueries {
       TextAnalysis.substrCount(col("text"), " ").as("n_spaces"),
       TextAnalysis.substrCount(concat(lit(" "), lower(col("text")), lit(" ")), " the ").as("n_the"),
       round(TextAnalysis.stopwordRatio(col("text")), 6).as("stopword_ratio"))
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
   }
 
@@ -124,10 +122,7 @@ object LlmQueries {
       col("doc_id"),
       TextAnalysis.tokenCountWs(col("text")).as("n_ws"),
       TextAnalysis.tokenCountBpeIsh(col("text")).as("n_bpe"))
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
 
   /** Quality scoring (length/punct/token-shape heuristic). */
@@ -236,10 +231,7 @@ object LlmQueries {
         (lit(1.0) - col("n_distinct").cast("double") / col("n_grams")).as("dup3_frac"),
         col("top_bigram_n"), col("n_bigrams"),
         (col("top_bigram_n").cast("double") / col("n_bigrams")).as("top2_frac"))
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
   }
 
@@ -248,10 +240,7 @@ object LlmQueries {
   val langId: Q = (s, dir) =>
     Tables(s, dir, "documents")
       .select(col("doc_id"), TextAnalysis.langIdHeuristic(col("text")).as("lang_guess"))
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
 
   /** Declared `lang` label × heuristic guess — the CONFUSION MATRIX a
@@ -326,7 +315,7 @@ object LlmQueries {
     * the LSH family; the oracle re-derives every hash from
     * md5(span). */
   val dedupSubstring: Q = (s, dir) =>
-    Dedup.substringDupSpans(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text",
+    Dedup.substringDupSpans(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text",
         w = 8, maxBucket = MaxBucket)
       .orderBy("doc_id", "pos", "wh")
 
@@ -336,7 +325,7 @@ object LlmQueries {
     * Integer-only island merge, oracle-replayed over the SAME window
     * CTEs as `dedup_substring` (shared block, so the two can't drift). */
   val dedupSubstringSpans: Q = (s, dir) =>
-    Dedup.substringDupMaximalSpans(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text",
+    Dedup.substringDupMaximalSpans(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text",
         w = 8, maxBucket = MaxBucket)
       .orderBy("doc_id", "span_start")
 
@@ -482,7 +471,7 @@ object LlmQueries {
     * the DuckDB oracle (round-2's rows-only check is now hash-verified).
     * Recall/precision additionally pinned in LlmSpec on planted dups. */
   val dedupMinhash: Q = (s, dir) =>
-    Dedup.minHashPairs(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text", threshold = 0.3,
+    Dedup.minHashPairs(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text", threshold = 0.3,
         maxBucket = MaxBucket)
       .orderBy("id_a", "id_b")
 
@@ -490,20 +479,19 @@ object LlmQueries {
     * the synthetic corpus's unrelated word-soup docs start colliding).
     * Portable mode: md5-derived bit-string signatures, oracle-replayed. */
   val dedupSimhash: Q = (s, dir) =>
-    Dedup.simHashPairs(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text", maxHamming = 6,
+    Dedup.simHashPairs(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text", maxHamming = 6,
         maxBucket = MaxBucket)
       .orderBy("id_a", "id_b")
 
   /** Exact n-gram Jaccard verification of the MinHash candidates.
     * The shingle-hash pass — the dominant CPU term — runs ONCE: the
-    * `(id, hs)` sets are materialized (`localCheckpoint`; reference-
-    * tracked, dropped by the ContextCleaner) and feed BOTH the MinHash
+    * `(id, hs)` sets are `Materialize.shared` and feed BOTH the MinHash
     * signatures and the exact-Jaccard verify joins. Previously the plan
     * recomputed the per-shingle md5 three times (signature + both join
     * sides). */
   val ngramJaccardPairs: Q = (s, dir) => {
-    val sets = Dedup.shingleHashSets(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text")
-      .localCheckpoint(true)
+    val sets = Dedup.shingleHashSets(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text")
+      .transform(Materialize.shared)
     Dedup.verifyJaccardSets(
         Dedup.minHashPairsFromHashes(sets, threshold = 0.3, maxBucket = MaxBucket), sets)
       .orderBy("id_a", "id_b")
@@ -524,8 +512,8 @@ object LlmQueries {
     * pair list against the materialized shingle sets — the same
     * verify-pass shape as `ngram_jaccard_pairs`, never n²). */
   val minhashEstError: Q = (s, dir) => {
-    val sets = Dedup.shingleHashSets(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text")
-      .localCheckpoint(true)
+    val sets = Dedup.shingleHashSets(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text")
+      .transform(Materialize.shared)
     val pairs = Dedup.minHashPairsFromHashes(sets, threshold = 0.3, maxBucket = MaxBucket)
     pairs
       .join(sets.withColumnRenamed("id", "id_a").withColumnRenamed("hs", "hs_a"), "id_a")
@@ -958,7 +946,7 @@ object LlmQueries {
     * it certifies stays sub-linear. */
   val annRecallAudit: Q = (s, dir) => {
     // round 22: e feeds exact + approx on both sides — share the spread
-    val e = spreadShared(s, dir, Tables(s, dir, "embeddings"))
+    val e = spreadShared(s, Tables(s, dir, "embeddings"))
     val q = e.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
       .select("query_id", "corpus_id")
@@ -987,10 +975,10 @@ object LlmQueries {
     * so the curve cannot drift from the index it describes. */
   val annIvfRecallCurve: Q = (s, dir) => {
     // round 22: e feeds brute force + three ivfTopK settings — share it
-    val e = spreadShared(s, dir, Tables(s, dir, "embeddings"))
+    val e = spreadShared(s, Tables(s, dir, "embeddings"))
     val q = e.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
-      .select("query_id", "corpus_id").localCheckpoint(true)
+      .select("query_id", "corpus_id").transform(Materialize.shared)
     Seq(1, 2, 4).map { p =>
       val approx = Similarity.ivfTopK(e, q, "vec_id", "embedding", k = 5, nProbe = p)
         .select("query_id", "corpus_id")
@@ -1117,11 +1105,7 @@ object LlmQueries {
           expr("size(w) - size(w) DIV 3"))), " ").as("rejected"))
     TextAnalysis.dpoPairs(triples, "doc_id", "prompt", "chosen", "rejected", maxTokens = 64)
       .withColumnRenamed("id", "doc_id")
-      // sort-sampling double-eval guard: the child is one narrow
-      // normalize/split/template chain from the scan (no shuffle
-      // boundary), so the range sampler re-ran ALL of it. One row per
-      // doc — the sort shuffles the same bytes the checkpoint holds.
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
   }
 
@@ -1254,7 +1238,7 @@ object LlmQueries {
     * rollup. */
   val rmPairsToDpo: Q = (s, dir) => {
     val scored = bestOfNScoredOn(
-      spreadForCompute(s, dir, Tables(s, dir, "documents")), withText = true)
+      spreadForCompute(s, Tables(s, dir, "documents")), withText = true)
     val pairs = scored.select(col("doc_id"), col("pw"),
         inline(array(struct(
           array_max(col("cands")).as("best"),
@@ -1344,7 +1328,7 @@ object LlmQueries {
       expr("CAST((doc_id DIV 8) % 8 AS BIGINT)").as("ny"))
 
   val mediaDedupFeatures: Q = (s, dir) => {
-    val sigs = mediaSigsFor(spreadForCompute(s, dir, mediaCorpusParams(s, dir)))
+    val sigs = mediaSigsFor(spreadForCompute(s, mediaCorpusParams(s, dir)))
     Dedup.bitSignaturePairs(sigs, "doc_id", "sig",
         nBits = 56, bands = 4, maxHamming = 4, maxBucket = MaxBucket)
       .orderBy("id_a", "id_b")
@@ -1376,8 +1360,8 @@ object LlmQueries {
     * (text MinHash band × image dHash band) bucket and verify on BOTH
     * modalities (est. Jaccard ≥ 0.3 AND Hamming ≤ 4). ZERO new shuffle
     * machinery — the composite rides the banded skeleton; the (id,
-    * tsig, isig) frame materializes once (localCheckpoint — the
-    * crossModalPairs caller note: both the bucket derivation and the
+    * tsig, isig) frame is `Materialize.shared` (the crossModalPairs
+    * caller note: both the bucket derivation and the
     * member struct consume the signatures, and an unmaterialized
     * MinHash would compute twice per row). The oracle replays BOTH
     * band families — every caption word, shingle, affine remix, band
@@ -1387,20 +1371,20 @@ object LlmQueries {
     * caption MinHash scan-side on top of it. `capP` is the CAPTION's
     * cluster column (a function of the post-sig `doc_id` — it differs
     * from the image cluster only in the echo batch, where the original
-    * id must be recovered from the offset). Materialized once
-    * (localCheckpoint) — the crossModalPairs caller note. */
+    * id must be recovered from the offset). Shared — the
+    * crossModalPairs caller note. */
   private[queries] def captionSigFrame(params: DataFrame, capP: Column): DataFrame =
     mediaSigsFor(params).select(col("doc_id").as("id"), col("sig").as("isig"),
         Dedup.minHashSignatureP(Dedup.shingleMd5(captionFor(capP, col("doc_id"))), 32)
           .as("tsig"))
-      .localCheckpoint(true)
+      .transform(Materialize.shared)
 
   val mediaCaptionDedup: Q = (s, dir) => {
     // caption hashing (32 word md5s + 30 shingle md5s + 32-seed minhash
     // per row) is heavy narrow compute — spread before it (the
     // single-file one-task trap)
     val sigs = captionSigFrame(
-      spreadForCompute(s, dir, mediaCorpusParams(s, dir)),
+      spreadForCompute(s, mediaCorpusParams(s, dir)),
       expr("CAST(doc_id DIV 8 AS BIGINT)"))
     Dedup.crossModalPairs(sigs, "id", "tsig", "isig",
         k = 32, textBands = 8, nBits = 56, bitBands = 4,
@@ -1444,7 +1428,7 @@ object LlmQueries {
   private[queries] def captionSigIndexTable(s: SparkSession, dir: String): String =
     Artifacts.getOrBuild("caption_sigs", Seq(Tables(s, dir, "documents"))) { a =>
       a.bucketedTable("graft_csig_b", "bucket", Dedup.crossModalBandKeys(
-          captionSigFrame(spreadForCompute(s, dir, mediaCorpusParams(s, dir)),
+          captionSigFrame(spreadForCompute(s, mediaCorpusParams(s, dir)),
             expr("CAST(doc_id DIV 8 AS BIGINT)")),
           "id", "tsig", "isig")
         .select(col("bucket"), col("id").as("c_id"),
@@ -1471,7 +1455,7 @@ object LlmQueries {
     val hbB = Sampling.hashBucket256(col("doc_id") - lit(off))
     val capP = when(hbB < 85, expr(s"CAST((doc_id - $off) DIV 8 AS BIGINT)"))
       .otherwise(expr("CAST(doc_id DIV 8 AS BIGINT)"))
-    val batchSigs = captionSigFrame(spreadForCompute(s, dir, batchParams), capP)
+    val batchSigs = captionSigFrame(spreadForCompute(s, batchParams), capP)
     val idx = mask.map(maskIndex(s, dir, s.table(idxTable), "c_id", _))
       .getOrElse(s.table(idxTable))
     val hits = Dedup.crossModalBandKeys(batchSigs, "id", "tsig", "isig")
@@ -1547,12 +1531,9 @@ object LlmQueries {
     * oracle replays every mask bit, sentinel index, and assembled
     * string. One narrow scan-side map. */
   val spanCorruptionQ: Q = (s, dir) =>
-    TextAnalysis.spanCorruption(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text")
+    TextAnalysis.spanCorruption(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text")
       .withColumnRenamed("id", "doc_id")
-      // round 21: the per-row mask/sentinel assembly is expensive narrow
-      // compute that the global sort's range-sampling pass would run
-      // TWICE — materialize once (lazy checkpoint) before the orderBy
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
 
   /** SFT / CHAT-TEMPLATE prep gate ([[TextAnalysis.sftExamples]]) —
@@ -1581,10 +1562,7 @@ object LlmQueries {
           expr("size(w) - size(w) DIV 3")), " ").as("response"))
     TextAnalysis.sftExamples(paired, "doc_id", "prompt", "response", maxTokens = 64)
       .withColumnRenamed("id", "doc_id")
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
   }
 
@@ -1598,7 +1576,7 @@ object LlmQueries {
     * closure itself (a recursive reachability CTE taking min labels),
     * so the component ids are hash-verified, not just the pairs. */
   val mediaDedupClusters: Q = (s, dir) => {
-    val sigs = mediaSigsFor(spreadForCompute(s, dir, mediaCorpusParams(s, dir)))
+    val sigs = mediaSigsFor(spreadForCompute(s, mediaCorpusParams(s, dir)))
     val pairs = Dedup.bitSignaturePairs(sigs, "doc_id", "sig",
       nBits = 56, bands = 4, maxHamming = 4, maxBucket = MaxBucket)
     Dedup.connectedComponents(pairs.select("id_a", "id_b"))
@@ -1617,7 +1595,7 @@ object LlmQueries {
     * min labels), so component ids are hash-verified end to end. */
   val mediaCaptionClusters: Q = (s, dir) => {
     val sigs = captionSigFrame(
-      spreadForCompute(s, dir, mediaCorpusParams(s, dir)),
+      spreadForCompute(s, mediaCorpusParams(s, dir)),
       expr("CAST(doc_id DIV 8 AS BIGINT)"))
     val pairs = Dedup.crossModalPairs(sigs, "id", "tsig", "isig",
       k = 32, textBands = 8, nBits = 56, bitBands = 4,
@@ -1648,7 +1626,7 @@ object LlmQueries {
   private[queries] def mediaSigIndexTable(s: SparkSession, dir: String): String =
     Artifacts.getOrBuild("media_sigs", Seq(Tables(s, dir, "documents"))) { a =>
       a.bucketedTable("graft_msig_b", "bucket",
-        mediaBandKeys(mediaSigsFor(spreadForCompute(s, dir, mediaCorpusParams(s, dir))))
+        mediaBandKeys(mediaSigsFor(spreadForCompute(s, mediaCorpusParams(s, dir))))
           .select(col("bucket"), col("doc_id").as("c_id"), col("sig").as("c_sig")))
     }
 
@@ -1697,7 +1675,7 @@ object LlmQueries {
         .otherwise(expr(s"CAST((doc_id + $off) % 8 AS BIGINT)")).as("nx"),
       when(hb < 85, expr("CAST((doc_id DIV 8) % 8 AS BIGINT)"))
         .otherwise(expr(s"CAST(((doc_id + $off) DIV 8) % 8 AS BIGINT)")).as("ny"))
-    val batchSigs = mediaSigsFor(spreadForCompute(s, dir, batchParams))
+    val batchSigs = mediaSigsFor(spreadForCompute(s, batchParams))
     val idx = mask.map(maskIndex(s, dir, s.table(idxTable), "c_id", _))
       .getOrElse(s.table(idxTable))
     val hits = mediaBandKeys(batchSigs)
@@ -1791,10 +1769,7 @@ object LlmQueries {
         element_at(col("features"), 1).cast("int").as("width"),
         element_at(col("features"), 2).cast("int").as("height"),
         round(element_at(col("features"), 3) * 255).cast("int").as("gray"))
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
   }
 
@@ -1817,10 +1792,7 @@ object LlmQueries {
         element_at(col("features"), 1).cast("int").as("width"),
         element_at(col("features"), 2).cast("int").as("height"),
         round(element_at(col("features"), 3) * 255).cast("int").as("gray"))
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
   }
 
@@ -1846,7 +1818,7 @@ object LlmQueries {
     // in the fixture's single scan partition (JobProbe: 2 x 0.9 s
     // one-task stages) — spread across cores first
     val media = Multimodal.synthesizeGifFrames(
-      spreadForCompute(s, dir, d), "doc_id", "nf", "w", "h")(
+      spreadForCompute(s, d), "doc_id", "nf", "w", "h")(
       (id, k) => ((id * 13L + k * 17L) % 256L).toInt)
     val frames = Multimodal.sampleImageFrames(media, "doc_id", "media", stride = 2)
     val keyed = frames.select(
@@ -1884,7 +1856,7 @@ object LlmQueries {
     // in the fixture's single scan partition (JobProbe: 2 x 0.9 s
     // one-task stages) — spread across cores first
     val media = Multimodal.synthesizeGifFrames(
-      spreadForCompute(s, dir, d), "doc_id", "nf", "w", "h")(
+      spreadForCompute(s, d), "doc_id", "nf", "w", "h")(
       (id, k) => ((id * 13L + k * 17L) % 256L).toInt)
     val frames = Multimodal.sampleImageFrames(media, "doc_id", "media", stride = 1)
     val keyed = frames.select(
@@ -2126,20 +2098,20 @@ object LlmQueries {
     // round 21: the BM25 corpus tokenize runs scan-side — spread the
     // single-file fixture partition so it isn't one task (JobProbe:
     // 0.43 s 1-task stage inside hybrid_rerank)
-    spreadForCompute(s, dir, Tables(s, dir, "documents")).select(col("doc_id"),
+    spreadForCompute(s, Tables(s, dir, "documents")).select(col("doc_id"),
       concat(col("text"), lit(" tag"), (col("doc_id") % 97).cast("string"),
         when(col("doc_id") % 2 === 0, lit(" even_mark"))
           .otherwise(lit(" odd_mark"))).as("text"))
 
-  /** [[bm25Docs]] materialized once (lazy checkpoint) — for the gates
+  /** [[bm25Docs]], `Materialize.shared` — for the gates
     * that consume the FULL enriched corpus more than once (corpus +
     * query side at least; round-21 verdict item 2: the unmaterialized
     * spread re-executed per consumer). The persisted/incremental index
     * gates must keep the PLAIN [[bm25Docs]]: they read only the
-    * pushed-down `doc_id < 5` query slice, which a checkpoint would
+    * pushed-down `doc_id < 5` query slice, which a shared copy would
     * turn into a full-corpus materialization with no scan pushdown. */
   private def bm25DocsShared(s: SparkSession, dir: String): DataFrame =
-    bm25Docs(s, dir).localCheckpoint(false)
+    Materialize.shared(bm25Docs(s, dir))
 
   /** Quantized-BM25 lexical retrieval ([[Retrieval.bm25TopK]]): the
     * first five documents as queries against the full corpus (the ANN
@@ -2175,7 +2147,7 @@ object LlmQueries {
   private[queries] def bm25IndexTables(s: SparkSession, dir: String): (String, String) = {
     val docs = bm25Docs(s, dir)
     Artifacts.getOrBuild("bm25_index", Seq(docs)) { a =>
-      val tf = Retrieval.buildTfIndex(docs, "doc_id", "text").localCheckpoint(false)
+      val tf = Materialize.shared(Retrieval.buildTfIndex(docs, "doc_id", "text"))
       val tfName = a.bucketedTable("graft_bm25_tf", "token", tf)
       val dlName = a.table("graft_bm25_dl")
       tf.groupBy("doc_id").agg(sum("tf").as("dl"))
@@ -2232,7 +2204,7 @@ object LlmQueries {
     val docs = bm25Docs(s, dir)
     val (tfT, dlT) = Artifacts.getOrBuild("bm25_index_app", Seq(docs)) { a =>
       val tfA = Retrieval.buildTfIndex(docs.filter(col("doc_id") % 2 === 0),
-        "doc_id", "text").localCheckpoint(false)
+        "doc_id", "text").transform(Materialize.shared)
       val tfName = a.bucketedTable("graft_bm25_tfa", "token", tfA)
       val dlName = a.table("graft_bm25_dla")
       tfA.groupBy("doc_id").agg(sum("tf").as("dl"))
@@ -2240,7 +2212,7 @@ object LlmQueries {
       // day-2: the new batch tokenizes identically and appends into
       // the existing token buckets / the dl side table
       val tfB = Retrieval.buildTfIndex(docs.filter(col("doc_id") % 2 =!= 0),
-        "doc_id", "text").localCheckpoint(false)
+        "doc_id", "text").transform(Materialize.shared)
       tfB.write.mode("append").bucketBy(8, "token").sortBy("token")
         .format("parquet").saveAsTable(tfName)
       tfB.groupBy("doc_id").agg(sum("tf").as("dl"))
@@ -2312,7 +2284,7 @@ object LlmQueries {
     val docs = bm25DocsShared(s, dir)
     // round 22: emb feeds the exact side twice plus hybridRerank —
     // share one materialization of the spread
-    val emb = spreadShared(s, dir, Tables(s, dir, "embeddings"))
+    val emb = spreadShared(s, Tables(s, dir, "embeddings"))
     val exact = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 5)
       .select("query_id", "corpus_id")
@@ -2349,7 +2321,7 @@ object LlmQueries {
       .select("query_id", "doc_id", "rank")
     // round 22: emb is the dense retriever's corpus AND query side —
     // share one materialization of the spread
-    val emb = spreadShared(s, dir, Tables(s, dir, "embeddings"))
+    val emb = spreadShared(s, Tables(s, dir, "embeddings"))
     val dense = Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 5),
         "vec_id", "embedding", k = 10)
       .select(col("query_id"), col("corpus_id").as("doc_id"), col("rank"))
@@ -2476,10 +2448,7 @@ object LlmQueries {
       TextAnalysis.matchCount(withPii, TextAnalysis.phonePattern).as("n_phones"),
       md5(to_binary(TextAnalysis.redactPii(withPii), lit("utf-8"))).as("redacted_md5"),
       length(TextAnalysis.redactPii(withPii)).as("n_chars_redacted"))
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
   }
 
@@ -2503,7 +2472,7 @@ object LlmQueries {
     * table, one id shuffle of partials, map-side-pruned global
     * top-k. */
   val dsirImportanceSample: Q = (s, dir) =>
-    Sampling.dsirSelect(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text",
+    Sampling.dsirSelect(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text",
         col("lang") === "en", topN = 100, nBuckets = 1024)
       .select(col("id").as("doc_id"), col("n_grams"), col("dsir_score"),
         col("selected"))
@@ -2606,15 +2575,14 @@ object LlmQueries {
   /** Normalized text + 128-word chunks with 16-word overlap: the
     * context-window prep step, exploded to one row per chunk. */
   val docChunks: Q = (s, dir) => {
-    val d = spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    val d = spreadForCompute(s, Tables(s, dir, "documents"))
     // round 21: normalize+chunk is heavy narrow compute under a global
-    // sort — spread, and materialize once so the range-sampling pass
-    // doesn't run the chunk explode twice (JobProbe: 2 x 0.35 s 1-task)
+    // sort — spread it (JobProbe: 2 x 0.35 s 1-task)
     d.select(col("doc_id"),
         posexplode(TextAnalysis.chunkWords(TextAnalysis.normalizeText(col("text")), 64, 8)))
       .withColumnRenamed("pos", "chunk_idx")
       .withColumnRenamed("col", "chunk")
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id", "chunk_idx")
   }
 
@@ -2693,8 +2661,8 @@ object LlmQueries {
     * from `cur` still reports), rates as integer ppm of each
     * snapshot's instance total (floor division), drift = |Δppm|.
     * Scale: one corpus scan into vocabulary-sized aggregates
-    * (map-side partials; the counts frame is localCheckpoint'd once
-    * for its three consumers), every join vocab-sized, totals a 2-row
+    * (map-side partials; the counts frame is shared by its three
+    * consumers), every join vocab-sized, totals a 2-row
     * broadcast. */
   val corpusDrift: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
@@ -2703,7 +2671,7 @@ object LlmQueries {
         explode(split(TextAnalysis.normalizeText(col("text")), " ")).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy("snap", "token").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .transform(Materialize.shared)
     val totals = counts.groupBy("snap").agg(sum("n").as("tot"))
     val tots = totals.groupBy()
       .pivot("snap", Seq("ref", "cur")).agg(first("tot"))
@@ -2911,15 +2879,15 @@ object LlmQueries {
     * cluster. Rank is exact integer fixed-point (ppm mass, truncating
     * DIV, eight synchronous rounds), so the oracle replays the ENTIRE
     * trajectory as eight unrolled CTEs over the shared minhash pair
-    * block. The pair frame is checkpointed once for its two consumers
-    * (ranks + components). Scale: 8 × (edge⋈rank join + dst-keyed
+    * block. The pair frame is shared by its two consumers (ranks +
+    * components). Scale: 8 × (edge⋈rank join + dst-keyed
     * partial-agg shuffle) over the LSH-capped candidate graph — the
     * Pregel profile on a bounded edge list, never the corpus. */
   val dedupKeepCentral: Q = (s, dir) => {
     val docs = Tables(s, dir, "documents")
     val pairs = Dedup.minHashPairs(docs, "doc_id", "text",
         threshold = 0.3, maxBucket = MaxBucket)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     Graph.keepCentral(pairs, iters = 8).orderBy("component")
   }
 
@@ -2952,17 +2920,16 @@ object LlmQueries {
         .select((col("doc_id") + base).as("doc_id"), col("text")))
     // scored feeds the survivor chain AND the final disposition join;
     // the survivor set feeds the near-dup stage (itself multi-pass) and
-    // the verdict join — lazily checkpoint both so each computes once
-    // (see pipelineDropReport for the full rationale)
+    // the verdict join — share both so each computes once
     val scored = d0.withColumn("quality", TextAnalysis.qualityScore(col("text")))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val s1 = scored.filter(col("quality") >= 0.8)
     val firstPerHash = s1
       .withColumn("h", TextAnalysis.fingerprintMd5(col("text")))
       .withColumn("first_id", min("doc_id").over(Window.partitionBy("h")))
     val s2 = firstPerHash.filter(col("doc_id") === col("first_id"))
       .select("doc_id", "text", "quality")
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val groups = Dedup.dedupGroups(s2, "doc_id",
       Dedup.minHashPairs(s2, "doc_id", "text", threshold = 0.3, maxBucket = MaxBucket))
     val keep = graft.operators.GroupTopK.topK(
@@ -3021,25 +2988,19 @@ object LlmQueries {
     val d0 = d.union(
       d.filter(Sampling.hashBucket256(col("doc_id")) < 8)
         .select((col("doc_id") + base).as("doc_id"), col("text")))
-    // FOUR stage aggregates consume overlapping prefixes of one DAG —
-    // lazily checkpoint the two shared frames (the scored corpus and
-    // the survivor set) so each is computed ONCE, not once per
-    // consumer: the quality-regex scan feeds stages a+b+c+d and the
-    // survivor set feeds c and the (itself multi-pass) near-dup stage.
-    // `eager = false` keeps query construction action-free (the
-    // corpus_drift convention). At 100 TB the same call persists the
-    // (already heavily filtered) survivor set instead of re-running
-    // the scan+regex chain per stage — the standard multi-consumer
-    // materialization trade.
+    // FOUR stage aggregates consume overlapping prefixes of one DAG:
+    // the quality-regex scan feeds stages a+b+c+d and the survivor set
+    // feeds c and the (itself multi-pass) near-dup stage — share both
+    // so each is computed ONCE, not once per consumer.
     val scored = d0.withColumn("quality", TextAnalysis.qualityScore(col("text")))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val s1 = scored.filter(col("quality") >= 0.8)
     val firstPerHash = s1
       .withColumn("h", TextAnalysis.fingerprintMd5(col("text")))
       .withColumn("first_id", min("doc_id").over(Window.partitionBy("h")))
     val s2 = firstPerHash.filter(col("doc_id") === col("first_id"))
       .select("doc_id", "text", "quality")
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val groups = Dedup.dedupGroups(s2, "doc_id",
       Dedup.minHashPairs(s2, "doc_id", "text", threshold = 0.3, maxBucket = MaxBucket))
     val keep = graft.operators.GroupTopK.topK(
@@ -3077,7 +3038,7 @@ object LlmQueries {
     * joins carry (id, source) only, and the final matrix is
     * |sources|² at most — driver-tiny. */
   val crossSourceLeakage: Q = (s, dir) => {
-    val docs = spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    val docs = spreadForCompute(s, Tables(s, dir, "documents"))
     val src = docs.select(col("doc_id"), col("source"))
     Dedup.minHashPairs(docs, "doc_id", "text", threshold = 0.3, maxBucket = MaxBucket)
       .join(src.select(col("doc_id").as("id_a"), col("source").as("sa")), "id_a")
@@ -3093,7 +3054,7 @@ object LlmQueries {
     * silently): how many buckets hold n members, driver-visible.
     * Portable md5 band keys ⇒ the histogram is oracle-replayed. */
   val lshBucketHistogram: Q = (s, dir) =>
-    Dedup.lshBuckets(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text")
+    Dedup.lshBuckets(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text")
       .groupBy(col("n").as("bucket_size")).agg(count(lit(1)).as("n_buckets"))
       .select("bucket_size", "n_buckets")
       .orderBy("bucket_size")
@@ -3270,7 +3231,7 @@ object LlmQueries {
     // per-row compute in the media family (~5 codec passes per doc);
     // a single-file fixture would run it all on one task (the
     // pack_sequences_bpe precedent), so spread before the synth
-    videoSigsForParams(spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    videoSigsForParams(spreadForCompute(s, Tables(s, dir, "documents"))
       .select(col("doc_id"), expr("CAST(doc_id DIV 8 AS BIGINT)").as("p")))
 
   /** INCREMENTAL AUDIO DEDUP — the day-2 deploy shape of
@@ -3368,7 +3329,7 @@ object LlmQueries {
     // GATE-ONLY bootstrap (see mediaDedupIncremental)
     val off = Tables(s, dir, "documents").agg(max("doc_id")).head.getLong(0) + 1L
     val hb = Sampling.hashBucket256(col("doc_id"))
-    val batchParams = spreadForCompute(s, dir, Tables(s, dir, "documents")).select(
+    val batchParams = spreadForCompute(s, Tables(s, dir, "documents")).select(
       (col("doc_id") + lit(off)).as("doc_id"),
       when(hb < 85, expr("CAST(doc_id DIV 8 AS BIGINT)"))
         .otherwise(expr(s"CAST((doc_id + $off) DIV 8 AS BIGINT)")).as("p"))
@@ -3403,10 +3364,7 @@ object LlmQueries {
       col("doc_id"),
       octet_length(to_binary(col("text"), lit("utf-8"))).as("n_bytes"),
       md5(to_binary(col("text"), lit("utf-8"))).as("payload_md5"))
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
   }
 
@@ -3518,13 +3476,13 @@ object LlmQueries {
     * small-file regime moves the corpus text ONCE to buy cores×
     * parallelism on the heavy loop. */
   /** The spread decision is an [[Artifacts]] value keyed on `df`'s own
-    * plan and input files, not on `dir`: the partition-count probe
+    * plan and input files: the partition-count probe
     * (`df.rdd.getNumPartitions`) forces a plan→RDD conversion, so it is
     * paid once per distinct source, and two tables in one dir never
-    * share a decision. `dir` names the caller's fixture only. The
-    * count is a function of the source file layout and the session's
-    * split config (`target` is part of the kind). */
-  private[graft] def spreadForCompute(s: SparkSession, dir: String, df: DataFrame): DataFrame = {
+    * share a decision. The count is a function of the source file
+    * layout and the session's split config (`target` is part of the
+    * kind). */
+  private[graft] def spreadForCompute(s: SparkSession, df: DataFrame): DataFrame = {
     val target = s.sparkContext.defaultParallelism
     val doSpread = Artifacts.getOrBuild(s"spread:$target", Seq(df)) { _ =>
       df.rdd.getNumPartitions < target
@@ -3532,18 +3490,12 @@ object LlmQueries {
     if (doSpread) df.repartition(target) else df
   }
 
-  /** [[spreadForCompute]] + lazy localCheckpoint — for gates whose
+  /** [[spreadForCompute]], `Materialize.shared` — for gates whose
     * spread frame is consumed MORE THAN ONCE (round-21 verdict item 2:
     * an unmaterialized repartition re-executes per consumer; the
-    * ANN/retrieval audits re-ran it 2–8× and regressed ~1.5–2.8×).
-    * The checkpoint materializes the spread result once; every
-    * consumer then reads the executor-local blocks. Fault-tolerance
-    * caveat at 100 TB: localCheckpoint blocks are not recomputable on
-    * executor loss — bounded here because the checkpointed frame is a
-    * narrow projection (ids + vectors / enriched text), never an
-    * exploded or joined intermediate. */
-  private def spreadShared(s: SparkSession, dir: String, df: DataFrame): DataFrame =
-    spreadForCompute(s, dir, df).localCheckpoint(false)
+    * ANN/retrieval audits re-ran it 2–8× and regressed ~1.5–2.8×). */
+  private def spreadShared(s: SparkSession, df: DataFrame): DataFrame =
+    Materialize.shared(spreadForCompute(s, df))
 
   /** Trained tokenizers are [[Artifacts]] values over their training
     * corpus: training is two bounded corpus aggregates + a driver
@@ -3584,7 +3536,7 @@ object LlmQueries {
     "mixed ascii with émojis 🤖 tail")
 
   val bpeEncode: Q = (s, dir) => {
-    val d = spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    val d = spreadForCompute(s, Tables(s, dir, "documents"))
     val trained = trainedBpe(s, dir)
     val toks = Bpe.encode(col("text"), trained.merges)
     d.select(col("doc_id"), toks.as("ts"))
@@ -3605,7 +3557,7 @@ object LlmQueries {
     * ([[BpeOracle.bpeEncodeBytesSql]]) re-derives the full byte-mode
     * training loop and encode from parquet alone. */
   val bpeEncodeBytes: Q = (s, dir) => {
-    val d = spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    val d = spreadForCompute(s, Tables(s, dir, "documents"))
     val trained = trainedBpeBytes(s, dir)
     val toks = Bpe.encodeBytes(col("text"), trained.merges)
     d.select(col("doc_id"), toks.as("ts"))
@@ -3707,14 +3659,14 @@ object LlmQueries {
     // (docs + hostile) under a global sort, whose range-sampling pass
     // executes the whole expensive projection once and the real
     // exchange executes it AGAIN. Spread the corpus across cores before
-    // the heavy narrow compute and materialize (lazy localCheckpoint)
-    // before the orderBy so the projection runs once. Values unchanged.
-    spreadForCompute(s, dir, corpus.filter(length(norm) > 0))
+    // the heavy narrow compute and share it before the orderBy so the
+    // projection runs once. Values unchanged.
+    spreadForCompute(s, corpus.filter(length(norm) > 0))
       .select(col("doc_id"),
         size(Bpe.encodeBytes(col("text"), trainedB.merges)).cast("int").as("n_tokens_bytes"),
         md5(decB).as("decoded_bytes_md5"),
         cpDecodable.as("cp_decodable"))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("doc_id")
   }
 
@@ -3750,7 +3702,7 @@ object LlmQueries {
     * context windows now hold true subword budgets, which is what the
     * training job actually consumes. */
   val packSequencesBpe: Q = (s, dir) => {
-    val d = spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    val d = spreadForCompute(s, Tables(s, dir, "documents"))
     val trained = trainedBpe(s, dir)
     TextAnalysis.packSequencesBy(
       d, "doc_id", Bpe.tokenCount(col("text"), trained.merges).cast("long"))
@@ -3919,7 +3871,7 @@ object LlmQueries {
     // 4 × |resp| md5s per row — heavy narrow compute; spread before it
     // or a single-file fixture runs the whole reward pass on one task
     // (the pack_sequences_bpe trap; 2.5 → ~0.9 s at sf0.1)
-    bestOfNScoredOn(spreadForCompute(s, dir, Tables(s, dir, "documents")))
+    bestOfNScoredOn(spreadForCompute(s, Tables(s, dir, "documents")))
 
   /** The selection read over a scored frame — shared by the batch gate
     * and the ingest twin (no sort; streams cannot order). */
@@ -4176,7 +4128,7 @@ object LlmQueries {
   val datasetDiffChunks: Q = (s, dir) => {
     // O(len) md5s per doc twice over — heavy narrow compute; spread
     // (the best_of_n_select single-file-fixture lesson)
-    val changed = spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    val changed = spreadForCompute(s, Tables(s, dir, "documents"))
       .filter(col("text").isNotNull)
       .filter(Sampling.hash60(concat(lit("snap:"), col("doc_id").cast("string"))) % 4 === 2)
     def chunkHashes(t: Column): Column =
@@ -4235,13 +4187,13 @@ object LlmQueries {
     * (masked members + their persisted band rows — the round-20 forget
     * gates' surfaces; the oracle states the band fan-out closed-form,
     * 4 and 32 rows per member, so the report also pins the indexes'
-    * shape). The flagged layout materializes
-    * ONCE (localCheckpoint) and feeds both window surfaces; the BM25
+    * shape). The flagged layout is shared
+    * by both window surfaces; the BM25
     * numbers read the PERSISTED bucketed tf table
     * ([[bm25IndexTables]]), never a re-tokenize — the report's only
     * inherent extra pass is the rebuild's second FFD. */
   val forgetPipelineReport: Q = (s, dir) => {
-    val flagged = flaggedLayout(s, dir).localCheckpoint(false)
+    val flagged = Materialize.shared(flaggedLayout(s, dir))
     val audit = auditRollup(flagged)
     val rebuild = repackRollup(survivorsOf(flagged))
     // each surface audits the list ITS gate masks: %200 on doc ids for
@@ -4441,7 +4393,7 @@ object LlmQueries {
     * once). Scale: the audit/rebuild cost plus the permutation's
     * window-count exchanges — nothing new. */
   val epochOrderRebuilt: Q = (s, dir) => {
-    val flagged = flaggedLayout(s, dir).localCheckpoint(false)
+    val flagged = Materialize.shared(flaggedLayout(s, dir))
     val cw = Window.partitionBy("shard_id", "bin_id")
     val clean = flagged
       .withColumn("contaminated", max("is_forget").over(cw))
@@ -4534,7 +4486,7 @@ object LlmQueries {
     // NULL text drops the doc (the spanCorruption convention,
     // TextAnalysis.scala:128) — otherwise Spark emits a null-seg_md5
     // row the oracle's NULL semantics never produce.
-    val base = spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    val base = spreadForCompute(s, Tables(s, dir, "documents"))
       .filter(col("text").isNotNull)
       .select(col("doc_id"), TextAnalysis.normalizeText(col("text")).as("nt"))
     Unigram.pieceCounts(Unigram.segmentation(base, "nt", uni, "seg"), "nt", uni, "n_pieces")
@@ -4547,7 +4499,7 @@ object LlmQueries {
     * context-length planning histogram (the whitespace variant stays as
     * the cheap pre-tokenizer screen). Same bucket boundaries. */
   val tokenLengthHistogramBpe: Q = (s, dir) => {
-    val d = spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    val d = spreadForCompute(s, Tables(s, dir, "documents"))
     val n = Bpe.tokenCount(col("text"), trainedBpe(s, dir).merges)
     d.select(n.as("n"))
       .select(
@@ -4573,7 +4525,7 @@ object LlmQueries {
     * exchange carries id STRINGS not text, and pack count scales as
     * corpus_tokens/2048 — linear, embarrassingly partitioned. */
   val packPayloadBpe: Q = (s, dir) => {
-    val d = spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    val d = spreadForCompute(s, Tables(s, dir, "documents"))
     val trained = trainedBpe(s, dir)
     val nTok = Bpe.tokenCount(col("text"), trained.merges).cast("long")
     val packs = TextAnalysis.packSequencesBy(d, "doc_id", nTok, 2048)
@@ -4595,7 +4547,7 @@ object LlmQueries {
     * window. */
   val sourceMixtureWeightsBpe: Q = (s, dir) => {
     val w = Window.partitionBy()
-    spreadForCompute(s, dir, Tables(s, dir, "documents"))
+    spreadForCompute(s, Tables(s, dir, "documents"))
       .select(col("source"),
         Bpe.tokenCount(col("text"), trainedBpe(s, dir).merges).cast("long").as("n_tokens"))
       .groupBy("source")
@@ -4854,7 +4806,7 @@ object LlmQueries {
     * integers; the oracle replays boundary rule, phase, shard, and the
     * within-partition md5 permutation itself. */
   val curriculumOrder: Q = (s, dir) =>
-    Sampling.curriculumOrder(spreadForCompute(s, dir, Tables(s, dir, "documents")), "doc_id", "text", nShards = 8)
+    Sampling.curriculumOrder(spreadForCompute(s, Tables(s, dir, "documents")), "doc_id", "text", nShards = 8)
       .orderBy("doc_id")
 
   /** Content-defined chunk dedup ([[Dedup.cdcDedup]]): md5-window
@@ -4916,10 +4868,7 @@ object LlmQueries {
       when(col("doc_id") % 3 === 0, lit("<a href=\"/nav\">nav nav nav</a>")).otherwise(lit("")),
       lit("</body></html>"))
     TextAnalysis.htmlExtract(d.select(col("doc_id"), page.as("page")), "doc_id", "page")
-      // sort-once: the ordering sort's range sampler re-executes its
-      // child, and this child is a shuffle-free chain from the scan —
-      // materialize it so the chain runs once (the dpoPairsQ A/B)
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
       .orderBy("id")
   }
 

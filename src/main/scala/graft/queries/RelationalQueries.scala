@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 /** Host-relational surface (SURVEY §2.3): the relational environment the
   * reference composes with, expressed as idiomatic declarative Spark so
@@ -581,12 +582,12 @@ object RelationalQueries {
     val o = Tables(s, dir, "orders")
       .select(col("o_custkey").cast("string").as("o_custkey"),
         col("o_orderkey").cast("string").as("o_orderkey"))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val l = Tables(s, dir, "lineitem")
       .select(col("l_orderkey").cast("string").as("l_orderkey"))
-      .localCheckpoint(false)
+      .transform(Materialize.shared)
     val (d, w) = (4, 4096)
-    val mc = Sketches.cmsKeyCounters(o, "o_custkey", d, w).localCheckpoint(false)
+    val mc = Materialize.shared(Sketches.cmsKeyCounters(o, "o_custkey", d, w))
     val mo = Sketches.cmsKeyCounters(o, "o_orderkey", d, w)
     val ml = Sketches.cmsKeyCounters(l, "l_orderkey", d, w)
     val exactSelf = o.groupBy("o_custkey").agg(count(lit(1)).as("n"))

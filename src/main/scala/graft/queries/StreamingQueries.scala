@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Materialize
 
 import graft.plumba.Kernel
 
@@ -93,14 +94,14 @@ object StreamingQueries {
     *
     * `result` shapes the sink's rows (the memory table, or the files a
     * [[JsonFiles]] sink committed, batch-read back). Its frame is
-    * materialized with an eager `localCheckpoint` before the memory
-    * sink's view is dropped and the query's dir deleted: the memory sink
-    * holds every emitted row in the driver heap via a catalog reference
-    * that never dies — a bench run executes the streaming catalog dozens
-    * of times in one JVM, and the leaked sinks were measured as GC
-    * pressure slowing LATER queries. `localCheckpoint` blocks, by
-    * contrast, are released by the ContextCleaner once the returned
-    * frame is unreferenced. */
+    * `Materialize.truncated` before the memory sink's view is dropped
+    * and the query's dir deleted, since its inputs are gone once this
+    * returns: the memory sink holds every emitted row in the driver
+    * heap via a catalog reference that never dies — a bench run
+    * executes the streaming catalog dozens of times in one JVM, and the
+    * leaked sinks were measured as GC pressure slowing LATER queries.
+    * The truncated blocks, by contrast, are released by the
+    * ContextCleaner once the returned frame is unreferenced. */
   private[queries] def gate(s: SparkSession, name: String, stream: DataFrame, sink: Sink,
       batches: Batches, statePartitions: Int = 8, noDataBatches: Boolean = true)(
       result: DataFrame => DataFrame): DataFrame = {
@@ -133,7 +134,7 @@ object StreamingQueries {
         case _: Memory => s.table(id)
         case _: JsonFiles => s.read.schema(stream.schema).json(out)
       }
-      result(sunk).localCheckpoint(true)
+      Materialize.truncated(result(sunk))
     } finally {
       s.catalog.dropTempView(id)
       Artifacts.deleteTree(work.toPath)
@@ -854,9 +855,9 @@ object StreamingQueries {
       // the static dim side of a stream-static join is re-evaluated
       // EVERY micro-batch — including the full events min/max aggregate
       // feeding the version boundary. The dim is deterministic and
-      // bounded (2 rows per customer): materialize it once, so each
-      // trigger broadcasts cached blocks instead of re-aggregating.
-      .localCheckpoint()
+      // bounded (2 rows per customer): shared, so each trigger
+      // broadcasts cached blocks instead of re-aggregating.
+      .transform(Materialize.shared)
     val src = spilledStream(ev, "event_id", 4, 2)
     gate(s, "stream_scd_enrich",
       src.join(broadcast(dim),
@@ -1079,7 +1080,7 @@ object StreamingQueries {
     * [[graft.llm.Dedup.minHashPairsFromHashes]] (boilerplate buckets
     * would otherwise fan every probe out by the bucket size).
     *
-    * Scale: the index is built ONCE ([[neardupIndex]]: localCheckpoint,
+    * Scale: the index is built ONCE ([[neardupIndex]]: `Materialize.shared`,
     * an [[Artifacts]] entry; a persisted table bucketed by band key in
     * production, as
     * `dedup_incremental_bucketed` demonstrates for exact hashes), so
@@ -1093,7 +1094,7 @@ object StreamingQueries {
   /** The static corpus LSH index (cand_id, cand_sig, bucket), built once
     * per corpus rather than per invocation × bench reps (the
     * r9-measured 2.6 s was mostly index rebuild). It holds
-    * localCheckpoint blocks, so the entry is bound to the SparkContext
+    * `Materialize.shared` blocks, so the entry is bound to the SparkContext
     * that built it: a fresh context (stop + rebuild, the common
     * test-harness pattern) rebuilds instead of reusing blocks that died
     * with the old one. */
@@ -1107,7 +1108,7 @@ object StreamingQueries {
         .select(col("id").as("cand_id"), col("sig").as("cand_sig"), col("bucket"))
       val okBuckets = corpusIdx.groupBy("bucket")
         .agg(count(lit(1)).as("n")).filter(col("n") <= maxBucket).select("bucket")
-      corpusIdx.join(okBuckets, "bucket").localCheckpoint()
+      Materialize.shared(corpusIdx.join(okBuckets, "bucket"))
     }
 
   val streamNeardupProbe: Q = (s, dir) => {

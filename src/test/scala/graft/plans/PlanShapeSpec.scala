@@ -539,10 +539,9 @@ class PlanShapeSpec extends AnyFunSuite {
   test("minhash_est_error: verify joins consume the checkpointed sets, no shingle recompute") {
     val df = graft.queries.LlmQueries.minhashEstError(spark, TestSpark.sfDir)
     val plan = df.queryExecution.executedPlan.toString
-    // the shingle-hash pass is materialized once (localCheckpoint):
-    // the physical plan must contain NO parquet scan of documents —
-    // only the checkpoint RDD feeds both the pair generation and the
-    // set joins
+    // the shingle-hash pass is materialized once (`shared`): the
+    // physical plan must contain NO parquet scan of documents — only
+    // the shared RDD feeds both the pair generation and the set joins
     assert(!plan.contains("FileScan parquet"),
       s"shingle sets must come from the one materialized pass:\n$plan")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
@@ -701,11 +700,11 @@ class PlanShapeSpec extends AnyFunSuite {
     val exchanges = "Exchange".r.findAllIn(plan).size
     assert(exchanges <= 1 && plan.contains("rangepartitioning"),
       s"denoising prep must be scan-side narrow compute:\n$plan")
-    // round 21 materializes the per-row mask/sentinel assembly once
-    // (lazy localCheckpoint) so the orderBy's range-sampling pass does
-    // not run it twice: the executed plan now reads the checkpointed
-    // RDD (Scan ExistingRDD), and the corpus FileScan lives in the
-    // checkpointed stage below it — exactly one of the two shapes.
+    // the per-row mask/sentinel assembly is materialized once
+    // (`shared`) so the orderBy's range-sampling pass does not run it
+    // twice: the executed plan reads the shared RDD (Scan
+    // ExistingRDD), and the corpus FileScan lives in the shared stage
+    // below it — exactly one of the two shapes.
     val fileScans = "FileScan".r.findAllIn(plan).size
     assert(fileScans == 1 || (fileScans == 0 && plan.contains("Scan ExistingRDD")),
       s"one corpus scan, or one materialized narrow stage over it:\n$plan")

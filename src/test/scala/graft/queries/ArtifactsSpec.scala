@@ -30,7 +30,7 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = Tables(s, d, "documents")
     val small = docs.filter(col("doc_id") < 20).select("doc_id", "text")
     Seq(
-      "spread" -> (() => LlmQueries.spreadForCompute(s, d, docs)),
+      "spread" -> (() => LlmQueries.spreadForCompute(s, docs)),
       "echo_base" -> (() => LlmQueries.dedupIncremental(s, d)),
       "rev" -> (() => RelationalQueries.bucketedJoinRevenue(s, d)),
       "ivf_cells" -> (() => LlmQueries.ivfIndex(s, d)),
@@ -142,7 +142,7 @@ object ArtifactsRestartMain {
       .getOrCreate()
     def touch(s: SparkSession): Boolean = {
       val docs = Tables(s, dir, "documents")
-      LlmQueries.spreadForCompute(s, dir, docs)
+      LlmQueries.spreadForCompute(s, docs)
       LlmQueries.dedupIncremental(s, dir)
       StreamingQueries.neardupIndex(docs.select("doc_id", "text")).count()
       RelationalQueries.bucketedJoinRevenue(s, dir).count() > 0

@@ -54,7 +54,7 @@ class MediaCaptionDedupSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"pairing must ride composite LSH buckets:\n$plan")
-    // the (id, tsig, isig) frame is localCheckpoint'd, so the MinHash
+    // the (id, tsig, isig) frame is `shared`, so the MinHash
     // pipeline must appear NOWHERE in the executed plan (CollapseProject
     // would otherwise inline it into both the bucket derivation and the
     // member struct)

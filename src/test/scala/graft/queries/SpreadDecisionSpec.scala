@@ -36,11 +36,11 @@ class SpreadDecisionSpec extends AnyFunSuite {
 
       // probe the MANY-partition table first: under the old per-dir memo
       // this poisoned the dir with doSpread=false for every neighbor
-      val wideOut = graft.queries.LlmQueries.spreadForCompute(s, tmp.getPath, wide)
+      val wideOut = graft.queries.LlmQueries.spreadForCompute(s, wide)
       assert(wideOut.rdd.getNumPartitions == wide.rdd.getNumPartitions,
         "already-spread input must pass through without a repartition")
 
-      val narrowOut = graft.queries.LlmQueries.spreadForCompute(s, tmp.getPath, narrow)
+      val narrowOut = graft.queries.LlmQueries.spreadForCompute(s, narrow)
       assert(narrowOut.rdd.getNumPartitions == target,
         "under-partitioned neighbor must still get its own spread decision " +
           "(per-(dir, columns) memo, not first-probe-wins per dir)")
@@ -69,8 +69,8 @@ class SpreadDecisionSpec extends AnyFunSuite {
       assert(many.rdd.getNumPartitions >= target, "fixture: many must be spread already")
       assert(single.rdd.getNumPartitions < target, "fixture: single must be under-partitioned")
 
-      graft.queries.LlmQueries.spreadForCompute(s, tmp.getPath, many)
-      val singleOut = graft.queries.LlmQueries.spreadForCompute(s, tmp.getPath, single)
+      graft.queries.LlmQueries.spreadForCompute(s, many)
+      val singleOut = graft.queries.LlmQueries.spreadForCompute(s, single)
       assert(singleOut.rdd.getNumPartitions == target,
         "a same-columns neighbor must still get its own spread decision")
     } finally Artifacts.deleteTree(tmp.toPath)

@@ -33,6 +33,18 @@ class TarShardSinkSpec extends AnyFunSuite {
     assert(back === want)
   }
 
+  test("readShards reads only the .tar files of the shard directory") {
+    val dir = TarShardSink.writeShards(fixture, "doc_id", "text", 4)
+    def entries = TarShardSink.readShards(spark, dir).collect().map(_.toString).sorted.toSeq
+    val before = entries
+    // a stray copy of a real shard under another extension: read as a
+    // shard it would duplicate that shard's entries
+    val shard = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".tar")).head
+    java.nio.file.Files.copy(shard.toPath, new java.io.File(dir, shard.getName + ".bak").toPath)
+    assert(entries === before)
+    assert(before.length === docs.size)
+  }
+
   test("shard assignment follows the md5 shardAssign rule") {
     def hash60(s: String): Long = java.lang.Long.parseLong(
       java.security.MessageDigest.getInstance("MD5")
