@@ -301,20 +301,30 @@ object Dedup {
     * Output: (id_a, id_b, hamming), one row per surviving pair, at its
     * minimum distance. */
   def bitSignaturePairs(df: DataFrame, idCol: String, sigCol: String,
-      nBits: Int, bands: Int = 4, maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
+      nBits: Int, bands: Int = 4, maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame =
+    bucketPairs(bitBandKeys(df, idCol, sigCol, nBits, bands), "bucket", Seq("id", "sig"), maxBucket,
+      (m, o) => Seq(hammingBits(m.getField("sig"), o.getField("sig")).cast("int").as("hamming")),
+      keep = col("hamming") <= maxHamming,
+      aggs = Seq(min("hamming").as("hamming")))
+
+  /** The band-key explosion behind [[bitSignaturePairs]] — the twin of
+    * [[crossModalBandKeys]], shared with the day-2 deploys that persist
+    * the same keys as a bucketed index and band each arriving batch for
+    * the probe join: the `nBits` signature splits into `bands` equal
+    * substrings keyed `"<band>:<bits>"`; NULL signatures never band.
+    * Expression-only, so it runs unchanged on a streaming DataFrame.
+    * Output: (id, sig, bucket), `bands` rows per input row. */
+  def bitBandKeys(df: DataFrame, idCol: String, sigCol: String,
+      nBits: Int, bands: Int): DataFrame = {
     require(bands > 0 && nBits % bands == 0,
       s"nBits ($nBits) must split evenly into bands ($bands)")
     val bandLen = nBits / bands
-    val banded = df.select(col(idCol).as("id"), col(sigCol).as("sig"))
+    df.select(col(idCol).as("id"), col(sigCol).as("sig"))
       .filter(col("sig").isNotNull)
       .select(col("id"), col("sig"),
         explode(array((0 until bands).map(b =>
           concat_ws(":", lit(b).cast("string"), substring(col("sig"), b * bandLen + 1, bandLen))): _*))
           .as("bucket"))
-    bucketPairs(banded, "bucket", Seq("id", "sig"), maxBucket,
-      (m, o) => Seq(hammingBits(m.getField("sig"), o.getField("sig")).cast("int").as("hamming")),
-      keep = col("hamming") <= maxHamming,
-      aggs = Seq(min("hamming").as("hamming")))
   }
 
   /** The composite band-key explosion behind [[crossModalPairs]],

@@ -1252,41 +1252,13 @@ object LlmQueries {
       pairs, "doc_id", "prompt", "chosen", "rejected", maxTokens = 64))
   }
 
-  /** IMAGE NEAR-DUP — the first stage of every image-text curation
-    * pipeline (the LAION recipe), composing the multimodal decode path
-    * with the banded-fingerprint dedup machinery: deterministic 8×8
-    * 24-bit BMPs are synthesized IN-PLAN (md5-textured, one texture
-    * per 8-doc CLUSTER `doc_id DIV 8`, plus ONE per-doc noisy pixel —
-    * so cluster-mates are NEAR-duplicate images, not byte-identical),
-    * REALLY decoded ([[Multimodal.imageDHash]] — ImageIO, integer
-    * Rec.601 luminance, horizontal-gradient dHash), and paired by
-    * [[Dedup.bitSignaturePairs]] (4×14-bit LSH bands, bucket-capped,
-    * exact Hamming ≤ 4 verify — never all-pairs). A noisy pixel flips
-    * at most 2 dHash bits, so within-cluster Hamming ≤ 4 by
-    * construction. maxHamming = 4 ≥ bands = 4 means the generic
-    * pigeonhole guarantee is OFF (see [[Dedup.bitSignaturePairs]]'
-    * recall warning) — recall here rests on the noise being
-    * ROW-CONFINED: cluster-mates share ny = (doc_id DIV 8) % 8, so
-    * every differing bit of a within-cluster pair lies in that ONE
-    * 7-bit dHash row, which spans at most 2 of the 4 14-bit bands —
-    * at least 2 shared bands always stay intact and every true pair
-    * banded-matches; the md5 pixel textures make cross-cluster dHash
-    * collisions vanish (the first-revision XOR mix left correlated
-    * low bits — 307k phantom cross-cluster pairs at 10×, caught by
-    * the probe; md5: zero). Cluster SIZE is fixed at 8 and cluster
-    * COUNT grows with the corpus — the realistic duplication shape
-    * (each image has O(1) dups), so pair volume scales LINEARLY and
-    * buckets never approach the cap. Every pixel, bit, band, and
-    * distance is closed-form integer arithmetic — the oracle states
-    * the decoded pixels independently, so the gate only passes when
-    * the REAL decoder ran. */
   /** Synthesized 8×8 BMPs → dHash signatures for a frame carrying
     * (doc_id, p, nx, ny): texture cluster p, noise pixel (nx, ny).
     * Stored BMP rows are bottom-up: byte position i covers stored row
     * i DIV 8 = image row 7 − (i DIV 8), column i % 8; grays stay in
     * 1..126 so utf-8 encodes each as ONE byte. The texture hash is
     * the portable hash60 rule (first 15 md5 hex chars as BIGINT).
-    * Shared by [[mediaDedupFeatures]] and the incremental probe. */
+    * The [[MediaModality]] Image synth, and the caption family's image half. */
   private[queries] def mediaSigsFor(d: DataFrame): DataFrame = {
     // Round-21: same pixel rule as the original SQL-string form
     // (conv(substring(md5(...),1,15),16,10) per pixel) but the hash
@@ -1319,20 +1291,90 @@ object LlmQueries {
     Multimodal.imageDHash(media, "doc_id", "media", grid = 8)
   }
 
-  /** The corpus image frame: one texture per 8-doc cluster, one noisy
-    * pixel per doc (BIGINT p: p·hash-mix overflows INT under ANSI). */
-  private[queries] def mediaCorpusParams(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents").select(col("doc_id"),
-      expr("CAST(doc_id DIV 8 AS BIGINT)").as("p"),
-      expr("CAST(doc_id % 8 AS BIGINT)").as("nx"),
-      expr("CAST((doc_id DIV 8) % 8 AS BIGINT)").as("ny"))
+  /** The params frame (doc_id, p, nx, ny) every media family
+    * synthesizes from: texture cluster p = src DIV 8 and noise pixel
+    * (nx, ny) = (src % 8, (src DIV 8) % 8) of each row's SOURCE id
+    * `src` ([[echoSource]]) — one texture per 8-doc cluster, one noisy
+    * pixel per doc. The corpus is `off` = None; the day-2 echo batch is
+    * `off` = max(doc_id) + 1, every corpus row arriving again under
+    * id doc_id + off. BIGINT p: p·hash-mix overflows INT under ANSI. */
+  private[queries] def mediaParams(docs: DataFrame, off: Option[Long]): DataFrame =
+    docs.select(off.fold(col("doc_id"))(col("doc_id") + lit(_)).as("doc_id"))
+      .select(col("doc_id"), echoSource(col("doc_id"), off).as("src"))
+      .selectExpr("doc_id", "CAST(src DIV 8 AS BIGINT) AS p",
+        "CAST(src % 8 AS BIGINT) AS nx", "CAST((src DIV 8) % 8 AS BIGINT) AS ny")
 
-  val mediaDedupFeatures: Q = (s, dir) => {
-    val sigs = mediaSigsFor(spreadForCompute(s, mediaCorpusParams(s, dir)))
-    Dedup.bitSignaturePairs(sigs, "doc_id", "sig",
-        nBits = 56, bands = 4, maxHamming = 4, maxBucket = MaxBucket)
-      .orderBy("id_a", "id_b")
+  /** The corpus id a media row's content comes from: its own `id`, or
+    * in the echo batch (ids shifted by `off`) the ORIGINAL id when
+    * hb < 85 — a re-post of an existing corpus item; the rest are
+    * genuinely new (their own shifted id, beyond every corpus cluster). */
+  private def echoSource(id: Column, off: Option[Long]): Column = off.fold(id) { o =>
+    val orig = id - lit(o)
+    when(Sampling.hashBucket256(orig) < 85, orig).otherwise(id)
   }
+
+  /** The (id, members…) signatures of modality `m` over the corpus
+    * (`off` = None) or its echo batch. Synthesis, decode and hashing
+    * are heavy narrow compute, so the input spreads first (the
+    * single-file one-task trap) where the family's placement says. */
+  private[queries] def mediaSigs(s: SparkSession, dir: String, m: MediaModality,
+      off: Option[Long]): DataFrame = {
+    import MediaModality.SpreadAt
+    val docs = Tables(s, dir, "documents")
+    val params = m.spreadAt match {
+      case SpreadAt.Docs => mediaParams(spreadForCompute(s, docs), off)
+      case SpreadAt.Params => spreadForCompute(s, mediaParams(docs, off))
+      case SpreadAt.Never => mediaParams(docs, off)
+    }
+    m.sigs(params, echoSource(col("doc_id"), off))
+  }
+
+  /** The verified corpus near-dup pairs of modality `m`. */
+  private def mediaPairs(s: SparkSession, dir: String, m: MediaModality): DataFrame =
+    m.pairs(mediaSigs(s, dir, m, None), MaxBucket)
+
+  /** The duplicate clusters of modality `m`: the transitive closure of
+    * its pair graph ([[Dedup.connectedComponents]] — the same
+    * pointer-jumping min-label CC every text dedup family uses) plus
+    * the keep-one rule, each cluster keeping its minimum member id
+    * (`keep = 1`). Pairs say "these two look alike", clusters say
+    * "store one of these". */
+  private def mediaClusters(s: SparkSession, dir: String, m: MediaModality): DataFrame =
+    Dedup.connectedComponents(mediaPairs(s, dir, m).select("id_a", "id_b"))
+      .select(col("id").as("doc_id"), col("comp").as("component"),
+        (col("id") === col("comp")).cast("int").as("keep"))
+      .orderBy("doc_id")
+
+  /** IMAGE NEAR-DUP — the first stage of every image-text curation
+    * pipeline (the LAION recipe), composing the multimodal decode path
+    * with the banded-fingerprint dedup machinery: deterministic 8×8
+    * 24-bit BMPs are synthesized IN-PLAN (md5-textured, one texture
+    * per 8-doc CLUSTER `doc_id DIV 8`, plus ONE per-doc noisy pixel —
+    * so cluster-mates are NEAR-duplicate images, not byte-identical),
+    * REALLY decoded ([[Multimodal.imageDHash]] — ImageIO, integer
+    * Rec.601 luminance, horizontal-gradient dHash), and paired by
+    * [[Dedup.bitSignaturePairs]] (4×14-bit LSH bands, bucket-capped,
+    * exact Hamming ≤ 4 verify — never all-pairs). A noisy pixel flips
+    * at most 2 dHash bits, so within-cluster Hamming ≤ 4 by
+    * construction. maxHamming = 4 ≥ bands = 4 means the generic
+    * pigeonhole guarantee is OFF (see [[Dedup.bitSignaturePairs]]'
+    * recall warning) — recall here rests on the noise being
+    * ROW-CONFINED: cluster-mates share ny = (doc_id DIV 8) % 8, so
+    * every differing bit of a within-cluster pair lies in that ONE
+    * 7-bit dHash row, which spans at most 2 of the 4 14-bit bands —
+    * at least 2 shared bands always stay intact and every true pair
+    * banded-matches; the md5 pixel textures make cross-cluster dHash
+    * collisions vanish (the first-revision XOR mix left correlated
+    * low bits — 307k phantom cross-cluster pairs at 10×, caught by
+    * the probe; md5: zero). Cluster SIZE is fixed at 8 and cluster
+    * COUNT grows with the corpus — the realistic duplication shape
+    * (each image has O(1) dups), so pair volume scales LINEARLY and
+    * buckets never approach the cap. Every pixel, bit, band, and
+    * distance is closed-form integer arithmetic — the oracle states
+    * the decoded pixels independently, so the gate only passes when
+    * the REAL decoder ran. */
+  val mediaDedupFeatures: Q = (s, dir) =>
+    mediaPairs(s, dir, MediaModality.Image).orderBy("id_a", "id_b")
 
   /** The synthetic CAPTION of doc `docId` in image-cluster `p` — the
     * multimodal crawl's text half: 30 cluster-shared words plus 2
@@ -1351,6 +1393,24 @@ object LlmQueries {
           concat(lit("n"), (Sampling.hash60(concat(lit("capn:"), docId.cast("string"),
             lit(":"), i.cast("string"))) % 1000).cast("string")))), " ")
 
+  /** The (id, tsig, isig) signature frame of a caption+image params
+    * frame (doc_id, p, nx, ny): image dHash from the BMP synth,
+    * caption MinHash scan-side on top of it. The caption's cluster is
+    * that of the row's source id `src` (a column over the post-sig
+    * `doc_id`: the dHash synth keeps only the id, so in the echo batch
+    * the original id is recovered from the offset). Shared — the
+    * crossModalPairs caller note. */
+  private[queries] def captionSigFrame(params: DataFrame, src: Column): DataFrame =
+    captionSigs(params, src).transform(Materialize.shared)
+
+  /** [[captionSigFrame]] before it is shared: narrow expressions and
+    * mapPartitions only, so it also runs on a streaming DataFrame. */
+  private def captionSigs(params: DataFrame, src: Column): DataFrame =
+    mediaSigsFor(params).withColumn("src", src)
+      .select(col("doc_id").as("id"), col("sig").as("isig"),
+        Dedup.minHashSignatureP(Dedup.shingleMd5(
+          captionFor(expr("CAST(src DIV 8 AS BIGINT)"), col("doc_id"))), 32).as("tsig"))
+
   /** CROSS-MODAL (caption, image) JOINT near-dup —
     * [[Dedup.crossModalPairs]] over the image family's dHash corpus
     * and its caption twin: the multimodal crawl's common duplicate is
@@ -1366,124 +1426,37 @@ object LlmQueries {
     * MinHash would compute twice per row). The oracle replays BOTH
     * band families — every caption word, shingle, affine remix, band
     * key, pixel, dHash bit, composite bucket, and both verifies. */
-  /** The (id, tsig, isig) signature frame of a caption+image params
-    * frame (doc_id, p, nx, ny): image dHash from the BMP synth,
-    * caption MinHash scan-side on top of it. `capP` is the CAPTION's
-    * cluster column (a function of the post-sig `doc_id` — it differs
-    * from the image cluster only in the echo batch, where the original
-    * id must be recovered from the offset). Shared — the
-    * crossModalPairs caller note. */
-  private[queries] def captionSigFrame(params: DataFrame, capP: Column): DataFrame =
-    mediaSigsFor(params).select(col("doc_id").as("id"), col("sig").as("isig"),
-        Dedup.minHashSignatureP(Dedup.shingleMd5(captionFor(capP, col("doc_id"))), 32)
-          .as("tsig"))
-      .transform(Materialize.shared)
-
-  val mediaCaptionDedup: Q = (s, dir) => {
-    // caption hashing (32 word md5s + 30 shingle md5s + 32-seed minhash
-    // per row) is heavy narrow compute — spread before it (the
-    // single-file one-task trap)
-    val sigs = captionSigFrame(
-      spreadForCompute(s, mediaCorpusParams(s, dir)),
-      expr("CAST(doc_id DIV 8 AS BIGINT)"))
-    Dedup.crossModalPairs(sigs, "id", "tsig", "isig",
-        k = 32, textBands = 8, nBits = 56, bitBands = 4,
-        threshold = 0.3, maxHamming = 4, maxBucket = MaxBucket)
-      .orderBy("id_a", "id_b")
-  }
+  val mediaCaptionDedup: Q = (s, dir) =>
+    mediaPairs(s, dir, MediaModality.Caption).orderBy("id_a", "id_b")
 
   /** The ingest-door key pair of the cross-modal family: per arriving
-    * (caption, image) row, the caption MinHash rendered to its md5
-    * witness plus the raw image dHash — ALL narrow expressions /
-    * mapPartitions, so the SAME derivation runs on a streaming
-    * DataFrame (the batch/stream-shared rule). A re-posted pair
-    * (identical image, identical caption) collides on BOTH keys. */
-  private[queries] def captionStreamKeys(src: DataFrame): DataFrame = {
-    val isigs = mediaSigsFor(src)
-    val cap = captionFor(expr("CAST(doc_id DIV 8 AS BIGINT)"), col("doc_id"))
-    isigs.select(
-      md5(to_binary(concat_ws(",", transform(
-        Dedup.minHashSignatureP(Dedup.shingleMd5(cap), 32),
-        x => x.cast("string"))), lit("utf-8"))).as("tsig_md5"),
-      col("sig").as("isig"))
-  }
+    * (caption, image) row of a corpus params stream, the caption
+    * MinHash rendered to its md5 witness plus the raw image dHash — the
+    * SAME derivation as the batch signatures ([[captionSigs]], the
+    * batch/stream-shared rule). A re-posted pair (identical image,
+    * identical caption) collides on BOTH keys. */
+  private[queries] def captionStreamKeys(params: DataFrame): DataFrame =
+    captionSigs(params, col("doc_id")).select(
+      md5(to_binary(concat_ws(",", transform(col("tsig"), _.cast("string"))), lit("utf-8")))
+        .as("tsig_md5"),
+      col("isig"))
 
-  /** DAY-2 CROSS-MODAL DEDUP — the persisted deploy shape of
-    * [[mediaCaptionDedup]] (the image family's
-    * `media_dedup_incremental` pattern on the COMPOSITE keys): the
-    * corpus's (text band × image band) bucket keys persist ONCE as a
-    * `bucketBy(bucket)` table carrying both signatures; a new
-    * (caption, image) batch — the echo convention, hb < 85 re-posts an
-    * EXISTING corpus image under a new id with a PARAPHRASED caption
-    * (same cluster words, fresh noise words — exactly the multimodal
-    * crawl's common dup), the rest genuinely-new pairs — computes both
-    * signatures scan-side, explodes its own composite keys, and probes
-    * the index with ZERO index-side Exchange (plan-pinned). Per batch
-    * pair: distinct corpus matches passing BOTH verifies and the
-    * dup_corpus/new verdict. Every caption word, shingle, remix, band
-    * key, pixel, dHash bit and both distances replay in the oracle. */
-  /** The persisted composite (text band × image band) index — built
-    * once per dir, shared by the day-2 probe, the forget mask and the
-    * compliance report. */
-  private[queries] def captionSigIndexTable(s: SparkSession, dir: String): String =
-    Artifacts.getOrBuild("caption_sigs", Seq(Tables(s, dir, "documents"))) { a =>
-      a.bucketedTable("graft_csig_b", "bucket", Dedup.crossModalBandKeys(
-          captionSigFrame(spreadForCompute(s, mediaCorpusParams(s, dir)),
-            expr("CAST(doc_id DIV 8 AS BIGINT)")),
-          "id", "tsig", "isig")
-        .select(col("bucket"), col("id").as("c_id"),
-          col("tsig").as("c_tsig"), col("isig").as("c_isig")))
-    }
-
-  /** Shared day-2 cross-modal probe (see [[mediaIncrementalProbe]]'s
-    * mask contract). */
-  private[queries] def captionIncrementalProbe(
-      s: SparkSession, dir: String, mask: Option[String]): DataFrame = {
-    val idxTable = captionSigIndexTable(s, dir)
-    // GATE-ONLY bootstrap (see mediaDedupIncremental)
-    val off = Tables(s, dir, "documents").agg(max("doc_id")).head.getLong(0) + 1L
-    val hb = Sampling.hashBucket256(col("doc_id"))
-    val batchParams = Tables(s, dir, "documents").select(
-      (col("doc_id") + lit(off)).as("doc_id"),
-      when(hb < 85, expr("CAST(doc_id DIV 8 AS BIGINT)"))
-        .otherwise(expr(s"CAST((doc_id + $off) DIV 8 AS BIGINT)")).as("p"),
-      when(hb < 85, expr("CAST(doc_id % 8 AS BIGINT)"))
-        .otherwise(expr(s"CAST((doc_id + $off) % 8 AS BIGINT)")).as("nx"),
-      when(hb < 85, expr("CAST((doc_id DIV 8) % 8 AS BIGINT)"))
-        .otherwise(expr(s"CAST(((doc_id + $off) DIV 8) % 8 AS BIGINT)")).as("ny"))
-    // caption cluster from the POST-offset id (original = doc_id − off)
-    val hbB = Sampling.hashBucket256(col("doc_id") - lit(off))
-    val capP = when(hbB < 85, expr(s"CAST((doc_id - $off) DIV 8 AS BIGINT)"))
-      .otherwise(expr("CAST(doc_id DIV 8 AS BIGINT)"))
-    val batchSigs = captionSigFrame(spreadForCompute(s, batchParams), capP)
-    val idx = mask.map(maskIndex(s, dir, s.table(idxTable), "c_id", _))
-      .getOrElse(s.table(idxTable))
-    val hits = Dedup.crossModalBandKeys(batchSigs, "id", "tsig", "isig")
-      .join(idx, Seq("bucket"))
-      .filter(Dedup.signatureSimilarity(col("tsig"), col("c_tsig")) >= 0.3 &&
-        graft.functions.HashFunctions.hammingBits(col("isig"), col("c_isig"))
-          .cast("int") <= 4)
-      .groupBy(col("id")).agg(countDistinct(col("c_id")).as("n_dups"))
-    batchSigs.select(col("id").as("doc_id"))
-      .join(hits.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_outer")
-      .na.fill(0L, Seq("n_dups"))
-      .select(col("doc_id"), col("n_dups"),
-        when(col("n_dups") > 0, lit("dup_corpus")).otherwise(lit("new")).as("status"))
-      .orderBy("doc_id")
-  }
-
+  /** DAY-2 CROSS-MODAL DEDUP — [[incrementalProbe]] on the COMPOSITE
+    * (text band × image band) keys: an echo re-post is an EXISTING
+    * corpus image under a new id with a PARAPHRASED caption (same
+    * cluster words, fresh noise words — exactly the multimodal crawl's
+    * common dup), and a match must pass BOTH verifies. Every caption
+    * word, shingle, remix, band key, pixel, dHash bit and both
+    * distances replay in the oracle. */
   val mediaCaptionDedupIncremental: Q = (s, dir) =>
-    captionIncrementalProbe(s, dir, None)
+    incrementalProbe(s, dir, MediaModality.Caption, None)
 
   /** DELETE PATH for the persisted composite (caption × image) index —
-    * [[mediaForget]]'s cross-modal sibling: one broadcast anti-join
-    * masks a forgotten (caption, image) pair's 32 composite band rows
-    * at probe time; the bucketed index is never rewritten, the probe
-    * keeps its zero-Exchange index scan, and a masked pair's
-    * paraphrase re-post drops out of `n_dups` exactly (the deleted-only
-    * inverse probe balances the books — MediaForgetSpec). */
+    * [[mediaForget]]'s cross-modal sibling: a forgotten (caption, image)
+    * pair's 32 composite band rows are masked at probe time, and its
+    * paraphrase re-post drops out of `n_dups` exactly. */
   val mediaCaptionForget: Q = (s, dir) =>
-    captionIncrementalProbe(s, dir, Some("left_anti"))
+    incrementalProbe(s, dir, MediaModality.Caption, Some("left_anti"))
 
   /** DATASET CARD — the summary bundle a published dataset ships
     * (the HF dataset-card / Datasheets-for-Datasets numbers), computed
@@ -1566,75 +1539,31 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
-  /** IMAGE DUPLICATE CLUSTERS — the transitive closure of
-    * [[mediaDedupFeatures]]' pair graph ([[Dedup.connectedComponents]]
-    * — the same pointer-jumping min-label CC every text dedup family
-    * uses), plus the keep-one rule: each cluster keeps its minimum
-    * member id (`keep = 1`). This is the decision output of the image
-    * pipeline — pairs say "these two look alike", clusters say "store
-    * one of these eight". The oracle replays the pair chain and the
-    * closure itself (a recursive reachability CTE taking min labels),
-    * so the component ids are hash-verified, not just the pairs. */
-  val mediaDedupClusters: Q = (s, dir) => {
-    val sigs = mediaSigsFor(spreadForCompute(s, mediaCorpusParams(s, dir)))
-    val pairs = Dedup.bitSignaturePairs(sigs, "doc_id", "sig",
-      nBits = 56, bands = 4, maxHamming = 4, maxBucket = MaxBucket)
-    Dedup.connectedComponents(pairs.select("id_a", "id_b"))
-      .select(col("id").as("doc_id"), col("comp").as("component"),
-        (col("id") === col("comp")).cast("int").as("keep"))
-      .orderBy("doc_id")
-  }
+  /** IMAGE DUPLICATE CLUSTERS — [[mediaClusters]] over
+    * [[mediaDedupFeatures]]' pair graph: the decision output of the
+    * image pipeline ("store one of these eight"). The oracle replays
+    * the pair chain and the closure itself (a recursive reachability
+    * CTE taking min labels), so the component ids are hash-verified,
+    * not just the pairs. */
+  val mediaDedupClusters: Q = (s, dir) => mediaClusters(s, dir, MediaModality.Image)
 
-  /** CROSS-MODAL DUPLICATE CLUSTERS — the decision output of the joint
-    * family ([[mediaDedupClusters]]' pattern on [[mediaCaptionDedup]]'
-    * pair graph): joint pairs say "these two (caption, image) pairs
-    * look alike", clusters say "store one of these" — the transitive
-    * closure via the SAME pointer-jumping min-label CC every dedup
-    * family uses, keep = minimum member id. The oracle replays the
-    * composite pair chain AND the closure (recursive reachability with
-    * min labels), so component ids are hash-verified end to end. */
-  val mediaCaptionClusters: Q = (s, dir) => {
-    val sigs = captionSigFrame(
-      spreadForCompute(s, mediaCorpusParams(s, dir)),
-      expr("CAST(doc_id DIV 8 AS BIGINT)"))
-    val pairs = Dedup.crossModalPairs(sigs, "id", "tsig", "isig",
-      k = 32, textBands = 8, nBits = 56, bitBands = 4,
-      threshold = 0.3, maxHamming = 4, maxBucket = MaxBucket)
-    Dedup.connectedComponents(pairs.select("id_a", "id_b"))
-      .select(col("id").as("doc_id"), col("comp").as("component"),
-        (col("id") === col("comp")).cast("int").as("keep"))
-      .orderBy("doc_id")
-  }
+  /** CROSS-MODAL DUPLICATE CLUSTERS — [[mediaClusters]] over
+    * [[mediaCaptionDedup]]' joint pair graph: joint pairs say "these
+    * two (caption, image) pairs look alike", clusters say "store one of
+    * these". The oracle replays the composite pair chain AND the
+    * closure, so component ids are hash-verified end to end. */
+  val mediaCaptionClusters: Q = (s, dir) => mediaClusters(s, dir, MediaModality.Caption)
 
-  /** DAY-2 IMAGE DEDUP — the persisted deploy shape of
-    * [[mediaDedupFeatures]] (the `dedup_incremental_bucketed` /
-    * `ann_ivf_persisted` layout investment applied to perceptual
-    * signatures): the corpus's dHash band keys persist ONCE as a
-    * `bucketBy(bucket)` table carrying (bucket, id, sig); a new image
-    * batch (the echo convention — hb < 85 re-encodes of EXISTING
-    * corpus images under new ids, the rest genuinely-new textures)
-    * computes signatures scan-side, explodes its own band keys, and
-    * probes the index with ZERO Exchange on the index side
-    * (plan-pinned). Per batch image: the count of DISTINCT corpus
-    * images within Hamming ≤ 4 and the `dup_corpus`/`new` status —
-    * the first question an image-crawl ingest asks. Every pixel, bit,
-    * band, and distance replays in the oracle. */
-  /** The persisted dHash band index (bucket, c_id, c_sig) — built once
-    * per dir, shared by the day-2 probe, the forget mask and the
-    * compliance report (one builder under the cache key — the
-    * bm25IndexTables lesson). */
-  private[queries] def mediaSigIndexTable(s: SparkSession, dir: String): String =
-    Artifacts.getOrBuild("media_sigs", Seq(Tables(s, dir, "documents"))) { a =>
-      a.bucketedTable("graft_msig_b", "bucket",
-        mediaBandKeys(mediaSigsFor(spreadForCompute(s, mediaCorpusParams(s, dir))))
-          .select(col("bucket"), col("doc_id").as("c_id"), col("sig").as("c_sig")))
+  /** The persisted band index of modality `m` — (bucket, c_id,
+    * c_<member>…) as a `bucketBy(bucket)` table, built once per dir and
+    * shared by the day-2 probe, the forget mask and the compliance
+    * report (one builder under the cache key — the bm25IndexTables
+    * lesson). */
+  private[graft] def sigIndexTable(s: SparkSession, dir: String, m: MediaModality): String =
+    Artifacts.getOrBuild(m.kind, Seq(Tables(s, dir, "documents"))) { a =>
+      a.bucketedTable(m.table, "bucket", m.bandKeys(mediaSigs(s, dir, m, None))
+        .select(col("bucket") +: col("id").as("c_id") +: m.members.map(c => col(c).as(s"c_$c")): _*))
     }
-
-  private def mediaBandKeys(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), col("sig"),
-      explode(array((0 until 4).map(b =>
-        concat_ws(":", lit(b).cast("string"), substring(col("sig"), b * 14 + 1, 14))): _*))
-        .as("bucket"))
 
   /** The tombstone mask over a persisted index relation — the
     * ann_ivf_forget pattern verbatim (broadcast anti-join on the
@@ -1649,66 +1578,67 @@ object LlmQueries {
         .filter(isForgetDoc50(col("doc_id"))).select(col("doc_id").as(idCol))),
       Seq(idCol), joinType)
 
-  /** Shared day-2 image probe — the incremental gate (no mask) and the
-    * forget gate (tombstone mask) must read the SAME persisted index
-    * and echo batch, or the two could drift. `mask` = None | Some
-    * ("left_anti") | Some("left_semi"). */
-  private[queries] def mediaIncrementalProbe(
-      s: SparkSession, dir: String, mask: Option[String]): DataFrame = {
-    // GATE-ONLY bootstrap: deriving the batch id offset from max(doc_id)
-    // is one bounded driver read (a parquet max-statistics scan), but a
-    // production ingest gets the offset from its ingest CONTRACT (batch
-    // sequence number / ingestion timestamp) — never a corpus scan per
-    // arriving batch. The scan exists here so the synthetic echo batch
-    // is reproducible from the fixture alone.
-    val off = Tables(s, dir, "documents").agg(max("doc_id")).head.getLong(0) + 1L
-    val idxTable = mediaSigIndexTable(s, dir)
-    // echo rule: hb < 85 re-encodes the ORIGINAL image (same texture
-    // cluster, same noise pixel) under a new id; the rest are new
-    // textures (their own p DIV 8 — beyond every corpus cluster)
-    val hb = Sampling.hashBucket256(col("doc_id"))
-    val batchParams = Tables(s, dir, "documents").select(
-      (col("doc_id") + lit(off)).as("doc_id"),
-      when(hb < 85, expr("CAST(doc_id DIV 8 AS BIGINT)"))
-        .otherwise(expr(s"CAST((doc_id + $off) DIV 8 AS BIGINT)")).as("p"),
-      when(hb < 85, expr("CAST(doc_id % 8 AS BIGINT)"))
-        .otherwise(expr(s"CAST((doc_id + $off) % 8 AS BIGINT)")).as("nx"),
-      when(hb < 85, expr("CAST((doc_id DIV 8) % 8 AS BIGINT)"))
-        .otherwise(expr(s"CAST(((doc_id + $off) DIV 8) % 8 AS BIGINT)")).as("ny"))
-    val batchSigs = mediaSigsFor(spreadForCompute(s, batchParams))
-    val idx = mask.map(maskIndex(s, dir, s.table(idxTable), "c_id", _))
-      .getOrElse(s.table(idxTable))
-    val hits = mediaBandKeys(batchSigs)
+  /** DAY-2 MEDIA DEDUP — the persisted deploy shape of every media
+    * family's pairs gate (the `dedup_incremental_bucketed` /
+    * `ann_ivf_persisted` layout investment applied to perceptual
+    * signatures). The corpus's band keys persist ONCE
+    * ([[sigIndexTable]]); a new batch — the echo convention
+    * ([[mediaParams]]: hb < 85 re-encodes an EXISTING corpus item under
+    * a new id, the rest are genuinely new) — computes its signatures
+    * scan-side, explodes its own band keys, and probes the index with
+    * ZERO Exchange on the index side (plan-pinned). Per batch row: the
+    * count of DISTINCT corpus items passing the modality's verify and
+    * the `dup_corpus`/`new` status — the first question a media-crawl
+    * ingest asks. Every pixel, sample, bit, band and distance replays
+    * in the oracle.
+    *
+    * `mask` = None | Some("left_anti") | Some("left_semi"): the
+    * incremental gate and the forget gate read the SAME persisted index
+    * and echo batch, so the two cannot drift. The forget gate masks
+    * deleted corpus items ([[isForgetDoc50]]) at probe time with a
+    * broadcast anti-join ([[maskIndex]] — the FAISS-IDSelector / Lucene
+    * deleted-docs pattern the IVF and BM25 forgets ship): the index
+    * file is never rewritten, the probe keeps its zero-Exchange
+    * bucketed scan (plan-pinned in MediaForgetSpec), and a masked
+    * item's echo re-encode drops out of `n_dups` exactly — the
+    * deleted-only inverse probe accounts for every lost match. Without
+    * the mask a persisted index keeps a forgotten item matching every
+    * future ingest, which for a legal delete is precisely wrong.
+    *
+    * GATE-ONLY bootstrap: the batch id offset is max(doc_id) + 1 (one
+    * bounded driver read, an [[Artifacts]] value shared with
+    * [[echoBase]]), so the synthetic echo batch is reproducible from
+    * the fixture alone; a production ingest gets the offset from its
+    * ingest CONTRACT (batch sequence number / ingestion timestamp). */
+  private[graft] def incrementalProbe(s: SparkSession, dir: String, m: MediaModality,
+      mask: Option[String]): DataFrame = {
+    val idxTable = sigIndexTable(s, dir, m)
+    val batch = mediaSigs(s, dir, m, Some(maxDocId(s, dir) + 1L))
+    val idx = mask.fold(s.table(idxTable))(maskIndex(s, dir, s.table(idxTable), "c_id", _))
+    val hits = m.bandKeys(batch)
       .join(idx, Seq("bucket"))
-      .filter(graft.functions.HashFunctions.hammingBits(col("sig"), col("c_sig"))
-        .cast("int") <= 4)
-      .groupBy(col("doc_id"))
+      .filter(m.verify(col, c => col(s"c_$c")))
+      .groupBy(col("id"))
       .agg(countDistinct(col("c_id")).as("n_dups"))
-    batchSigs.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left_outer")
+    batch.select(col("id"))
+      .join(hits, Seq("id"), "left_outer")
       .na.fill(0L, Seq("n_dups"))
-      .select(col("doc_id"), col("n_dups"),
+      .select(col("id").as("doc_id"), col("n_dups"),
         when(col("n_dups") > 0, lit("dup_corpus")).otherwise(lit("new")).as("status"))
       .orderBy("doc_id")
   }
 
-  val mediaDedupIncremental: Q = (s, dir) => mediaIncrementalProbe(s, dir, None)
+  /** DAY-2 IMAGE DEDUP — [[incrementalProbe]] on the dHash band index:
+    * distinct corpus images within Hamming ≤ 4 per batch image. */
+  val mediaDedupIncremental: Q = (s, dir) =>
+    incrementalProbe(s, dir, MediaModality.Image, None)
 
   /** DELETE PATH for the persisted image band index — `ann_ivf_forget`'s
-    * perceptual twin, closing the r19 verdict's top gap: without it the
-    * bucketed dHash index keeps a forgotten image's signature matching
-    * every future ingest, which for a legal delete is precisely wrong.
-    * Deleted corpus images are masked at probe time with a broadcast
-    * anti-join against the [[isForgetDoc50]] list (the FAISS-IDSelector
-    * / Lucene deleted-docs pattern the IVF and BM25 forgets ship): the
-    * index file is never rewritten, the probe keeps its zero-Exchange
-    * bucketed scan (plan-pinned in MediaForgetSpec), and a masked
-    * image's echo re-encode drops out of `n_dups` exactly — the
-    * deleted-only inverse probe accounts for every lost match. Same
-    * output surface as [[mediaDedupIncremental]]; oracle: the shared
-    * replay with the mask predicate on the corpus side of the band
-    * join. */
-  val mediaForget: Q = (s, dir) => mediaIncrementalProbe(s, dir, Some("left_anti"))
+    * perceptual twin ([[incrementalProbe]] with the tombstone mask);
+    * oracle: the shared replay with the mask predicate on the corpus
+    * side of the band join. */
+  val mediaForget: Q = (s, dir) =>
+    incrementalProbe(s, dir, MediaModality.Image, Some("left_anti"))
 
   /** REAL image decode through the driver gate: a deterministic 24-bit
     * BMP payload is synthesized IN-PLAN for every document (fixed
@@ -1952,16 +1882,18 @@ object LlmQueries {
     * batch docs at `+2·base`, so echo ids can NEVER collide with real
     * doc_ids at any scale factor (hardcoded +1e6/+2e6 would collide
     * once doc_ids pass a million). The rule is replayed in the oracle
-    * integer-safely as `power(10, length(CAST(max AS VARCHAR)))`.
-    * An [[Artifacts]] value: the max-scan is a driver job, and three
-    * catalog queries × bench reps would otherwise re-run it on every
-    * build. */
-  private def echoBase(s: SparkSession, dir: String): Long = {
+    * integer-safely as `power(10, length(CAST(max AS VARCHAR)))`. */
+  private def echoBase(s: SparkSession, dir: String): Long =
+    math.pow(10, maxDocId(s, dir).toString.length).toLong
+
+  /** max(doc_id) — the one corpus max every echo-injected gate derives
+    * its ids from ([[echoBase]]; the day-2 media batch offset of
+    * [[incrementalProbe]]). An [[Artifacts]] value: the max-scan is a
+    * driver job, and the catalog's echo gates × bench reps would
+    * otherwise re-run it on every build. */
+  private def maxDocId(s: SparkSession, dir: String): Long = {
     val docs = Tables(s, dir, "documents")
-    Artifacts.getOrBuild("echo_base", Seq(docs)) { _ =>
-      val maxId = docs.agg(max("doc_id")).head.getLong(0)
-      math.pow(10, maxId.toString.length).toLong
-    }
+    Artifacts.getOrBuild("echo_base", Seq(docs))(_ => docs.agg(max("doc_id")).head.getLong(0))
   }
   private val sqlEchoBase =
     "(SELECT CAST(power(10, length(CAST(max(doc_id) AS VARCHAR))) AS BIGINT) FROM documents)"
@@ -3168,10 +3100,6 @@ object LlmQueries {
     Multimodal.audioFingerprint(media, "doc_id", "media", nFrames = F)
   }
 
-  private[queries] def audioSigsFor(s: SparkSession, dir: String): DataFrame =
-    audioSigsForParams(Tables(s, dir, "documents")
-      .select(col("doc_id"), expr("CAST(doc_id DIV 8 AS BIGINT)").as("p")))
-
   /** AUDIO NEAR-DUP PAIRS — the modality the image family
     * ([[mediaDedupFeatures]]) was factored for: synth → REAL byte-level
     * PCM parse → 56-bit energy-delta fingerprint → the SAME
@@ -3181,9 +3109,7 @@ object LlmQueries {
     * in the oracle from the closed form, so a hash match proves the
     * byte pack→parse round trip AND the pairing. */
   val mediaAudioDedup: Q = (s, dir) =>
-    Dedup.bitSignaturePairs(audioSigsFor(s, dir), "doc_id", "sig",
-        nBits = 56, bands = 4, maxHamming = 2, maxBucket = MaxBucket)
-      .orderBy("id_a", "id_b")
+    mediaPairs(s, dir, MediaModality.Audio).orderBy("id_a", "id_b")
 
   /** The corpus video frame → per-video majority signatures: each doc
     * is a 5-frame animated GIF of md5-textured 8×8 frames (ONE texture
@@ -3226,72 +3152,20 @@ object LlmQueries {
     Multimodal.videoMajoritySignature(media, "doc_id", "media", grid = 8)
   }
 
-  private[queries] def videoSigsFor(s: SparkSession, dir: String): DataFrame =
-    // GIF encode + sequence decode + PNG round trip is the heaviest
-    // per-row compute in the media family (~5 codec passes per doc);
-    // a single-file fixture would run it all on one task (the
-    // pack_sequences_bpe precedent), so spread before the synth
-    videoSigsForParams(spreadForCompute(s, Tables(s, dir, "documents"))
-      .select(col("doc_id"), expr("CAST(doc_id DIV 8 AS BIGINT)").as("p")))
-
-  /** INCREMENTAL AUDIO DEDUP — the day-2 deploy shape of
-    * [[mediaAudioDedup]], the image family's `media_dedup_incremental`
-    * pattern on the PCM path: the corpus's fingerprint band keys
-    * persist ONCE as a `bucketBy(bucket)` table; a new audio batch
-    * (echo convention — hb < 85 RE-ENCODES an existing corpus
-    * waveform under a new id, i.e. same cluster, same frames, a fresh
-    * per-doc noise seed; the rest are genuinely-new clusters) computes
-    * fingerprints scan-side, explodes its own band keys, and probes
-    * the index with ZERO Exchange on the index side (plan-pinned).
-    * Per batch doc: distinct corpus matches within Hamming ≤ 2 and
-    * the dup_corpus/new verdict. Every sample, energy, bit, band and
-    * distance replays in the oracle. */
-  /** The persisted audio fingerprint band index — one builder per dir,
-    * shared by the day-2 probe, the forget mask and the report. */
-  private[queries] def audioSigIndexTable(s: SparkSession, dir: String): String =
-    Artifacts.getOrBuild("audio_sigs", Seq(Tables(s, dir, "documents"))) { a =>
-      a.bucketedTable("graft_asig_b", "bucket", mediaBandKeys(audioSigsFor(s, dir))
-        .select(col("bucket"), col("doc_id").as("c_id"), col("sig").as("c_sig")))
-    }
-
-  /** Shared day-2 audio probe (the [[mediaIncrementalProbe]] mask
-    * contract). */
-  private[queries] def audioIncrementalProbe(
-      s: SparkSession, dir: String, mask: Option[String]): DataFrame = {
-    val idxTable = audioSigIndexTable(s, dir)
-    // GATE-ONLY bootstrap (see mediaDedupIncremental): production gets
-    // the batch id offset from the ingest contract, not a corpus scan
-    val off = Tables(s, dir, "documents").agg(max("doc_id")).head.getLong(0) + 1L
-    val hb = Sampling.hashBucket256(col("doc_id"))
-    val batchParams = Tables(s, dir, "documents").select(
-      (col("doc_id") + lit(off)).as("doc_id"),
-      when(hb < 85, expr("CAST(doc_id DIV 8 AS BIGINT)"))
-        .otherwise(expr(s"CAST((doc_id + $off) DIV 8 AS BIGINT)")).as("p"))
-    val batchSigs = audioSigsForParams(batchParams)
-    val idx = mask.map(maskIndex(s, dir, s.table(idxTable), "c_id", _))
-      .getOrElse(s.table(idxTable))
-    val hits = mediaBandKeys(batchSigs)
-      .join(idx, Seq("bucket"))
-      .filter(graft.functions.HashFunctions.hammingBits(col("sig"), col("c_sig"))
-        .cast("int") <= 2)
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("c_id")).as("n_dups"))
-    batchSigs.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left_outer")
-      .na.fill(0L, Seq("n_dups"))
-      .select(col("doc_id"), col("n_dups"),
-        when(col("n_dups") > 0, lit("dup_corpus")).otherwise(lit("new")).as("status"))
-      .orderBy("doc_id")
-  }
-
-  val mediaAudioDedupIncremental: Q = (s, dir) => audioIncrementalProbe(s, dir, None)
+  /** INCREMENTAL AUDIO DEDUP — [[incrementalProbe]] on the PCM path:
+    * an echo re-encode is an existing corpus waveform under a new id
+    * (same cluster, same frames, a fresh per-doc noise seed); per batch
+    * doc, distinct corpus matches within Hamming ≤ 2. */
+  val mediaAudioDedupIncremental: Q = (s, dir) =>
+    incrementalProbe(s, dir, MediaModality.Audio, None)
 
   /** DELETE PATH for the persisted audio band index — [[mediaForget]]'s
     * PCM sibling; with this and [[mediaVideoForget]] every persisted
     * band index in the repo (image / audio / video / caption-composite)
     * masks forgets with the same broadcast anti-join, index never
     * rewritten. */
-  val mediaAudioForget: Q = (s, dir) => audioIncrementalProbe(s, dir, Some("left_anti"))
+  val mediaAudioForget: Q = (s, dir) =>
+    incrementalProbe(s, dir, MediaModality.Audio, Some("left_anti"))
 
   /** VIDEO NEAR-DUP PAIRS — the last modality onto
     * [[Dedup.bitSignaturePairs]]: real GIF sequence encode → real
@@ -3300,62 +3174,21 @@ object LlmQueries {
     * never all-pairs). The oracle replays every pixel, per-frame bit,
     * majority vote, band and distance from the closed form. */
   val mediaVideoDedup: Q = (s, dir) =>
-    Dedup.bitSignaturePairs(videoSigsFor(s, dir), "doc_id", "sig",
-        nBits = 56, bands = 4, maxHamming = 2, maxBucket = MaxBucket)
-      .orderBy("id_a", "id_b")
+    mediaPairs(s, dir, MediaModality.Video).orderBy("id_a", "id_b")
 
-  /** INCREMENTAL VIDEO DEDUP — the day-2 probe for the last modality:
-    * corpus majority-signature band keys persist ONCE as a
-    * `bucketBy(bucket)` table; an echo batch (hb < 85 re-encodes an
-    * existing video under a new id — same cluster textures and noise
-    * position, a fresh per-doc bump, so the majority signature lands
-    * within Hamming ≤ 2 of the corpus mates') probes the index with
-    * ZERO index-side Exchange (plan-pinned). Completes the
+  /** INCREMENTAL VIDEO DEDUP — [[incrementalProbe]] for the last
+    * modality: an echo re-encode keeps its cluster's textures and noise
+    * position with a fresh per-doc bump, so its majority signature
+    * lands within Hamming ≤ 2 of the corpus mates'. Completes the
     * pairs + day-2 matrix across image / audio / video. */
-  /** The persisted video majority-signature band index — one builder
-    * per dir, shared by the day-2 probe, the forget mask and the
-    * report. */
-  private[queries] def videoSigIndexTable(s: SparkSession, dir: String): String =
-    Artifacts.getOrBuild("video_sigs", Seq(Tables(s, dir, "documents"))) { a =>
-      a.bucketedTable("graft_vsig_b", "bucket", mediaBandKeys(videoSigsFor(s, dir))
-        .select(col("bucket"), col("doc_id").as("c_id"), col("sig").as("c_sig")))
-    }
-
-  /** Shared day-2 video probe (the [[mediaIncrementalProbe]] mask
-    * contract). */
-  private[queries] def videoIncrementalProbe(
-      s: SparkSession, dir: String, mask: Option[String]): DataFrame = {
-    val idxTable = videoSigIndexTable(s, dir)
-    // GATE-ONLY bootstrap (see mediaDedupIncremental)
-    val off = Tables(s, dir, "documents").agg(max("doc_id")).head.getLong(0) + 1L
-    val hb = Sampling.hashBucket256(col("doc_id"))
-    val batchParams = spreadForCompute(s, Tables(s, dir, "documents")).select(
-      (col("doc_id") + lit(off)).as("doc_id"),
-      when(hb < 85, expr("CAST(doc_id DIV 8 AS BIGINT)"))
-        .otherwise(expr(s"CAST((doc_id + $off) DIV 8 AS BIGINT)")).as("p"))
-    val batchSigs = videoSigsForParams(batchParams)
-    val idx = mask.map(maskIndex(s, dir, s.table(idxTable), "c_id", _))
-      .getOrElse(s.table(idxTable))
-    val hits = mediaBandKeys(batchSigs)
-      .join(idx, Seq("bucket"))
-      .filter(graft.functions.HashFunctions.hammingBits(col("sig"), col("c_sig"))
-        .cast("int") <= 2)
-      .groupBy(col("doc_id"))
-      .agg(countDistinct(col("c_id")).as("n_dups"))
-    batchSigs.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left_outer")
-      .na.fill(0L, Seq("n_dups"))
-      .select(col("doc_id"), col("n_dups"),
-        when(col("n_dups") > 0, lit("dup_corpus")).otherwise(lit("new")).as("status"))
-      .orderBy("doc_id")
-  }
-
-  val mediaVideoDedupIncremental: Q = (s, dir) => videoIncrementalProbe(s, dir, None)
+  val mediaVideoDedupIncremental: Q = (s, dir) =>
+    incrementalProbe(s, dir, MediaModality.Video, None)
 
   /** DELETE PATH for the persisted video band index — see
     * [[mediaAudioForget]]: the forget matrix closes across every
     * persisted band index. */
-  val mediaVideoForget: Q = (s, dir) => videoIncrementalProbe(s, dir, Some("left_anti"))
+  val mediaVideoForget: Q = (s, dir) =>
+    incrementalProbe(s, dir, MediaModality.Video, Some("left_anti"))
 
   /** Byte-level media stats (no decode): engine-portable ⇒ oracle. */
   val mediaStats: Q = (s, dir) => {
@@ -4236,12 +4069,12 @@ object LlmQueries {
     // tables, never a re-decode, the bm25 discipline; ONE block, four
     // instantiations (the review note: four copies drift)
     val mediaSurfaces = Seq(
-      (mediaSigIndexTable _, "media_index", "masked_images"),
-      (captionSigIndexTable _, "caption_index", "masked_pairs"),
-      (audioSigIndexTable _, "audio_index", "masked_clips"),
-      (videoSigIndexTable _, "video_index", "masked_videos")
-    ).map { case (idxTable, surface, memberMetric) =>
-      s.table(idxTable(s, dir))
+      (MediaModality.Image, "media_index", "masked_images"),
+      (MediaModality.Caption, "caption_index", "masked_pairs"),
+      (MediaModality.Audio, "audio_index", "masked_clips"),
+      (MediaModality.Video, "video_index", "masked_videos")
+    ).map { case (m, surface, memberMetric) =>
+      s.table(sigIndexTable(s, dir, m))
         .filter(isForgetDoc50(col("c_id")))
         .agg(countDistinct("c_id").as("masked_members"),
           count(lit(1)).as("masked_band_rows"))

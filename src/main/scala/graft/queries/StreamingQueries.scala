@@ -421,16 +421,17 @@ object StreamingQueries {
     * a watermark in the dedup key. Oracle: the batch distinct-sig
     * set, every pixel/bit replayed. */
   val streamMediaDedup: Q = (s, dir) =>
-    gate(s, "stream_media_dedup",
-      LlmQueries.mediaSigsFor(spilledStream(LlmQueries.mediaCorpusParams(s, dir), "doc_id", 4, 2))
-        .dropDuplicates("sig").select(col("sig")),
-      Append, AtLeast(2))(_.orderBy("sig"))
+    mediaDoor(s, dir, "stream_media_dedup", MediaModality.Image)
 
-  /** The (doc_id, p) parameter frame the streaming audio and video
-    * gates synthesize their media from. */
-  private def mediaParams(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents")
-      .select(col("doc_id"), expr("CAST(doc_id DIV 8 AS BIGINT)").as("p"))
+  /** The media ingest door, one for every [[MediaModality]]: the
+    * corpus params frame (ONE spilled fixture shared by the four
+    * gates) streams in, each row's stream keys derive scan-side, and
+    * `dropDuplicates` over the keys keeps state of every key seen. */
+  private def mediaDoor(s: SparkSession, dir: String, name: String, m: MediaModality): DataFrame = {
+    val params = LlmQueries.mediaParams(Tables(s, dir, "documents"), None)
+    val keys = m.streamKeys(spilledStream(params, "doc_id", 4, 2))
+    gate(s, name, keys.dropDuplicates(), Append, AtLeast(2))(_.orderBy(keys.columns.map(col): _*))
+  }
 
   /** Streaming AUDIO dedup — [[streamMediaDedup]]'s PCM twin: audio
     * arrives (the two-seed synthesized waveform frame the batch audio
@@ -444,10 +445,7 @@ object StreamingQueries {
     * is one 56-char bit string per DISTINCT fingerprint. Oracle: the
     * batch distinct-signature set, every sample/energy/bit replayed. */
   val streamAudioDedup: Q = (s, dir) =>
-    gate(s, "stream_audio_dedup",
-      LlmQueries.audioSigsForParams(spilledStream(mediaParams(s, dir), "doc_id", 4, 2))
-        .dropDuplicates("sig").select(col("sig")),
-      Append, AtLeast(2))(_.orderBy("sig"))
+    mediaDoor(s, dir, "stream_audio_dedup", MediaModality.Audio)
 
   /** Streaming VIDEO dedup — the LAST cell of the modality × lifecycle
     * matrix (image and audio both stream; video had batch + day-2
@@ -466,10 +464,7 @@ object StreamingQueries {
     * video fingerprint. Oracle: the batch distinct-majority-signature
     * set, every pixel, per-frame bit and vote replayed. */
   val streamVideoDedup: Q = (s, dir) =>
-    gate(s, "stream_video_dedup",
-      LlmQueries.videoSigsForParams(spilledStream(mediaParams(s, dir), "doc_id", 4, 2))
-        .dropDuplicates("sig").select(col("sig")),
-      Append, AtLeast(2))(_.orderBy("sig"))
+    mediaDoor(s, dir, "stream_video_dedup", MediaModality.Video)
 
   /** TOKENIZE AT INGEST with a FROZEN artifact — the deploy shape every
     * trained tokenizer ultimately runs in: the unigram LM trains ONCE
@@ -505,11 +500,7 @@ object StreamingQueries {
     * the batch distinct key-pair set, every caption word, remix,
     * pixel and bit replayed. */
   val streamCaptionDedup: Q = (s, dir) =>
-    gate(s, "stream_caption_dedup",
-      LlmQueries.captionStreamKeys(
-          spilledStream(LlmQueries.mediaCorpusParams(s, dir), "doc_id", 4, 2))
-        .dropDuplicates("tsig_md5", "isig"),
-      Append, AtLeast(2))(_.orderBy("tsig_md5", "isig"))
+    mediaDoor(s, dir, "stream_caption_dedup", MediaModality.Caption)
 
   /** Streaming Count-Min maintenance —
     * [[graft.llm.Sketches.cmsCounters]] running UNCHANGED on the

@@ -719,38 +719,21 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), s"no cartesian:\n$plan")
   }
 
-  test("media_dedup_incremental: the persisted signature index never shuffles") {
-    val df = graft.queries.LlmQueries.mediaDedupIncremental(spark, TestSpark.sfDir)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Bucketed: true"),
-      s"the band-key scan must come from the bucketBy(bucket) table:\n$plan")
-    val scanAt = plan.lastIndexOf("FileScan")
-    assert(!plan.substring(scanAt).contains("Exchange"),
-      s"the index side must not shuffle:\n${plan.substring(scanAt)}")
-    assert(!plan.contains("CartesianProduct"), s"no all-pairs:\n$plan")
-  }
-
-  test("media_audio_dedup_incremental: the persisted fingerprint index never shuffles") {
-    val df = graft.queries.LlmQueries.mediaAudioDedupIncremental(spark, TestSpark.sfDir)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Bucketed: true"),
-      s"the band-key scan must come from the bucketBy(bucket) table:\n$plan")
-    val scanAt = plan.lastIndexOf("FileScan")
-    assert(!plan.substring(scanAt).contains("Exchange"),
-      s"the index side must not shuffle:\n${plan.substring(scanAt)}")
-    assert(!plan.contains("CartesianProduct"), s"no all-pairs:\n$plan")
-  }
-
-  test("media_video_dedup_incremental: the persisted majority-signature index never shuffles") {
-    val df = graft.queries.LlmQueries.mediaVideoDedupIncremental(spark, TestSpark.sfDir)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Bucketed: true"),
-      s"the band-key scan must come from the bucketBy(bucket) table:\n$plan")
-    val scanAt = plan.lastIndexOf("FileScan")
-    assert(!plan.substring(scanAt).contains("Exchange"),
-      s"the index side must not shuffle:\n${plan.substring(scanAt)}")
-    assert(!plan.contains("CartesianProduct"), s"no all-pairs:\n$plan")
-  }
+  for ((m, index, scan) <- Seq(
+      (graft.queries.MediaModality.Image, "signature index", "band-key"),
+      (graft.queries.MediaModality.Audio, "fingerprint index", "band-key"),
+      (graft.queries.MediaModality.Video, "majority-signature index", "band-key"),
+      (graft.queries.MediaModality.Caption, "composite-key index", "composite-key")))
+    test(s"${m.name}_dedup_incremental: the persisted $index never shuffles") {
+      val df = graft.queries.LlmQueries.defs(s"${m.name}_dedup_incremental")(spark, TestSpark.sfDir)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("Bucketed: true"),
+        s"the $scan scan must come from the bucketBy(bucket) table:\n$plan")
+      val scanAt = plan.lastIndexOf("FileScan")
+      assert(!plan.substring(scanAt).contains("Exchange"),
+        s"the index side must not shuffle:\n${plan.substring(scanAt)}")
+      assert(!plan.contains("CartesianProduct"), s"no all-pairs:\n$plan")
+    }
 
   test("compaction_plan_sharded: the planner parallelizes over partitions — no SinglePartition funnel") {
     val df = graft.queries.LlmQueries.compactionPlanSharded(spark, TestSpark.sfDir)
@@ -762,17 +745,6 @@ class PlanShapeSpec extends AnyFunSuite {
       s"the sharded planner must never funnel the manifest:\n$plan")
     assert(plan.contains("Exchange hashpartitioning(source"),
       s"FFD groups must shuffle by the table-partition column:\n$plan")
-  }
-
-  test("media_caption_dedup_incremental: the persisted composite-key index never shuffles") {
-    val df = graft.queries.LlmQueries.mediaCaptionDedupIncremental(spark, TestSpark.sfDir)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Bucketed: true"),
-      s"the composite-key scan must come from the bucketBy(bucket) table:\n$plan")
-    val scanAt = plan.lastIndexOf("FileScan")
-    assert(!plan.substring(scanAt).contains("Exchange"),
-      s"the index side must not shuffle:\n${plan.substring(scanAt)}")
-    assert(!plan.contains("CartesianProduct"), s"no all-pairs:\n$plan")
   }
 
   test("dpo_packed_layout: one shard shuffle, counts ride the scan — no join-back, no re-window") {

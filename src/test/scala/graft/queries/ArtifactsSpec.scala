@@ -36,10 +36,6 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "ivf_cells" -> (() => LlmQueries.ivfIndex(s, d)),
       "ivf_cells_app" -> (() => LlmQueries.annIvfPersistedAppend(s, d)),
       "semdedup_corpus" -> (() => LlmQueries.dedupSemanticIncrementalWith(s, d)),
-      "caption_sigs" -> (() => LlmQueries.captionSigIndexTable(s, d)),
-      "media_sigs" -> (() => LlmQueries.mediaSigIndexTable(s, d)),
-      "audio_sigs" -> (() => LlmQueries.audioSigIndexTable(s, d)),
-      "video_sigs" -> (() => LlmQueries.videoSigIndexTable(s, d)),
       "corpus_hashes" -> (() => LlmQueries.dedupIncrementalBucketed(s, d)),
       "cdc_chunk_hashes" -> (() => LlmQueries.dedupCdcIncremental(s, d)),
       "bm25_index" -> (() => LlmQueries.bm25IndexTables(s, d)),
@@ -54,7 +50,8 @@ class ArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "export_json" -> (() => graft.sources.JsonlSink.roundTrip(small)),
       "export_csv" -> (() => graft.sources.JsonlSink.roundTripCsv(small)),
       "export_orc" -> (() => graft.sources.JsonlSink.roundTripOrc(small)),
-      "export_tar" -> (() => graft.sources.TarShardSink.roundTrip(small, "doc_id", "text", 2)))
+      "export_tar" -> (() => graft.sources.TarShardSink.roundTrip(small, "doc_id", "text", 2))) ++
+      MediaModality.all.map(m => m.kind -> (() => LlmQueries.sigIndexTable(s, d, m)))
   }
 
   private def traffic(kind: String)(before: Map[String, Artifacts.Counts]): Artifacts.Counts =

@@ -50,34 +50,25 @@ class MediaForgetSpec extends AnyFunSuite {
     untouched.foreach(id => assert(live(id) === base(id), s"$name: batch $id must not change"))
   }
 
-  test("media_forget: deleted images stop matching; survivors account exactly; others bit-identical") {
-    checkFamily("media", m => LlmQueries.mediaIncrementalProbe(spark, TestSpark.sfDir, m))
-  }
+  /** Each family with its forget gate's test title and the short name
+    * its assertion messages use. */
+  private val families = Seq(
+    (MediaModality.Image, "media",
+      "deleted images stop matching; survivors account exactly; others bit-identical"),
+    (MediaModality.Caption, "caption", "the composite index masks the same way"),
+    (MediaModality.Audio, "audio", "the PCM band index masks the same way"),
+    (MediaModality.Video, "video", "the majority-signature band index masks the same way"))
 
-  test("media_caption_forget: the composite index masks the same way") {
-    checkFamily("caption", m => LlmQueries.captionIncrementalProbe(spark, TestSpark.sfDir, m))
-  }
-
-  test("media_audio_forget: the PCM band index masks the same way") {
-    checkFamily("audio", m => LlmQueries.audioIncrementalProbe(spark, TestSpark.sfDir, m))
-  }
-
-  test("media_video_forget: the majority-signature band index masks the same way") {
-    checkFamily("video", m => LlmQueries.videoIncrementalProbe(spark, TestSpark.sfDir, m))
-  }
+  for ((m, name, what) <- families)
+    test(s"${m.name}_forget: $what") {
+      checkFamily(name, LlmQueries.incrementalProbe(spark, TestSpark.sfDir, m, _))
+    }
 
   test("plan: broadcast anti-join mask, bucketed index scan kept, zero added hash exchanges") {
     def hashEx(p: String): Int = "Exchange hashpartitioning".r.findAllIn(p).size
-    Seq(
-      ("media", LlmQueries.mediaIncrementalProbe(spark, TestSpark.sfDir, None),
-        LlmQueries.mediaForget(spark, TestSpark.sfDir)),
-      ("caption", LlmQueries.captionIncrementalProbe(spark, TestSpark.sfDir, None),
-        LlmQueries.mediaCaptionForget(spark, TestSpark.sfDir)),
-      ("audio", LlmQueries.audioIncrementalProbe(spark, TestSpark.sfDir, None),
-        LlmQueries.mediaAudioForget(spark, TestSpark.sfDir)),
-      ("video", LlmQueries.videoIncrementalProbe(spark, TestSpark.sfDir, None),
-        LlmQueries.mediaVideoForget(spark, TestSpark.sfDir))
-    ).foreach { case (name, baseDf, forgDf) =>
+    families.foreach { case (m, name, _) =>
+      val baseDf = LlmQueries.incrementalProbe(spark, TestSpark.sfDir, m, None)
+      val forgDf = LlmQueries.defs(s"${m.name}_forget")(spark, TestSpark.sfDir)
       val pBase = baseDf.queryExecution.executedPlan.toString
       val pForg = forgDf.queryExecution.executedPlan.toString
       assert(pForg.contains("LeftAnti"), s"$name mask must be an anti-join:\n$pForg")

@@ -37,7 +37,7 @@ class VideoDedupSpec extends AnyFunSuite {
     votes.map(v => if (2 * v > F) '1' else '0').mkString
   }
 
-  private lazy val sigs = LlmQueries.videoSigsFor(spark, TestSpark.sfDir)
+  private lazy val sigs = LlmQueries.mediaSigs(spark, TestSpark.sfDir, MediaModality.Video, None)
     .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
   test("majority signatures replay the encode→decode→dHash→vote chain exactly") {
